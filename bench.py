@@ -72,20 +72,16 @@ def main() -> None:
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
             "detail": extras,
         }
-        # the round driver keeps only a truncated tail of stdout, so
-        # the full per-path histogram block would be unrecoverable —
-        # always persist the complete JSON as an in-repo artifact too
-        # (BENCH_FULL_OUT overrides the default path)
-        full_path = os.environ.get(
-            "BENCH_FULL_OUT",
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_full.json"),
-        )
-        try:
-            with open(full_path, "w") as fh:
-                json.dump(payload, fh, indent=1)
-        except OSError:
-            pass
+        # stdout may be kept only as a truncated tail, which loses the
+        # full per-path histogram block: BENCH_FULL_OUT=<path> also
+        # writes the complete JSON there (unset, no file is written)
+        full_path = os.environ.get("BENCH_FULL_OUT")
+        if full_path:
+            try:
+                with open(full_path, "w") as fh:
+                    json.dump(payload, fh, indent=1)
+            except OSError:
+                pass
         print(json.dumps(payload), flush=True)
 
     def step(name):

@@ -1060,7 +1060,7 @@ def main(out_path: str, n_rows: int = N_ROWS_DEFAULT) -> dict:
     from uwheel_datafusion_spark.operators.similarity import (
         IvfIndex,
         PqIndex,
-        _assign_cells_pandas,
+        _assign_cells_passthrough,
         _pq_assign_codes_pandas,
         _quantized,
     )
@@ -1069,7 +1069,9 @@ def main(out_path: str, n_rows: int = N_ROWS_DEFAULT) -> dict:
     ivf_p = IvfIndex(
         centroids=ivf_idx.centroids,
         cells=ivf_idx.cells.union(
-            _assign_cells_pandas(qv_plant, ivf_idx.centroids)
+            _assign_cells_passthrough(qv_plant, ivf_idx.centroids).select(
+                "vec_id", "cell"
+            )
         ),
         n_cells=ivf_idx.n_cells,
     )

@@ -24,9 +24,10 @@ def tiny_vecs(spark):
 
 
 def _relational_cell_sums(qv, centroids):
-    """The pre-r13 update chain: assignment → self-join → posexplode →
-    groupBy — kept here as the equivalence reference."""
-    assigned = sim._assign_cells_pandas(qv, centroids).join(qv, "vec_id")
+    """The pre-r13 update chain: assignment → posexplode → groupBy
+    (the assign kernel passes qvec through, so no self-join) — kept
+    here as the equivalence reference."""
+    assigned = sim._assign_cells_passthrough(qv, centroids)
     return {
         (r["cell"], r["pos"]): (r["s"], r["c"])
         for r in (

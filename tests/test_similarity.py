@@ -2,6 +2,8 @@
 hyperplane LSH must stay a true subset of the exact pair join (precision
 1 by construction) with usable recall for the configured (L, b)."""
 
+import pytest
+
 from uwheel_datafusion_spark.operators import similarity as sim
 from uwheel_datafusion_spark.sources.registry import load_table
 
@@ -60,30 +62,15 @@ def test_kmeans_tdiv_matches_sql_integer_division():
         assert hug == sim._tdiv(a, b), (a, b, hug)
 
 
-def test_pq_entry_points_reject_wide_k(spark, sf_smoke):
-    """ann_ivfpq_topk / ivfpq_build / knn_pq_adc must refuse k beyond
-    the mord-encoding capacity instead of silently aliasing codes mod
-    KMEANS_ENC (the guard is centralized in _kmeans_centroids)."""
-    import pytest as _pt
-
-    emb = load_table(spark, sf_smoke, "embeddings")
-    with _pt.raises(ValueError, match="wide"):
-        sim.knn_pq_adc(emb, (0,), k=17)
-    with _pt.raises(ValueError, match="wide"):
-        sim.ann_ivfpq_topk(emb, (0,), k=17)
-    with _pt.raises(ValueError, match="wide"):
-        sim.ivfpq_build(emb, k=17)
-
-
 def test_kmeans_assignment_is_map_only(spark, sf_correctness):
-    """The assignment pass must not shuffle: centroids are literal
-    arrays, so the only exchange in the whole lineage is the one-off
-    small-corpus fan-out repartition (and none for the final argmin)."""
+    """The assignment pass must not shuffle: the frozen centroids ride
+    the Arrow argmin kernel's closure, so the final assignment is one
+    map-only MapInPandas pass — no aggregate, window or join."""
     df = sim.kmeans_assignments(
         load_table(spark, sf_correctness, "embeddings"), k=4, n_iter=2
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "least(" in plan
+    assert "MapInPandas" in plan
     # no aggregate/window/join in the serving pass
     for op in ("HashAggregate", "SortAggregate", "Window", "Join"):
         assert op not in plan, op
@@ -93,9 +80,127 @@ def test_kmeans_rejects_bad_k(spark, sf_smoke):
     import pytest as _pt
 
     with _pt.raises(ValueError):
-        sim.kmeans_assignments(load_table(spark, sf_smoke, "embeddings"), k=17)
-    with _pt.raises(ValueError):
         sim.kmeans_assignments(load_table(spark, sf_smoke, "embeddings"), k=1)
+
+
+def test_one_shots_run_past_sixteen_cells(spark, sf_smoke):
+    """The one-shots take any k / n_cells ≥ 2 (only the DuckDB
+    oracles pack dist·16 + cid): at 17, every vector gets one of the
+    17 clusters, and a full 17-cell probe returns exactly the
+    brute-force top-k."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    km = sim.kmeans_assignments(emb, k=17).collect()
+    assert len(km) == emb.count()
+    assert {r["cluster"] for r in km} <= set(range(17))
+    assert max(r["cluster"] for r in km) == 16
+
+    qids = (0, 1, 2)
+    want = sorted(map(tuple, sim.knn_brute_force(emb, qids, k=5).collect()))
+    got = sorted(
+        map(
+            tuple,
+            sim.ann_ivf_multiprobe_topk(
+                emb, qids, k=5, nprobe=17, n_cells=17
+            ).collect(),
+        )
+    )
+    assert got == want and len(got) == 15
+
+
+def test_null_embedding_rows_match_oracles(spark, sf_smoke, tmp_path):
+    """A NULL embedding (vec_id 30 of a 40-vector frame) gets NULL
+    cluster/sq_dist from kmeans_assignments and NULL codes from
+    pq_encode — the rows the DuckDB oracles emit — instead of being
+    dropped or crashing the PQ assign kernel."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from tests.driver_sim import compare
+
+    path = str(tmp_path / "emb_null")
+    (
+        load_table(spark, sf_smoke, "embeddings")
+        .filter("vec_id < 40")
+        .withColumn(
+            "embedding",
+            F.when(F.col("vec_id") != 30, F.col("embedding")),
+        )
+        .coalesce(1)
+        .write.parquet(path)
+    )
+    emb = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM '{path}/*.parquet'"
+    )
+
+    km = sim.kmeans_assignments(emb, k=4)
+    ok, msg = compare(km, con, sim.kmeans_assignments_oracle(k=4))
+    assert ok, msg
+    assert tuple(km.filter("vec_id = 30").collect()[0]) == (30, None, None)
+
+    codes = sim.pq_encode(emb)
+    ok, msg = compare(codes, con, sim.pq_encode_oracle())
+    assert ok, msg
+    null_row = codes.filter("vec_id = 30").collect()[0]
+    assert all(null_row[f"code_{s}"] is None for s in range(sim.PQ_M))
+
+    # the build at the embedding_pq_encode_wide gate's shape
+    wide = sim.pq_build_wide(emb, m=4, k=8)
+    ok, msg = compare(wide.codes, con, sim.pq_encode_oracle(m=4, k=8))
+    assert ok, msg
+    wide.codes.unpersist()
+
+
+@pytest.mark.parametrize("rotate", [False, True])
+def test_served_cells_follow_index_cells(spark, sf_smoke, rotate):
+    """The cell contract of the served tier: for the rows an
+    ivf_build_wide index holds, ivf_payload_frame (and, for the plain
+    index, the streamed cells_rows_stream) assigns exactly
+    ``index.cells``; a row the index does not hold is assigned its
+    nearest frozen centroid (FAISS add()), not dropped. The streamed
+    assignment takes a bare centroid list, so it has no rotated form."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from uwheel_datafusion_spark.operators.ann_serving import (
+        ivf_payload_frame,
+    )
+    from uwheel_datafusion_spark.streaming.ann_stream import (
+        cells_rows_stream,
+    )
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    indexed = emb.filter(F.col("vec_id") < 400)
+    fresh = emb.filter(F.col("vec_id") >= 400)
+    idx = sim.ivf_build_wide(indexed, n_cells=8, rotate=rotate)
+    want = {tuple(r) for r in idx.cells.collect()}
+    assert len(want) == 400
+
+    def cells(df):
+        return {(r["vec_id"], r["cell"]) for r in df.collect()}
+
+    assert cells(ivf_payload_frame(idx, indexed)) == want
+    if not rotate:
+        assert cells(cells_rows_stream(indexed, idx.centroids)) == want
+
+    # rows outside the index: nearest centroid in the index's space,
+    # ties toward the lower cell id
+    space = (
+        sim._rotated_qv(fresh, "embedding", 64)
+        if rotate
+        else sim._quantized(fresh).select("vec_id", "qvec")
+    )
+    cmat = np.asarray(idx.centroids, dtype=np.int64)
+    expect = {
+        (r["vec_id"], int(((cmat - np.asarray(r["qvec"])) ** 2).sum(1).argmin()))
+        for r in space.collect()
+    }
+    assert len(expect) == 100
+    assert cells(ivf_payload_frame(idx, fresh)) == expect
+    if not rotate:
+        assert cells(cells_rows_stream(fresh, idx.centroids)) == expect
+    idx.cells.unpersist()
 
 
 def test_zero_and_null_embeddings_excluded_from_cosine_ops(spark):
@@ -307,8 +412,9 @@ def test_multiprobe_full_probe_equals_brute_force(spark, sf_correctness):
 
 def test_pq_codes_bounded_and_encode_is_map_only(spark, sf_correctness):
     """PQ invariants: one row per vector, every code in [0, k); the
-    encode PROJECTION is map-only (codebooks are inlined literals — a
-    join or extra shuffle in the final pass would not survive 100 TB)."""
+    encode pass is map-only (codebooks ride the Arrow kernel's closure
+    — a join or extra shuffle in the final pass would not survive
+    100 TB)."""
     emb = load_table(spark, sf_correctness, "embeddings")
     codes = sim.pq_encode(emb, m=4, k=8, n_iter=2)
     rows = codes.collect()
@@ -371,78 +477,11 @@ def test_ivfpq_full_probe_equals_pq_adc(spark, sf_correctness):
     assert ivfpq == full
 
 
-def test_build_search_split_equals_one_shot(spark, sf_correctness):
-    """The persisted-index API (build once, search many) must return
-    exactly what the self-contained one-shot gates return — same
-    centroids init, same codebooks, same ranking."""
-    import uwheel_datafusion_spark.operators.similarity as sim
-    from uwheel_datafusion_spark.sources.registry import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    qids = (0, 1, 2)
-
-    one = {
-        (r.query_id, r.rnk): (r.neighbor_id, round(r.cosine, 12))
-        for r in sim.ann_ivf_multiprobe_topk(
-            emb, qids, k=5, nprobe=2, n_cells=4
-        ).collect()
-    }
-    idx = sim.ivf_build(emb, n_cells=4)
-    split = {
-        (r.query_id, r.rnk): (r.neighbor_id, round(r.cosine, 12))
-        for r in sim.ivf_search(idx, emb, qids, k=5, nprobe=2).collect()
-    }
-    assert split == one
-    idx.cells.unpersist()
-
-    one_pq = {
-        (r.query_id, r.rnk): (r.neighbor_id, r.adc_dist)
-        for r in sim.ann_ivfpq_topk(
-            emb, qids, topk=5, nprobe=2, n_cells=4
-        ).collect()
-    }
-    pq_idx = sim.ivfpq_build(emb, n_cells=4)
-    split_pq = {
-        (r.query_id, r.rnk): (r.neighbor_id, r.adc_dist)
-        for r in sim.ivfpq_search(pq_idx, emb, qids, topk=5, nprobe=2).collect()
-    }
-    assert split_pq == one_pq
-    pq_idx.codes.unpersist()
-
-
-def test_wide_ivf_bit_identical_to_literal_path(spark, sf_correctness):
-    """The Arrow-kernel assign (unbounded cell count) must be
-    BIT-IDENTICAL to the literal-argmin path wherever both run — same
-    init, same truncating updates, same tie-break."""
-    import uwheel_datafusion_spark.operators.similarity as sim
-    from uwheel_datafusion_spark.sources.registry import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    lit = sim.ivf_build(emb, n_cells=4)
-    wide = sim.ivf_build_wide(emb, n_cells=4)
-    assert wide.centroids == lit.centroids
-    assert {tuple(r) for r in wide.cells.collect()} == {
-        tuple(r) for r in lit.cells.collect()
-    }
-    qids = (0, 1, 2)
-    a = {
-        (r.query_id, r.rnk): (r.neighbor_id, round(r.cosine, 12))
-        for r in sim.ivf_search(lit, emb, qids, k=5, nprobe=2).collect()
-    }
-    b = {
-        (r.query_id, r.rnk): (r.neighbor_id, round(r.cosine, 12))
-        for r in sim.ivf_search_wide(wide, emb, qids, k=5, nprobe=2).collect()
-    }
-    assert a == b
-    lit.cells.unpersist()
-    wide.cells.unpersist()
-
-
 def test_wide_ivf_beyond_literal_cap_full_probe_exact(spark, sf_correctness):
-    """n_cells = 64 — four times past the literal path's KMEANS_ENC
-    cap: the build must self-consistently assign every vector to its
-    nearest centroid, and a FULL probe (nprobe = n_cells) must equal
-    the exact brute-force top-k."""
+    """n_cells = 64 — four times past the 16-cell mord packing of the
+    one-shot oracles: the build must self-consistently assign every
+    vector to its nearest centroid, and a FULL probe (nprobe =
+    n_cells) must equal the exact brute-force top-k."""
     import numpy as np
 
     import uwheel_datafusion_spark.operators.similarity as sim
@@ -479,33 +518,6 @@ def test_wide_ivf_beyond_literal_cap_full_probe_exact(spark, sf_correctness):
     idx.cells.unpersist()
 
 
-def test_wide_pq_bit_identical_to_literal_path(spark, sf_correctness):
-    """The Arrow PQ kernel must reproduce the literal-argmin encode and
-    ADC ranking exactly at a literal-feasible shape (m=4, k=8)."""
-    import uwheel_datafusion_spark.operators.similarity as sim
-    from uwheel_datafusion_spark.sources.registry import load_table
-
-    emb = load_table(spark, sf_correctness, "embeddings")
-    lit_codes = {
-        tuple(r) for r in sim.pq_encode(emb, m=4, k=8).collect()
-    }
-    idx = sim.pq_build_wide(emb, m=4, k=8)
-    wide_codes = {tuple(r) for r in idx.codes.collect()}
-    assert wide_codes == lit_codes
-
-    qids = (0, 1, 2)
-    lit = {
-        (r.query_id, r.rnk): (r.neighbor_id, r.adc_dist)
-        for r in sim.knn_pq_adc(emb, qids, topk=5, m=4, k=8).collect()
-    }
-    wide = {
-        (r.query_id, r.rnk): (r.neighbor_id, r.adc_dist)
-        for r in sim.knn_pq_adc_wide(idx, emb, qids, topk=5).collect()
-    }
-    assert wide == lit
-    idx.codes.unpersist()
-
-
 def test_wide_pq_byte_codes_beyond_literal_cap(spark, sf_correctness):
     """k=256 byte codes (16x past KMEANS_ENC): codes must be
     self-consistent argmins against the learned codebooks, and ADC of
@@ -537,8 +549,8 @@ def test_wide_pq_byte_codes_beyond_literal_cap(spark, sf_correctness):
 
 def test_wide_ivfpq_full_probe_equals_wide_adc(spark, sf_correctness):
     """nprobe = n_cells ⇒ wide IVF-PQ degenerates to the full wide ADC
-    scan — the composition anchor at shapes the literal path cannot
-    express (64 cells × 256-centroid byte codes)."""
+    scan — the composition anchor at wide shapes (64 cells ×
+    256-centroid byte codes)."""
     import uwheel_datafusion_spark.operators.similarity as sim
     from uwheel_datafusion_spark.sources.registry import load_table
 

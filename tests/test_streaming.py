@@ -103,6 +103,47 @@ def test_streaming_drops_late_rows(spark, tmp_path):
     assert sw.store.n_late_rows >= 1
 
 
+def test_late_row_counter_counts_each_batch_once(spark, tmp_path):
+    """``n_late_rows`` reports Spark's ``numRowsDroppedByWatermark``:
+    the stateful operator's input rows, which are partial aggregates —
+    5 late rows in one minute of one file count 1. Every micro-batch is
+    counted once, however many ``process_available()`` calls follow."""
+    src = str(tmp_path / "late_once")
+    os.makedirs(src)
+
+    def write(stamps):
+        spark.createDataFrame(
+            [(s, 1.0) for s in stamps], "ts_s string, value double"
+        ).select(
+            F.col("ts_s").cast("timestamp").alias("ts"), "value"
+        ).coalesce(1).write.mode("append").parquet(src)
+
+    files = [
+        ["2024-01-10 12:00:00", "2024-01-10 12:01:00"],
+        [f"2024-01-01 00:00:{s:02d}" for s in (0, 10, 20, 30, 40)]
+        + ["2024-01-10 12:02:00"],
+        ["2024-01-10 12:03:00"],
+    ]
+    write(files[0])
+    stream = spark.readStream.schema("ts timestamp, value double").option(
+        "maxFilesPerTrigger", 1
+    ).parquet(src)
+    sw = StreamingWheel(stream, "ts", "value", watermark_delay="10 minutes")
+    sw.start(str(tmp_path / "ckpt_once"))
+    seen = []
+    sw.process_available()
+    seen.append(sw.store.n_late_rows)
+    for stamps in files[1:]:
+        write(stamps)
+        sw.process_available()
+        seen.append(sw.store.n_late_rows)
+    sw.process_available()  # nothing new: nothing re-counted
+    seen.append(sw.store.n_late_rows)
+    sw.stop()
+    assert seen == [0, 1, 1, 1]
+    assert sw.snapshot_index(WM, ADV).landmark()["cnt"] == 4
+
+
 def test_streaming_keyed_wheel_equals_batch(spark, sf_smoke, stream_dir, tmp_path):
     """Per-series streaming rollup == batch KeyedWheelIndex: every key's
     landmark and random ranges agree — KeyedWheelIndex's insert/advance

@@ -6196,13 +6196,11 @@ def ann_ivfpq_q(spark, sf_dir):
     ),
 )
 def ann_ivf_wide_q(spark, sf_dir):
-    """The UNBOUNDED-cell IVF path driver-gated: assignment via the
-    Arrow-batched exact-int64 numpy kernel (map-only, no literal
-    centroid expressions — the cluster-scale form whose cell count
-    isn't capped by expression size), probe ranking driver-side in the
-    same integer arithmetic. Bit-identical to the literal path where
-    both run (pinned), so the literal path's DuckDB oracle gates this
-    one too."""
+    """The build/search split of the multi-probe IVF gate, at 8 cells:
+    ivf_build_wide assigns via the Arrow-batched exact-int64 numpy
+    kernel (map-only, any cell count), ivf_search_wide ranks probes
+    driver-side in the same integer arithmetic. Gated by the same
+    DuckDB replay as similarity_ann_ivf_multiprobe."""
     emb = load_table(spark, sf_dir, "embeddings")
     idx = _sim.ivf_build_wide(emb, n_cells=8)
     return _sim.ivf_search_wide(idx, emb, KNN_QUERY_IDS, k=5, nprobe=2)
@@ -6216,10 +6214,10 @@ def ann_ivf_wide_q(spark, sf_dir):
 )
 def ann_ivfpq_wide_q(spark, sf_dir):
     """The wide Arrow-kernel IVF-PQ end-to-end at a GENUINELY wide
-    shape — 64 coarse cells x k=256 byte codes, both past the
-    literal-expression caps (the r7 wide gates could only be checked
-    at literal-feasible shapes): ivf_build_wide cells + pq_build_wide
-    codes composed by ivfpq_search_wide, vs a fully-relational DuckDB
+    shape — 64 coarse cells x k=256 byte codes, both past the 16-id
+    mord packing of the one-shot gates' oracles: ivf_build_wide cells
+    + pq_build_wide codes composed by ivfpq_search_wide, vs a
+    fully-relational DuckDB
     replay of the same Lloyd loops, probe ranking and ADC LUTs
     (row_number-based nearest-centroid assignment — no mord packing,
     no cap). This is the FAISS-standard production index shape served
@@ -7978,19 +7976,18 @@ def pq_encode_q(spark, sf_dir):
     codebook per subspace (the exact-int64 broadcast-centroid loop of
     kmeans_assignments, per slice), vector stored as 8 nibble-sized
     ids — 64× smaller than float32 at 100 TB. Encode is ONE map-only
-    argmin projection with codebooks inlined as literals; the oracle
+    Arrow argmin pass against the broadcast codebooks; the oracle
     replays every subspace's iterations CTE-by-CTE bit-for-bit."""
     return _sim.pq_encode(load_table(spark, sf_dir, "embeddings"))
 
 
 @gate("embedding_pq_encode_wide", _sim.pq_encode_oracle(m=4, k=8))
 def pq_encode_wide_q(spark, sf_dir):
-    """The ARROW-KERNEL PQ encode driver-gated at a literal-feasible
-    shape (m=4, k=8) against the literal path's exact CTE-replay
-    oracle — the same kernel then runs FAISS-standard byte codes
-    (k=256, 16× past the literal cap; recall measured per round in
-    bench ann_recall.pq256_vs_float, semantics pinned in
-    test_similarity)."""
+    """pq_build_wide's codes at a second shape (m=4, k=8) against the
+    exact CTE-replay oracle — the same kernel then runs
+    FAISS-standard byte codes (k=256, past the oracle's 16-id mord
+    packing; recall measured per round in bench
+    ann_recall.pq256_vs_float, semantics pinned in test_similarity)."""
     idx = _sim.pq_build_wide(
         load_table(spark, sf_dir, "embeddings"), m=4, k=8
     )
@@ -8019,8 +8016,9 @@ def knn_pq_adc_q(spark, sf_dir):
 )
 def kmeans_q(spark, sf_dir):
     """Iterative Lloyd k-means, the broadcast-centroid loop: map-only
-    assignment against literal centroids, one k×dim-row shuffle per
-    update, driver fold between iterations. Exact int64 arithmetic
+    Arrow argmin against the broadcast centroids, one map-side-folded
+    k×dim-row shuffle per update, driver fold between iterations.
+    Exact int64 arithmetic
     end-to-end, so the DuckDB oracle replays the same two iterations
     as CTEs and hash-matches."""
     return _sim.kmeans_assignments(

@@ -139,14 +139,15 @@ def ivf_payload_frame(
     it removes the build-time corpus-by-vec_id shuffle (guide §2.4):
     at 10⁹ vectors the old payload ⋈ cells join re-shuffled the whole
     corpus to attach a value that is a pure function of (centroids,
-    row). Every IvfIndex this repo constructs (ivf_build,
-    ivf_build_wide incl. sample-trained/rotated, streamed rehydration
-    via ivf_index_from_table) satisfies cells ≡ argmin(centroids), so
+    row). Every IvfIndex this repo constructs (ivf_build_wide incl.
+    sample-trained/rotated, streamed rehydration via
+    ivf_index_from_table) assigns its cells with this same kernel, so
     for any ``vecs`` drawn from the indexed corpus the frame is
     row-identical to the old join; rows of ``vecs`` NOT in
     ``index.cells`` are now assigned (FAISS add() semantics) instead
     of silently dropped — callers needing membership filtering must
-    pre-filter ``vecs``."""
+    pre-filter ``vecs`` (pinned by test_similarity's
+    test_served_cells_follow_index_cells)."""
     from uwheel_datafusion_spark.functions.dialect import SPARK as _D
     from uwheel_datafusion_spark.operators.similarity import (
         _assign_cells_passthrough,
@@ -156,8 +157,7 @@ def ivf_payload_frame(
         "vec_id", "qvec", "qnorm", *extra_cols
     )
     assigned = _assign_cells_passthrough(
-        qv, index.centroids,
-        rotated=getattr(index, "rotated", False), dim=dim,
+        qv, index.centroids, rotated=getattr(index, "rotated", False)
     )
     bin_cols = ()
     if include_binary:

@@ -547,23 +547,24 @@ def label_centroids_oracle(
 #
 # The distributed shape per iteration — the same one you'd run at
 # 100 TB:
-#   assign:  MAP-ONLY. Centroids are tiny (k × dim ints), so they are
-#            inlined as literal arrays and every vector picks
-#            argmin-distance in a single projection — no join, no
-#            shuffle.
-#   update:  posexplode → groupBy(cluster, pos) with partial aggregation
-#            — ONE shuffle whose reduce volume is k × dim rows
-#            regardless of corpus size; the k×dim sums are collected
-#            and folded into the next literal centroids driver-side
-#            (the classic broadcast-centroid Lloyd loop).
+#   assign:  MAP-ONLY. Centroids are tiny (k × dim ints), so they ride
+#            the closure of one Arrow-batched exact-int64 argmin kernel
+#            (_assign_cells_passthrough) — no join, no shuffle.
+#   update:  the same argmin folds per-(cluster, pos) integer sums
+#            inside each task (_cell_update_sums) — ONE shuffle whose
+#            reduce volume is tasks × k × dim rows regardless of corpus
+#            size; the sums are collected and folded into the next
+#            centroids driver-side (the classic broadcast-centroid
+#            Lloyd loop, _train_centroids).
 #
 # All arithmetic is exact int64 (quantized vectors, truncating integer
 # division — Spark `div` and DuckDB `//` both truncate toward zero), so
 # DuckDB replays the identical iterations CTE-by-CTE and the gate
 # hash-matches bit-for-bit. Ties (equidistant centroids) break toward
-# the lower cluster id via the dist·16+cid encoding.
+# the lower cluster id: np.argmin takes the first minimum, the oracle
+# packs dist·KMEANS_ENC + cid.
 
-KMEANS_ENC = 16  # ord = sq_dist * 16 + cid  ⇒  requires k ≤ 16
+KMEANS_ENC = 16  # oracle ord = sq_dist * 16 + cid  ⇒  oracle k ≤ 16
 
 
 def _tdiv(a: int, b: int) -> int:
@@ -573,79 +574,26 @@ def _tdiv(a: int, b: int) -> int:
     return q if a >= 0 else -q
 
 
-def _dist_ord_exprs(d, centroids: list[list[int]]) -> list[str]:
-    """One encoded-distance expression per centroid, with the centroid
-    inlined as a literal array."""
-    out = []
-    for cid, cvec in enumerate(centroids):
-        comps = ", ".join(str(c) for c in cvec)
-        lit = f"array({comps})" if d.is_spark else f"[{comps}]"
-        dist = d.sum_list_bigint(d.zip_sqdiff("qvec", lit))
-        out.append(f"({dist} * {KMEANS_ENC} + {cid})")
-    return out
-
-
-def _assign(qv: DataFrame, centroids: list[list[int]]) -> DataFrame:
-    ords = [F.expr(e) for e in _dist_ord_exprs(SPARK, centroids)]
-    return qv.withColumn("mord", F.least(*ords))
-
-
-def _assign_cell_col(centroids: list[list[int]]) -> F.Column:
-    """The nearest-cell id as a single projection column (mord % ENC) —
-    lets callers attach the cell alongside other projections over the
-    same frame instead of joining a separate assignment frame back by
-    vec_id."""
-    ords = [F.expr(e) for e in _dist_ord_exprs(SPARK, centroids)]
-    return (F.least(*ords) % KMEANS_ENC).cast("long").alias("cell")
-
-
-def _kmeans_centroids(qv: DataFrame, k: int, n_iter: int) -> list[list[int]]:
-    """Lloyd centroid loop over a (vec_id, qvec) frame: init = the k
-    lowest-vec_id vectors, then ``n_iter − 1`` broadcast-centroid
-    updates (one k×dim-row shuffle each, driver fold in between)."""
-    # centralized guard for EVERY literal-path kmeans consumer
-    # (pq_encode, knn_pq_adc, ann_ivfpq_topk, ivfpq_build, ...): the
-    # mord = dist*KMEANS_ENC + cid encoding aliases codes mod
-    # KMEANS_ENC, so k beyond it would silently corrupt assignments
-    if not 2 <= k <= KMEANS_ENC:
-        raise ValueError(
-            f"k must be in [2, {KMEANS_ENC}]: the encoded-ordinal "
-            f"(dist*{KMEANS_ENC}+cid) packing aliases ids mod "
-            f"{KMEANS_ENC} — use the wide Arrow-kernel tier "
-            f"(ivf_build_wide / pq_encode_wide) for larger k"
-        )
-    init_rows = qv.orderBy("vec_id").limit(k).collect()
-    centroids = [list(r["qvec"]) for r in init_rows]
-
-    for _ in range(n_iter - 1):
-        # map-side-aggregated update (guide §2.3): the Arrow kernel's
-        # exact-int64 argmin ties toward the lower cid exactly like
-        # min(dist·ENC + cid), and integer sums fold associatively —
-        # bit-identical centroids, without shuffling n·dim exploded rows
-        sums = _cell_update_sums(qv, centroids)
-        nxt = [list(c) for c in centroids]  # empty cluster keeps its centroid
-        for r in sums:
-            nxt[r["cell"]][r["pos"]] = _tdiv(r["s"], r["c"])
-        centroids = nxt
-    return centroids
-
-
 def kmeans_assignments(
     vecs: DataFrame, k: int = 4, n_iter: int = 2, vec_col: str = "embedding"
 ) -> DataFrame:
     """Final (vec_id, cluster, sq_dist) after ``n_iter`` Lloyd
     assignment passes (n_iter − 1 centroid updates in between).
-    Init: the k lowest-vec_id vectors, cluster ids in vec_id order."""
-    if not 2 <= k <= KMEANS_ENC:
-        raise ValueError(f"k must be in [2, {KMEANS_ENC}]")
+    Init: the k lowest-vec_id vectors, cluster ids in vec_id order.
+    Cluster and squared distance come from the same argmin pass; a
+    NULL embedding keeps its row with NULL cluster and sq_dist, as the
+    oracle's NULL-propagating min() does."""
     qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    centroids = _kmeans_centroids(qv, k, n_iter)
-
-    return _assign(qv, centroids).select(
-        "vec_id",
-        (F.col("mord") % KMEANS_ENC).cast("long").alias("cluster"),
-        (F.col("mord") / F.lit(KMEANS_ENC)).cast("long").alias("sq_dist"),
+    centroids = _train_centroids(qv, k, n_iter)
+    assigned = _assign_cells_passthrough(qv, centroids).select(
+        "vec_id", F.col("cell").alias("cluster"), "sq_dist"
     )
+    nulls = qv.filter(F.col("qvec").isNull()).select(
+        "vec_id",
+        F.lit(None).cast("long").alias("cluster"),
+        F.lit(None).cast("long").alias("sq_dist"),
+    )
+    return assigned.unionByName(nulls)
 
 
 def _kmeans_cte_parts(
@@ -840,51 +788,12 @@ def ann_ivf_multiprobe_topk(
     the recall knob every IVF deployment tunes (single-cell probing
     caps recall at whatever fraction of true neighbors shares the
     query's Voronoi cell; measured in bench.py's ann_recall block).
-    One equi-join on the cell key: probe cost scales with
-    nprobe/n_cells of the corpus, never all-pairs. Exact int64
-    centroid arithmetic (same Lloyd loop as kmeans_assignments), so
-    the DuckDB oracle replays cells + probe ranking bit-for-bit."""
-    if not 2 <= n_cells <= KMEANS_ENC:
-        raise ValueError(f"n_cells must be in [2, {KMEANS_ENC}]")
-    assert 1 <= nprobe <= n_cells
-    cqv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    centroids = _kmeans_centroids(cqv, n_cells, n_iter)
-    cells = _assign(cqv, centroids).select(
-        "vec_id", (F.col("mord") % KMEANS_ENC).cast("long").alias("cell")
-    )
-    qv = _quantized(vecs, vec_col, drop_zero=True)
-    corpus = qv.join(cells, "vec_id")
-    ords = ", ".join(_dist_ord_exprs(SPARK, centroids))
-    probes = (
-        f"transform(slice(array_sort(array({ords})), 1, {nprobe}), "
-        f"o -> CAST(o % {KMEANS_ENC} AS BIGINT))"
-    )
-    queries = qv.filter(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("q_qvec"),
-        F.col("qnorm").alias("q_qnorm"),
-        F.explode(F.expr(probes)).alias("q_cell"),
-    )
-    cos = F.expr(
-        SPARK.cosine_q(SPARK.dot_q("q_qvec", "qvec"), "q_qnorm", "qnorm")
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("cell") == F.col("q_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("cosine", cos)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
+    The one-shot form of :func:`ivf_build_wide` + :func:`ivf_search_wide`
+    (the index is rebuilt per call). Exact int64 centroid arithmetic
+    (same Lloyd loop as kmeans_assignments), so the DuckDB oracle
+    replays cells + probe ranking bit-for-bit."""
+    index = ivf_build_wide(vecs, n_cells, n_iter, vec_col)
+    return ivf_search_wide(index, vecs, query_ids, k, nprobe, vec_col)
 
 
 def ann_ivf_multiprobe_topk_oracle(
@@ -1011,9 +920,10 @@ def knn_brute_force_int8_oracle(
 # half): each vector is split into PQ_M contiguous subvectors; each
 # subspace learns its own small k-means codebook (the SAME exact-int64
 # Lloyd machinery as kmeans_assignments, run per subspace); a vector is
-# stored as m codebook ids — m BYTES per vector at k ≤ 256 (here
-# k ≤ 16, so m nibbles), vs 4·dim bytes float32: a 64-dim embedding
-# compresses 64×. Search is ADC (asymmetric distance computation): the
+# stored as m codebook ids — m BYTES per vector at k ≤ 256 (the
+# gates' one-shots run k = 16: m nibbles), vs 4·dim bytes float32: a
+# 64-dim embedding compresses 64×. Search is ADC (asymmetric distance
+# computation): the
 # QUERY stays exact; per query a tiny m×k lookup table of
 # query-subvector ↔ centroid squared distances is built once, and a
 # corpus vector's approximate distance is m table lookups summed —
@@ -1034,61 +944,6 @@ def _pq_geometry(dim: int, m: int) -> list[tuple[int, int]]:
     return [(s * w + 1, w) for s in range(m)]
 
 
-def _pq_codebooks(
-    qv: DataFrame, dim: int, m: int, k: int, n_iter: int
-) -> list[list[list[int]]]:
-    """Per-subspace Lloyd codebooks over a (vec_id, qvec) frame — init
-    = the k lowest-vec_id subvectors, truncating integer updates.
-    All m subspace loops share each corpus pass: ONE init job (the k
-    lowest full vectors, sliced) and ONE map-side-aggregated Arrow
-    update pass per iteration (guide §2.3), instead of m independent
-    literal-expression loops each scanning and shuffling the corpus.
-    The per-subspace updates are independent, so folding them into a
-    shared pass is bit-identical to running them separately."""
-    # same guard _kmeans_centroids enforced when it owned this loop:
-    # the literal encode projection packs mord = dist*ENC + cid
-    if not 2 <= k <= KMEANS_ENC:
-        raise ValueError(
-            f"k must be in [2, {KMEANS_ENC}]: the encoded-ordinal "
-            f"(dist*{KMEANS_ENC}+cid) packing aliases ids mod "
-            f"{KMEANS_ENC} — use the wide Arrow-kernel tier "
-            f"(ivf_build_wide / pq_encode_wide) for larger k"
-        )
-    geom = _pq_geometry(dim, m)
-    init_rows = qv.orderBy("vec_id").limit(k).collect()
-    books = [
-        [list(r["qvec"])[lo - 1 : lo - 1 + w] for r in init_rows]
-        for (lo, w) in geom
-    ]
-    for _ in range(n_iter - 1):
-        sums = _pq_update_sums(qv, books, dim, m)
-        nxt = [[list(c) for c in b] for b in books]
-        for r in sums:
-            nxt[r["sub"]][r["cid"]][r["pos"]] = _tdiv(r["s"], r["c"])
-        books = nxt
-    return books
-
-
-def _pq_code_cols(
-    books: list[list[list[int]]], dim: int, m: int
-) -> list[F.Column]:
-    """One map-only argmin-distance projection per subspace (codebooks
-    inlined as literals — no join, no shuffle; the encode pass is a
-    single projection over the corpus)."""
-    cols = []
-    for s, (lo, w) in enumerate(_pq_geometry(dim, m)):
-        sub = f"slice(qvec, {lo}, {w})"
-        ords = []
-        for cid, cvec in enumerate(books[s]):
-            lit = "array(" + ", ".join(str(c) for c in cvec) + ")"
-            dist = SPARK.sum_list_bigint(SPARK.zip_sqdiff(sub, lit))
-            ords.append(F.expr(f"({dist} * {KMEANS_ENC} + {cid})"))
-        cols.append(
-            (F.least(*ords) % KMEANS_ENC).cast("long").alias(f"code_{s}")
-        )
-    return cols
-
-
 def pq_encode(
     vecs: DataFrame,
     m: int = PQ_M,
@@ -1098,14 +953,9 @@ def pq_encode(
     dim: int = 64,
 ) -> DataFrame:
     """PQ codes ``(vec_id, code_0 … code_{m-1})`` — the stored ANN
-    representation at 100 TB (m small ints per vector). Build = m
-    subspace Lloyd loops (each: map-only assign + one k×(dim/m)-row
-    shuffle per update) + ONE final map-only encode projection."""
-    if not 2 <= k <= KMEANS_ENC:
-        raise ValueError(f"k must be in [2, {KMEANS_ENC}]")
-    qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    books = _pq_codebooks(qv, dim, m, k, n_iter)
-    return qv.select(F.col("vec_id"), *_pq_code_cols(books, dim, m))
+    representation at 100 TB (m small ints per vector): the codes frame
+    of :func:`pq_build_wide`. A NULL embedding gets NULL codes."""
+    return pq_build_wide(vecs, m, k, n_iter, vec_col, dim).codes
 
 
 def knn_pq_adc(
@@ -1120,40 +970,15 @@ def knn_pq_adc(
 ) -> DataFrame:
     """Top-k by ADC over PQ codes: ``(query_id, neighbor_id, adc_dist,
     rnk)``. The query side stays EXACT (its quantized subvectors build
-    an m×k integer LUT of subvector↔centroid squared distances, one
-    tiny broadcast frame); the corpus side is scanned as CODES ONLY —
-    the compressed-domain scan that reads m ids per vector instead of
-    dim floats. Approximate by construction (codes quantize the
-    corpus); recall@10 vs the float ranking is measured per round in
-    bench.py ann_recall next to the int8 and IVF tiers."""
-    import numpy as np
-
-    qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    books = _pq_codebooks(qv, dim, m, k, n_iter)
-    codes = qv.select(F.col("vec_id"), *_pq_code_cols(books, dim, m))
-
-    # per-query LUTs driver-side in the same exact int64 math the
-    # literal zip_sqdiff expressions computed; scoring through the
-    # shared Arrow ADC scan instead of a broadcast-LUT nested-loop join
-    # + a window over every (row, query) pair (guide §4.2 / §2.3)
-    geom = _pq_geometry(dim, m)
-    mats = [np.asarray(b, dtype=np.int64) for b in books]
-    norms = [(c * c).sum(axis=1) for c in mats]
-    entries = []
-    for r in qv.filter(F.col("vec_id").isin(*query_ids)).collect():
-        if r["qvec"] is None:  # NULL embedding: never a query (ADVICE r13)
-            continue
-        x = np.asarray(r["qvec"], dtype=np.int64)
-        lut = np.stack(
-            [
-                (x[lo - 1 : lo - 1 + w] ** 2).sum()
-                + norms[s]
-                - 2 * (mats[s] @ x[lo - 1 : lo - 1 + w])
-                for s, (lo, w) in enumerate(geom)
-            ]
-        )
-        entries.append((int(r["vec_id"]), None, lut))
-    return _adc_scan_topk(codes, m, entries, topk)
+    an m×k integer LUT of subvector↔centroid squared distances); the
+    corpus side is scanned as CODES ONLY — the compressed-domain scan
+    that reads m ids per vector instead of dim floats. The one-shot
+    form of :func:`pq_build_wide` + :func:`knn_pq_adc_wide`.
+    Approximate by construction (codes quantize the corpus); recall@10
+    vs the float ranking is measured per round in bench.py ann_recall
+    next to the int8 and IVF tiers."""
+    index = pq_build_wide(vecs, m, k, n_iter, vec_col, dim)
+    return knn_pq_adc_wide(index, vecs, query_ids, topk, vec_col)
 
 
 def _pq_cte_parts(
@@ -1329,62 +1154,19 @@ def ann_ivfpq_topk(
     this id), and within each probed cell the scan reads PQ CODES
     only, ranked by ADC against the query's m×k LUT (the PQ half).
     Search cost ≈ (nprobe/n_cells) of the corpus × m byte-lookups per
-    vector — both knobs explicit and recall-measured per round.
+    vector — both knobs explicit and recall-measured per round. The
+    one-shot form of :func:`ivf_build_wide` + :func:`pq_build_wide` +
+    :func:`ivfpq_search_wide`.
 
     Simplification vs FAISS: codes quantize the RAW vectors, not the
     cell residuals (residual encoding needs a per-cell codebook or
     centroid subtraction; raw-vector PQ keeps the oracle replay exact
-    and the encode map-only — the recall artifact records the cost).
-
-    Plan shape: the probe frame (query_id, probed cell, LUT arrays) is
-    a broadcast of |query_ids|·nprobe rows; the corpus side is ONE
-    equi-join on the cell key — a hash join, never a nested loop.
-    Output (query_id, neighbor_id, adc_dist, rnk)."""
-    if not 2 <= n_cells <= KMEANS_ENC:
-        raise ValueError(f"n_cells must be in [2, {KMEANS_ENC}]")
-    assert 1 <= nprobe <= n_cells
-    import numpy as np
-
-    qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    centroids = _kmeans_centroids(qv, n_cells, n_iter)
-    books = _pq_codebooks(qv, dim, m, k, n_iter)
-    # codes AND cell in ONE projection over qv — the cell assignment is
-    # a literal expression over the same rows, so the old codes⋈cells
-    # self-join on vec_id bought nothing (guide §2.4)
-    codes = qv.select(
-        "vec_id",
-        *_pq_code_cols(books, dim, m),
-        _assign_cell_col(centroids),
-    )
-    # probe ranking + LUTs driver-side in the same exact int64 math the
-    # literal expressions computed (mord = dist·ENC + cid ascending ≡
-    # lexsort by (dist, cid)); scoring through the shared Arrow ADC
-    # scan instead of a broadcast probe-frame join + full-width window
-    geom = _pq_geometry(dim, m)
-    cmat = np.asarray(centroids, dtype=np.int64)
-    cnorm = (cmat * cmat).sum(axis=1)
-    mats = [np.asarray(b, dtype=np.int64) for b in books]
-    norms = [(c * c).sum(axis=1) for c in mats]
-    entries = []
-    for r in qv.filter(F.col("vec_id").isin(*query_ids)).collect():
-        if r["qvec"] is None:  # NULL embedding: never a query (ADVICE r13)
-            continue
-        x = np.asarray(r["qvec"], dtype=np.int64)
-        d2 = (x * x).sum() + cnorm - 2 * (cmat @ x)
-        order = np.lexsort((np.arange(len(d2)), d2))
-        lut = np.stack(
-            [
-                (x[lo - 1 : lo - 1 + w] ** 2).sum()
-                + norms[s]
-                - 2 * (mats[s] @ x[lo - 1 : lo - 1 + w])
-                for s, (lo, w) in enumerate(geom)
-            ]
-        )
-        # one entry per query, probed cells as a list (ADVICE r13 #3)
-        entries.append(
-            (int(r["vec_id"]), [int(c) for c in order[:nprobe]], lut)
-        )
-    return _adc_scan_topk(codes, m, entries, topk)
+    — the recall artifact records the cost; the residual form is
+    :func:`pq_build_residual`). Output (query_id, neighbor_id,
+    adc_dist, rnk)."""
+    ivf = ivf_build_wide(vecs, n_cells, n_iter, vec_col)
+    pq = pq_build_wide(vecs, m, k, n_iter, vec_col, dim)
+    return ivfpq_search_wide(ivf, pq, vecs, query_ids, topk, nprobe, vec_col)
 
 
 def ann_ivfpq_topk_oracle(
@@ -1484,13 +1266,22 @@ def ann_ivfpq_topk_oracle(
 # build/search split: the persisted-index API (build once, search many)
 # --------------------------------------------------------------------------
 #
-# The one-shot ann_* functions above rebuild their index inside every
-# call — right for self-contained correctness gates, wrong for serving
-# (measured at 1 M vectors: Lloyd builds dominate and a "search" call
-# reads slower than brute force). These are the production entry
-# points: build() returns the stored representation (cells / codes —
-# at 100 TB, written out partitioned by cell), search() touches ONLY
-# that representation plus the query vectors.
+# The one-shot functions above (ann_ivf_multiprobe_topk, pq_encode,
+# knn_pq_adc, ann_ivfpq_topk) compose these builds and searches and
+# rebuild their index inside every call — right for self-contained
+# correctness gates, wrong for serving (measured at 1 M vectors: Lloyd
+# builds dominate and a "search" call reads slower than brute force).
+# These are the production entry points: build() returns the stored
+# representation (cells / codes — at 100 TB, written out partitioned
+# by cell), search() touches ONLY that representation plus the query
+# vectors.
+#
+# Every assignment (coarse cells, PQ codes, Lloyd updates) runs in an
+# Arrow-batched exact-int64 numpy kernel (mapInPandas, map-only — the
+# same bit-identical-numpy-twin precedent as operators/linalg.py), so
+# the cell count and codebook size are unbounded; the DuckDB oracles
+# replay the same integer arithmetic, and full-probe ≡ brute force is
+# pinned in test_similarity.
 
 from dataclasses import dataclass as _dataclass
 
@@ -1511,240 +1302,20 @@ class IvfIndex:
     rotated: bool = False
 
 
-def ivf_build(
-    vecs: DataFrame,
-    n_cells: int = 4,
-    n_iter: int = 2,
-    vec_col: str = "embedding",
-) -> IvfIndex:
-    if not 2 <= n_cells <= KMEANS_ENC:
-        raise ValueError(f"n_cells must be in [2, {KMEANS_ENC}]")
-    qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    centroids = _kmeans_centroids(qv, n_cells, n_iter)
-    cells = (
-        _assign(qv, centroids)
-        .select(
-            "vec_id",
-            (F.col("mord") % KMEANS_ENC).cast("long").alias("cell"),
-        )
-        .cache()
-    )
-    cells.count()  # materialize the stored representation
-    qv.unpersist()
-    return IvfIndex(centroids=centroids, cells=cells, n_cells=n_cells)
-
-
-def ivf_search(
-    index: IvfIndex,
-    vecs: DataFrame,
-    query_ids: tuple[int, ...],
-    k: int = 5,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Multi-probe cosine top-k against a PREBUILT IvfIndex — same
-    output contract as ann_ivf_multiprobe_topk. Reads the vectors of
-    probed cells only (cell-partitioned layout at scale)."""
-    assert 1 <= nprobe <= index.n_cells
-    qv = _quantized(vecs, vec_col, drop_zero=True)
-    corpus = qv.join(index.cells, "vec_id")
-    ords = ", ".join(_dist_ord_exprs(SPARK, index.centroids))
-    probes = (
-        f"transform(slice(array_sort(array({ords})), 1, {nprobe}), "
-        f"o -> CAST(o % {KMEANS_ENC} AS BIGINT))"
-    )
-    queries = qv.filter(F.col("vec_id").isin(*query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("qvec").alias("q_qvec"),
-        F.col("qnorm").alias("q_qnorm"),
-        F.explode(F.expr(probes)).alias("q_cell"),
-    )
-    cos = F.expr(
-        SPARK.cosine_q(SPARK.dot_q("q_qvec", "qvec"), "q_qnorm", "qnorm")
-    )
-    scored = (
-        corpus.join(
-            F.broadcast(queries),
-            (F.col("cell") == F.col("q_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .withColumn("cosine", cos)
-        .select("query_id", F.col("vec_id").alias("neighbor_id"), "cosine")
-    )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rnk")
-    )
-
-
-@_dataclass
-class IvfPqIndex:
-    """Coarse cells + PQ codes — IVFPQ's stored half: ``codes`` is
-    (vec_id, cell, code_0..code_{m-1}), m small ints per vector."""
-
-    centroids: list
-    books: list
-    codes: DataFrame
-    n_cells: int
-    m: int
-    dim: int
-
-
-def ivfpq_build(
-    vecs: DataFrame,
-    n_cells: int = 4,
-    m: int = PQ_M,
-    k: int = 16,
-    n_iter: int = 2,
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> IvfPqIndex:
-    if not 2 <= n_cells <= KMEANS_ENC:
-        raise ValueError(f"n_cells must be in [2, {KMEANS_ENC}]")
-    qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
-    centroids = _kmeans_centroids(qv, n_cells, n_iter)
-    cells = _assign(qv, centroids).select(
-        "vec_id", (F.col("mord") % KMEANS_ENC).cast("long").alias("cell")
-    )
-    books = _pq_codebooks(qv, dim, m, k, n_iter)
-    codes = (
-        qv.select("vec_id", *_pq_code_cols(books, dim, m))
-        .join(cells, "vec_id")
-        .cache()
-    )
-    codes.count()  # materialize the stored representation
-    qv.unpersist()
-    return IvfPqIndex(
-        centroids=centroids, books=books, codes=codes,
-        n_cells=n_cells, m=m, dim=dim,
-    )
-
-
-def ivfpq_search(
-    index: IvfPqIndex,
-    vecs: DataFrame,
-    query_ids: tuple[int, ...],
-    topk: int = 5,
-    nprobe: int = 2,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC top-k against a PREBUILT IvfPqIndex — same output contract
-    as ann_ivfpq_topk. The corpus side reads CODES ONLY (m ints per
-    vector, cell-pruned); the query side quantizes just the |query_ids|
-    vectors to build the broadcast LUT frame."""
-    assert 1 <= nprobe <= index.n_cells
-    m, dim = index.m, index.dim
-    qv = _quantized(
-        vecs.filter(F.col("vec_id").isin(*query_ids)), vec_col
-    ).select("vec_id", "qvec")
-    ords = ", ".join(_dist_ord_exprs(SPARK, index.centroids))
-    probes = (
-        f"transform(slice(array_sort(array({ords})), 1, {nprobe}), "
-        f"o -> CAST(o % {KMEANS_ENC} AS BIGINT))"
-    )
-    lut_cols = [
-        F.col("vec_id").alias("query_id"),
-        F.explode(F.expr(probes)).alias("q_cell"),
-    ]
-    for s, (lo, w) in enumerate(_pq_geometry(dim, m)):
-        sub = f"slice(qvec, {lo}, {w})"
-        dists = []
-        for cvec in index.books[s]:
-            lit = "array(" + ", ".join(str(c) for c in cvec) + ")"
-            dists.append(SPARK.sum_list_bigint(SPARK.zip_sqdiff(sub, lit)))
-        lut_cols.append(
-            F.expr("array(" + ", ".join(dists) + ")").alias(f"lut_{s}")
-        )
-    probe_frame = qv.select(*lut_cols)
-    adc = sum(
-        F.element_at(f"lut_{s}", (F.col(f"code_{s}") + 1).cast("int"))
-        for s in range(m)
-    )
-    scored = (
-        index.codes.join(
-            F.broadcast(probe_frame),
-            (F.col("cell") == F.col("q_cell"))
-            & (F.col("vec_id") != F.col("query_id")),
-        )
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            adc.cast("long").alias("adc_dist"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy("adc_dist", "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-        .filter(F.col("rnk") <= topk)
-        .select("query_id", "neighbor_id", "adc_dist", "rnk")
-    )
-
-
-# --------------------------------------------------------------------------
-# wide-cell IVF: unbounded n_cells via Arrow-batched exact-int64 assign
-# --------------------------------------------------------------------------
-#
-# The literal-argmin assign above caps n_cells at O(tens): centroids
-# are inlined into the expression (k × dim literals) and the ord
-# encoding needs cid < KMEANS_ENC. Production IVF at corpus scale
-# wants ~sqrt(n) cells. This path broadcasts the centroid matrix to an
-# Arrow-batched numpy kernel instead (mapInPandas, map-only — the same
-# bit-identical-numpy-twin precedent as operators/linalg.py):
-# distances are exact int64 (d² = |x|² + |c|² − 2·x·c, every term
-# within int64 at the quantization scale), ties break toward the lower
-# cid exactly like the dist·ENC+cid min. Where both paths can run they
-# are BIT-IDENTICAL (pinned in test_similarity); beyond the literal
-# cap, exactness is pinned by full-probe ≡ brute-force.
-
-
-def _assign_cells_pandas(qv: DataFrame, centroids: list) -> DataFrame:
-    """(vec_id, cell): argmin-distance assignment against a broadcast
-    centroid matrix — one map-only Arrow pass, any cell count."""
-    import numpy as np
-
-    cmat = np.asarray(centroids, dtype=np.int64)
-    cnorm = (cmat * cmat).sum(axis=1)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            # NULL embeddings (ADVICE r13): the relational chains this
-            # kernel replaced NULL-propagated such rows out of the
-            # assignment — drop them the same way instead of raising
-            ok = np.array([v is not None for v in pdf["qvec"]], dtype=bool)
-            if not ok.all():
-                pdf = pdf.loc[ok]
-                if not len(pdf):
-                    continue
-            x = np.asarray(list(pdf["qvec"]), dtype=np.int64)
-            xnorm = (x * x).sum(axis=1)
-            # exact int64: |x|² + |c|² − 2 x·c per (row, centroid)
-            d2 = xnorm[:, None] + cnorm[None, :] - 2 * (x @ cmat.T)
-            # np.argmin takes the FIRST minimum → ties toward lower cid,
-            # identical to min(dist·ENC + cid)
-            yield pd.DataFrame(
-                {"vec_id": pdf["vec_id"], "cell": d2.argmin(axis=1)}
-            )
-
-    return qv.mapInPandas(kernel, "vec_id long, cell long")
-
-
 def _assign_cells_passthrough(
-    qv: DataFrame, centroids: list, rotated: bool = False, dim: int = 64
+    qv: DataFrame, centroids: list, rotated: bool = False
 ) -> DataFrame:
-    """``qv``'s columns + ``cell``: the same exact-int64 argmin
-    assignment as :func:`_assign_cells_pandas`, with every payload
-    column passed through the SAME Arrow batch — the streaming
-    payload_rows_stream shape for batch saves (guide §2.4: the cells
-    join on vec_id re-shuffled the whole corpus just to attach a value
-    that is a pure function of the frozen centroids and the row's own
+    """``qv``'s columns + ``cell`` + ``sq_dist``: the exact-int64
+    argmin against a broadcast centroid matrix, one map-only Arrow
+    pass, any cell count — the ONE assign kernel behind
+    ivf_build_wide's cells, kmeans_assignments, the streamed cells
+    (ann_stream.cells_rows_stream) and the payload save
+    (ann_serving.ivf_payload_frame). Distances are d² = |x|² + |c|² −
+    2·x·c, every term within int64 at the quantization scale; np.argmin
+    takes the FIRST minimum, so ties go to the lower cid. Payload
+    columns pass through the SAME Arrow batch (guide §2.4: a cells join
+    on vec_id re-shuffled the whole corpus just to attach a value that
+    is a pure function of the frozen centroids and the row's own
     vector). ``rotated=True`` assigns in the Hadamard-rotated space
     (H @ x, exact ±1 int64 — the build-side rotation) while passing the
     RAW payload columns through untouched. NULL-qvec rows are dropped,
@@ -1755,6 +1326,7 @@ def _assign_cells_passthrough(
 
     cmat = np.asarray(centroids, dtype=np.int64)
     cnorm = (cmat * cmat).sum(axis=1)
+    dim = cmat.shape[1]
     H = (
         np.array([_had_row(j, dim) for j in range(dim)], dtype=np.int64)
         if rotated
@@ -1775,12 +1347,15 @@ def _assign_cells_passthrough(
                 x = x @ H.T
             xnorm = (x * x).sum(axis=1)
             d2 = xnorm[:, None] + cnorm[None, :] - 2 * (x @ cmat.T)
+            cell = d2.argmin(axis=1)  # first-min → lower cid
             out = pdf.copy()
-            out["cell"] = d2.argmin(axis=1)  # first-min → lower cid
+            out["cell"] = cell
+            out["sq_dist"] = d2[np.arange(len(cell)), cell]
             yield out
 
     schema = StructType(
-        list(qv.schema.fields) + [StructField("cell", LongType())]
+        list(qv.schema.fields)
+        + [StructField("cell", LongType()), StructField("sq_dist", LongType())]
     )
     return qv.mapInPandas(kernel, schema)
 
@@ -1788,8 +1363,8 @@ def _assign_cells_passthrough(
 def _cell_update_sums(qv: DataFrame, centroids: list) -> list:
     """One Lloyd update's (cell, pos) → (sum, count) table in a single
     map-side-aggregated Arrow pass: each task assigns its rows with the
-    SAME exact-int64 argmin as _assign_cells_pandas and folds component
-    sums per (cell, pos) in numpy, emitting n_cells×dim partials
+    SAME exact-int64 argmin as _assign_cells_passthrough and folds
+    component sums per (cell, pos) in numpy, emitting n_cells×dim partials
     instead of n·dim exploded rows — the shuffle then merges
     tasks×cells×dim partial rows rather than moving the corpus
     (assignment → self-join → posexplode did two extra shuffles of
@@ -1918,6 +1493,45 @@ def _pq_update_sums(
     )
 
 
+def _train_centroids(
+    qv: DataFrame,
+    n_cells: int,
+    n_iter: int,
+    train_sample: "int | None" = None,
+) -> list:
+    """The Lloyd centroid loop over a (vec_id, qvec) frame: init = the
+    n_cells lowest-vec_id vectors (or, with ``train_sample``, the
+    sample's hash order — see ivf_build_wide), then ``n_iter − 1``
+    broadcast-centroid updates. Each update is ONE map-side-aggregated
+    Arrow pass folding per-(cell, pos) integer sums inside each task
+    (guide §2.3 — aggregate before the shuffle), then a driver-side
+    truncating fold; an empty cell keeps its centroid."""
+    if n_cells < 2:
+        raise ValueError(f"need at least 2 centroids, got {n_cells}")
+    if train_sample is not None:
+        from uwheel_datafusion_spark.operators.sampling import (
+            hash_rank_sql,
+            hash_sample_threshold,
+        )
+
+        rank = F.expr(hash_rank_sql("vec_id"))
+        cut = hash_sample_threshold(train_sample, qv.count())
+        train = qv.filter(rank < F.lit(cut)).cache()
+        init = train.orderBy(rank, "vec_id")
+    else:
+        train, init = qv, qv.orderBy("vec_id")
+    centroids = [list(r["qvec"]) for r in init.limit(n_cells).collect()]
+    for _ in range(n_iter - 1):
+        sums = _cell_update_sums(train, centroids)
+        nxt = [list(c) for c in centroids]
+        for r in sums:
+            nxt[r["cell"]][r["pos"]] = _tdiv(r["s"], r["c"])
+        centroids = nxt
+    if train is not qv:
+        train.unpersist()
+    return centroids
+
+
 def ivf_build_wide(
     vecs: DataFrame,
     n_cells: int,
@@ -1927,15 +1541,15 @@ def ivf_build_wide(
     dim: int = 64,
     train_sample: "int | None" = None,
 ) -> IvfIndex:
-    """ivf_build without the literal-expression cell cap: same init
-    (the n_cells lowest-vec_id vectors), same truncating integer
-    centroid updates, assignment via the Arrow kernel. Bit-identical
-    to ivf_build wherever both run. ``rotate=True`` trains the coarse
-    quantizer in the Hadamard-ROTATED space (round 13 — the OPQ-style
-    pre-rotation for the served residual tier: rotation spreads
-    per-dimension variance so the PQ subspaces split information
-    evenly); centroids/cells are then rotated-space objects and
-    queries must be rotated before probe ranking.
+    """Coarse-quantizer build at any cell count: init = the n_cells
+    lowest-vec_id vectors, truncating integer centroid updates,
+    assignment via the Arrow argmin kernel (the same Lloyd loop as
+    kmeans_assignments). NULL embeddings get no cell. ``rotate=True``
+    trains the coarse quantizer in the Hadamard-ROTATED space (round
+    13 — the OPQ-style pre-rotation for the served residual tier:
+    rotation spreads per-dimension variance so the PQ subspaces split
+    information evenly); centroids/cells are then rotated-space
+    objects and queries must be rotated before probe ranking.
 
     ``train_sample=N`` (round 13 — VERDICT r12 next #2/#3, the FAISS
     ``max_points_per_centroid`` discipline: size it ~256·n_cells)
@@ -1948,52 +1562,23 @@ def ivf_build_wide(
     clustered corpora can burn many seeds inside one latent cluster).
     The FINAL assignment stays exact over the full corpus. At 10⁹
     vectors full-corpus training is ~1000× the needed work — per
-    iteration this cuts the posexplode shuffle from n·dim to N·dim
-    rows, and the sample selection itself is scan-adjacent. None keeps
-    the legacy full-corpus/lowest-id behavior bit-for-bit."""
-    if n_cells < 2:
-        raise ValueError("n_cells must be >= 2")
+    iteration this cuts the update pass from n to N rows, and the
+    sample selection itself is scan-adjacent. None keeps the
+    full-corpus/lowest-id behavior bit-for-bit."""
     if rotate:
         assert dim & (dim - 1) == 0, "Hadamard needs a power-of-two dim"
-    from uwheel_datafusion_spark.operators.sampling import (
-        hash_rank_sql,
-        hash_sample_threshold,
-    )
-
     qv = (
         _rotated_qv(vecs, vec_col, dim)
         if rotate
         else _quantized(vecs, vec_col).select("vec_id", "qvec")
     ).cache()
-    if train_sample is not None:
-        rank = F.expr(hash_rank_sql("vec_id"))
-        cut = hash_sample_threshold(train_sample, qv.count())
-        train = qv.filter(rank < F.lit(cut)).cache()
-        centroids = [
-            list(r["qvec"])
-            for r in train.orderBy(rank, "vec_id").limit(n_cells).collect()
-        ]
-    else:
-        train = qv
-        centroids = [
-            list(r["qvec"])
-            for r in qv.orderBy("vec_id").limit(n_cells).collect()
-        ]
-    for _ in range(n_iter - 1):
-        # map-side-aggregated update: one Arrow pass folds per-(cell,
-        # pos) integer sums inside each task (guide §2.3 — aggregate
-        # before the shuffle); bit-identical to the old assignment →
-        # self-join → posexplode → groupBy chain, minus two corpus
-        # shuffles per iteration
-        sums = _cell_update_sums(train, centroids)
-        nxt = [list(c) for c in centroids]
-        for r in sums:
-            nxt[r["cell"]][r["pos"]] = _tdiv(r["s"], r["c"])
-        centroids = nxt
-    cells = _assign_cells_pandas(qv, centroids).cache()
+    centroids = _train_centroids(qv, n_cells, n_iter, train_sample)
+    cells = (
+        _assign_cells_passthrough(qv, centroids)
+        .select("vec_id", "cell")
+        .cache()
+    )
     cells.count()
-    if train is not qv:
-        train.unpersist()
     qv.unpersist()
     return IvfIndex(
         centroids=centroids, cells=cells, n_cells=n_cells, rotated=rotate
@@ -2008,11 +1593,12 @@ def ivf_search_wide(
     nprobe: int = 2,
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """ivf_search without the literal probe-ranking expression: the
+    """Multi-probe cosine top-k against a PREBUILT IvfIndex: the
     |query_ids| query vectors are collected once and their nprobe
-    nearest cells ranked driver-side in the same exact int64
-    arithmetic; the probe pairs ship as a small broadcast frame.
-    Same output contract as ivf_search."""
+    nearest cells ranked driver-side in exact int64 arithmetic (ties →
+    lower cid); the probe pairs ship as a small broadcast frame, and
+    only the probed cells' vectors are read (cell-partitioned layout
+    at scale). Output (query_id, neighbor_id, cosine, rnk)."""
     import numpy as np
 
     assert 1 <= nprobe <= index.n_cells
@@ -2065,15 +1651,12 @@ def ivf_search_wide(
 
 
 # --------------------------------------------------------------------------
-# wide PQ: byte codes (k up to 256 per subspace) via the Arrow kernel
+# PQ build/search: byte codes (k up to 256 per subspace) via the Arrow kernel
 # --------------------------------------------------------------------------
 #
-# The literal-argmin PQ encode caps k at KMEANS_ENC (nibble codes):
-# k=256 × m=8 would inline ~2000 distance expressions. FAISS's default
-# IS k=256 (byte codes) — the quantization-error regime where PQ recall
-# becomes useful. Same Arrow exact-int64 kernel as ivf_build_wide, per
-# subspace; bit-identical to the literal path at literal-feasible
-# shapes (pinned).
+# FAISS's default is k=256 (byte codes) — the quantization-error regime
+# where PQ recall becomes useful; the gates' one-shots run k=16. Same
+# Arrow exact-int64 argmin as ivf_build_wide, per subspace.
 
 
 @_dataclass
@@ -2096,10 +1679,12 @@ def _pq_assign_codes_pandas(
     extra_cols: tuple = (),
 ) -> DataFrame:
     """(vec_id, code_0..code_{m-1}) in ONE Arrow pass: per subspace,
-    exact-int64 argmin against that subspace's codebook matrix.
-    ``extra_cols``: ((name, sql_type), ...) input columns passed
-    through unchanged — lets callers carry e.g. the coarse cell id
-    without a join-back of the corpus by vec_id."""
+    exact-int64 argmin against that subspace's codebook matrix. A NULL
+    qvec gets NULL codes — the oracle's NULL-propagating min() —
+    which the ADC scan then never ranks. ``extra_cols``: ((name,
+    sql_type), ...) input columns passed through unchanged — lets
+    callers carry e.g. the coarse cell id without a join-back of the
+    corpus by vec_id."""
     import numpy as np
 
     geom = _pq_geometry(dim, m)
@@ -2115,7 +1700,10 @@ def _pq_assign_codes_pandas(
         for pdf in batches:
             if not len(pdf):
                 continue
-            x = np.asarray(list(pdf["qvec"]), dtype=np.int64)
+            ok = np.array([v is not None for v in pdf["qvec"]], dtype=bool)
+            x = np.asarray(
+                list(pdf["qvec"][ok]), dtype=np.int64
+            ).reshape(-1, dim)
             out = {"vec_id": pdf["vec_id"]}
             for s, (lo, w) in enumerate(geom):
                 sub = x[:, lo - 1 : lo - 1 + w]
@@ -2124,7 +1712,12 @@ def _pq_assign_codes_pandas(
                     + norms[s][None, :]
                     - 2 * (sub @ mats[s].T)
                 )
-                out[f"code_{s}"] = d2.argmin(axis=1)  # ties → lower cid
+                code = d2.argmin(axis=1)  # ties → lower cid
+                if not ok.all():
+                    code = pd.Series(code, index=pdf.index[ok]).reindex(
+                        pdf.index
+                    ).astype("Int64")
+                out[f"code_{s}"] = code
             for name, _ in extra_cols:
                 out[name] = pdf[name]
             yield pd.DataFrame(out)
@@ -2141,11 +1734,11 @@ def pq_build_wide(
     dim: int = 64,
     train_sample: "int | None" = None,
 ) -> PqIndex:
-    """PQ codebooks + codes at FAISS-standard shapes (k=256 byte
-    codes): same init (k lowest-vec_id subvectors) and truncating
-    integer updates as pq_encode, assignment via the Arrow kernel —
-    bit-identical where both run. ``train_sample``: see
-    ivf_build_wide (hash-ranked sample training, exact final codes)."""
+    """PQ codebooks + codes at any k (FAISS-standard k=256 byte codes
+    by default): init = the k lowest-vec_id subvectors, truncating
+    integer updates, assignment via the Arrow kernel; a NULL embedding
+    gets NULL codes. ``train_sample``: see ivf_build_wide (hash-ranked
+    sample training, exact final codes)."""
     qv = _quantized(vecs, vec_col).select("vec_id", "qvec").cache()
     books, codes = _pq_wide_books_codes(
         qv, dim, m, k, n_iter, train_sample=train_sample
@@ -2335,7 +1928,8 @@ def knn_pq_adc_wide(
     """ADC top-k against a PREBUILT wide PqIndex: per-query LUTs are
     computed driver-side in the same exact int64 arithmetic (|query
     set| × m × k ints); the corpus side reads CODES ONLY through the
-    shared Arrow ADC scan. Same output contract as knn_pq_adc."""
+    shared Arrow ADC scan. Output (query_id, neighbor_id, adc_dist,
+    rnk)."""
     import numpy as np
 
     m, dim = index.m, index.dim
@@ -2436,7 +2030,7 @@ def ivfpq_search_wide(
 
 
 # --------------------------------------------------------------------------
-# wide IVF-PQ oracle: fully-relational DuckDB replay, no literal caps
+# wide IVF-PQ oracle: fully-relational DuckDB replay, no mord cap
 # --------------------------------------------------------------------------
 
 
@@ -2448,7 +2042,7 @@ def _wide_kmeans_ctes(
     with NO cell-count cap: nearest-centroid assignment is a
     row_number() over (dist, cid) — the exact tie-break of the Arrow
     kernel's first-minimum argmin — instead of the mord dist·16+cid
-    packing the literal-path oracles use (which caps cid at 16).
+    packing the one-shot gates' oracles use (which caps cid at 16).
     Returns (parts, final_centroid_cte_name). ``train_sample`` replays
     the seeded hash-THRESHOLD sample training (round 13): init and the
     Lloyd iterations read exactly the rows whose Knuth-mix rank falls
@@ -2542,7 +2136,7 @@ def ivfpq_search_wide_oracle(
 ) -> str:
     """DuckDB replay of ivf_build_wide + pq_build_wide +
     ivfpq_search_wide at GENUINELY WIDE shapes (cells and codebook
-    sizes past the literal-expression caps): coarse Lloyd cells, m
+    sizes past the mord packing's 16-id cap): coarse Lloyd cells, m
     per-subspace Lloyd codebooks, byte codes, per-query probe ranking
     and ADC LUTs — all relational, bit-for-bit against the Arrow
     kernels (same init from the k lowest vec_ids, same
@@ -3425,7 +3019,7 @@ def ivf_search_wide_oracle(
     train_sample: "int | None" = None,
 ) -> str:
     """DuckDB replay of ivf_build_wide + multi-probe cosine search at
-    GENUINELY WIDE cell counts (no mord packing, no literal cap):
+    GENUINELY WIDE cell counts (no mord packing, no 16-cell cap):
     wide-kmeans cells, per-query probe ranking by (dist, cid)
     row_number — the Arrow kernel's first-minimum tie-break — then
     exact quantized cosine over the probed cells only, ranked by

@@ -10,8 +10,8 @@ streams the assignment half:
 - the coarse centroids come from a batch ``ivf_build_wide`` (frozen —
   exactly how FAISS `add()` works after `train()`);
 - each embedding micro-batch is assigned via the SAME Arrow-batched
-  exact-int64 kernel (`_assign_cells_pandas`, map-only — legal in a
-  stream, no state);
+  exact-int64 kernel as the batch build (`_assign_cells_passthrough`,
+  map-only — legal in a stream, no state);
 - (vec_id, cell) rows append through the built-in exactly-once parquet
   file sink, PARTITIONED BY cell — the same layout a 100 TB corpus
   wants (a probe's equi-join on the cell key prunes to the probed
@@ -38,7 +38,7 @@ from uwheel_datafusion_spark.functions.dialect import SPARK
 from uwheel_datafusion_spark.operators.similarity import (
     Q_SCALE,
     IvfIndex,
-    _assign_cells_pandas,
+    _assign_cells_passthrough,
 )
 
 
@@ -55,7 +55,7 @@ def cells_rows_stream(
     qv = stream_vecs.select(
         "vec_id", F.expr(d.quantize_vec(vec_col, Q_SCALE)).alias("qvec")
     )
-    return _assign_cells_pandas(qv, centroids)
+    return _assign_cells_passthrough(qv, centroids).select("vec_id", "cell")
 
 
 def start_ivf_cells_stream(

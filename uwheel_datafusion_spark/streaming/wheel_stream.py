@@ -173,7 +173,12 @@ class RollupStore:
     serves an empty index."""
 
     slots: dict[int, tuple[int, int, float, float]] = field(default_factory=dict)
-    n_late_rows: int = 0  # accumulated numRowsDroppedByWatermark
+    #: Spark's numRowsDroppedByWatermark summed once per micro-batch:
+    #: the stateful operator's dropped INPUT rows, which are partial
+    #: aggregates — one per late (minute[, key]) group per input task,
+    #: not one per late source row (5 late rows in one minute of one
+    #: file count 1)
+    n_late_rows: int = 0
 
     def upsert(self, rows) -> None:
         for r in rows:
@@ -763,6 +768,7 @@ class StreamingWheel:
     ) -> None:
         self.store = store if store is not None else RollupStore()
         self._last_epoch = -1
+        self._late_batch = -1  # last batchId whose late rows were counted
         self._delay = watermark_delay
         self.key_col = key_col
         group_cols = [F.window(ts_col, "1 minute").alias("w")]
@@ -906,6 +912,7 @@ class StreamingWheel:
                         checkpoint_dir,
                     )
 
+        self._late_batch = -1  # a new query reports only its own batches
         self._query = (
             self._agg.writeStream.outputMode("update")
             .option("checkpointLocation", checkpoint_dir)
@@ -922,9 +929,15 @@ class StreamingWheel:
         self._harvest_late_metric()
 
     def _harvest_late_metric(self) -> None:
+        """Add the late-row counts of the micro-batches not yet counted:
+        ``recentProgress`` lists every recent batch on every call, so
+        each batchId is harvested once."""
         q = self._query
         try:
             for prog in q.recentProgress:
+                if prog["batchId"] <= self._late_batch:
+                    continue
+                self._late_batch = prog["batchId"]
                 for op in prog.get("stateOperators", []):
                     self.store.n_late_rows += int(
                         op.get("numRowsDroppedByWatermark", 0)
