@@ -26,3 +26,22 @@ def sf_smoke():
 @pytest.fixture(scope="session")
 def sf_correctness():
     return SF_CORRECTNESS
+
+
+def _uncommit_last_batch(checkpoint_dir: str) -> int:
+    """Make a stopped query look as if it crashed after its sink ran but
+    before Spark committed the last micro-batch: delete the newest
+    ``commits/N`` file and its checksum, so the next start replays
+    batch N. Returns N."""
+    commits = os.path.join(checkpoint_dir, "commits")
+    n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    for name in (str(n), f".{n}.crc"):
+        path = os.path.join(commits, name)
+        if os.path.exists(path):
+            os.remove(path)
+    return n
+
+
+@pytest.fixture
+def uncommit_last_batch():
+    return _uncommit_last_batch

@@ -88,6 +88,35 @@ def test_exact_dedup_restart_state_semantics(spark, tmp_path):
     assert sum(n for _, n in full.values()) == 3
 
 
+def test_exact_dedup_same_object_restarts(spark, tmp_path, uncommit_last_batch):
+    """One object, restarted twice. First after a crash between persist
+    and commit: the replayed epoch is skipped but its plan still runs,
+    so the state store commits. Then on a FRESH checkpoint without
+    state_dir: ``start()`` resets the epoch guard, so the new query's
+    early epochs are folded instead of skipped as replays (either case
+    used to die with STATE_STORE_COMMIT_VALIDATION_FAILED)."""
+    work = str(tmp_path / "g")
+    src = os.path.join(work, "in")
+    ckpt = os.path.join(work, "ckpt")
+    state = os.path.join(work, "state")
+    mid = len(ROWS) // 2
+    _write_docs(spark, src, ROWS[:mid])
+    _write_docs(spark, src, ROWS[mid:])
+    want = _run_exact(spark, str(tmp_path / "whole"), [ROWS])
+    d = StreamingExactDedup(_mk_stream(spark, src))
+
+    def run(checkpoint, state_dir=None):
+        d.start(checkpoint, state_dir=state_dir)
+        d.process_available()
+        d.stop()
+        assert d.store == want
+
+    run(ckpt, state)
+    uncommit_last_batch(ckpt)
+    run(ckpt, state)  # replays the uncommitted epoch
+    run(os.path.join(work, "fresh_ckpt"))
+
+
 def test_exact_dedup_dup_groups_df(spark, tmp_path):
     work = str(tmp_path / "d")
     rows = [(1, "unique one"), (2, "twin"), (3, "twin"), (4, "unique two")]

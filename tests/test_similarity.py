@@ -203,6 +203,41 @@ def test_served_cells_follow_index_cells(spark, sf_smoke, rotate):
     idx.cells.unpersist()
 
 
+def test_streamed_payload_equals_batch_payload(spark, sf_smoke):
+    """ann_stream.payload_rows_stream assigns with the batch argmin
+    kernel, so for a plain index its rows equal ivf_payload_frame's,
+    and a NULL embedding (vec_id 30 of 40) is dropped by both instead
+    of failing the streamed kernel."""
+    from pyspark.sql import functions as F
+
+    from uwheel_datafusion_spark.operators.ann_serving import (
+        ivf_payload_frame,
+    )
+    from uwheel_datafusion_spark.streaming.ann_stream import (
+        payload_rows_stream,
+    )
+
+    emb = (
+        load_table(spark, sf_smoke, "embeddings")
+        .filter("vec_id < 40")
+        .withColumn(
+            "embedding", F.when(F.col("vec_id") != 30, F.col("embedding"))
+        )
+    )
+    idx = sim.ivf_build_wide(emb, n_cells=4)
+
+    def rows(df):
+        return sorted(
+            (r["cell"], r["vec_id"], tuple(r["qvec"]), r["qnorm"])
+            for r in df.collect()
+        )
+
+    streamed = rows(payload_rows_stream(emb, idx.centroids))
+    assert streamed == rows(ivf_payload_frame(idx, emb))
+    assert len(streamed) == 39 and 30 not in {r[1] for r in streamed}
+    idx.cells.unpersist()
+
+
 def test_zero_and_null_embeddings_excluded_from_cosine_ops(spark):
     """A zero-norm or null embedding would make cosine 0/0 = NaN, and
     Spark ranks NaN above every real number — one bad row would win

@@ -896,6 +896,190 @@ def test_streaming_wheel_state_dir_restart(spark, sf_smoke, tmp_path):
         assert stream_idx.query_count(s, e) == batch_idx.query_count(s, e)
 
 
+CRASH_SCHEMA = "ts timestamp, value double, user_id long, doc_id long, text string"
+
+
+def _crash_file(src, i):
+    """File i: six rows over minutes 2i and 2i+1 of 2024-01-01."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    n = range(6 * i, 6 * i + 6)
+    os.makedirs(src, exist_ok=True)
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array(
+                    [datetime(2024, 1, 1, 0, 2 * i + j // 3, j % 3 * 20)
+                     for j in range(6)],
+                    pa.timestamp("us"),
+                ),
+                "value": [float(x % 5) for x in n],
+                "user_id": pa.array([x % 4 for x in n], pa.int64()),
+                "doc_id": pa.array(list(n), pa.int64()),
+                "text": [f"doc {x % 5}" for x in n],
+            }
+        ),
+        os.path.join(src, f"part-{i}.parquet"),
+    )
+
+
+def _crash_cases():
+    from uwheel_datafusion_spark.streaming.dedup_stream import (
+        StreamingExactDedup,
+    )
+    from uwheel_datafusion_spark.streaming.wheel_stream import (
+        StreamingBottomKWheel,
+        StreamingDistinctWheel,
+        StreamingHistogramWheel,
+        StreamingMGWheel,
+        StreamingOHLCWheel,
+    )
+
+    # kind → (wheel over the stream, its folded state)
+    return {
+        "distinct": (
+            lambda s: StreamingDistinctWheel(s, "ts", "user_id"),
+            lambda w: w.slots,
+        ),
+        "bottomk": (
+            lambda s: StreamingBottomKWheel(s, "ts", "user_id", k=2),
+            lambda w: w.slots,
+        ),
+        "mg": (
+            lambda s: StreamingMGWheel(s, "ts", "user_id", m=2),
+            lambda w: w.slots,
+        ),
+        "histogram": (
+            lambda s: StreamingHistogramWheel(s, "ts", "value"),
+            lambda w: w.slots,
+        ),
+        "ohlc": (
+            lambda s: StreamingOHLCWheel(s, "ts", "value"),
+            lambda w: w.slots,
+        ),
+        "wheel": (
+            lambda s: StreamingWheel(s, "ts", "value"),
+            lambda w: w.store.slots,
+        ),
+        "dedup": (
+            lambda s: StreamingExactDedup(s.select("doc_id", "text")),
+            lambda w: w.store,
+        ),
+    }
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["distinct", "bottomk", "mg", "histogram", "ohlc", "wheel", "dedup",
+     "wheel_table"],
+)
+def test_crash_replay_resumes_every_wheel(
+    spark, tmp_path, uncommit_last_batch, kind
+):
+    """A crash after the sink persisted an epoch but before Spark
+    committed it replays that epoch on restart. The epoch guard skips
+    the fold but still runs the batch's plan, so a fresh object on the
+    same (checkpoint, state_dir) — or table_dir — resumes and ends with
+    the slots of one uninterrupted run. Skipping the plan as well made
+    every update-mode wheel die with STATE_STORE_COMMIT_VALIDATION_FAILED."""
+    make, state_of = _crash_cases()[kind.replace("_table", "")]
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    table = str(tmp_path / "table")
+    sink = (
+        {"table_dir": table}
+        if kind == "wheel_table"
+        else {"state_dir": str(tmp_path / "state")}
+    )
+
+    def run(checkpoint, **kw):
+        w = make(
+            spark.readStream.schema(CRASH_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        w.start(checkpoint, **kw)
+        w.process_available()
+        w.stop()
+        return w
+
+    _crash_file(src, 0)
+    _crash_file(src, 1)
+    run(ckpt, **sink)
+    assert uncommit_last_batch(ckpt) >= 1
+    _crash_file(src, 2)
+    resumed = run(ckpt, **sink)
+    whole = state_of(run(str(tmp_path / "whole_ckpt")))
+    if kind == "wheel_table":
+        from uwheel_datafusion_spark.operators.rollup_io import load_rollup
+
+        got = {
+            r["bucket_ms"]: (
+                r["sum_micros"], r["cnt"], r["min_value"], r["max_value"]
+            )
+            for r in load_rollup(spark, table).collect()
+        }
+    else:
+        got = state_of(resumed)
+    assert whole and got == whole
+
+
+def test_crash_between_sinks_refolds_the_lagging_sink(
+    spark, tmp_path, monkeypatch
+):
+    """StreamingWheel with state_dir AND manifest_root, crashed after an
+    epoch's manifest commit but before its state_dir persist: the
+    restart replays that epoch into the lagging driver store instead of
+    taking the manifest's newer epoch as proof that every sink has it."""
+    from pyspark.errors import StreamingQueryException
+
+    from uwheel_datafusion_spark.operators.rollup_io import (
+        manifest_rollup_read,
+    )
+    from uwheel_datafusion_spark.streaming import wheel_stream as ws
+
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    root = str(tmp_path / "manifest")
+    sinks = {"state_dir": str(tmp_path / "state"), "manifest_root": root}
+    persist = ws._persist_state
+
+    def crash_at_epoch_1(state_dir, slots, epoch_id, *args, **kw):
+        if epoch_id == 1:
+            raise RuntimeError("crash between the manifest commit and the persist")
+        persist(state_dir, slots, epoch_id, *args, **kw)
+
+    def wheel():
+        return StreamingWheel(
+            spark.readStream.schema(CRASH_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            "ts",
+            "value",
+        )
+
+    _crash_file(src, 0)
+    _crash_file(src, 1)
+    monkeypatch.setattr(ws, "_persist_state", crash_at_epoch_1)
+    w = wheel()
+    w.start(ckpt, **sinks)
+    with pytest.raises(StreamingQueryException):
+        w.process_available()
+    w.stop()
+    monkeypatch.undo()
+
+    w = wheel()
+    w.start(ckpt, **sinks)
+    w.process_available()
+    w.stop()
+    table = {
+        r["bucket_ms"]: (r["sum_micros"], r["cnt"], r["min_value"], r["max_value"])
+        for r in manifest_rollup_read(spark, root).collect()
+    }
+    assert len(table) == 4 and w.store.slots == table
+
+
 def test_state_dir_checkpoint_mismatch_raises(tmp_path):
     """Regression (ADVICE r5): a populated state_dir restored under a
     DIFFERENT checkpoint dir must raise — epoch ids restart at 0 under

@@ -944,6 +944,22 @@ def _pq_geometry(dim: int, m: int) -> list[tuple[int, int]]:
     return [(s * w + 1, w) for s in range(m)]
 
 
+def _pq_lut(x, mats: list, norms: list, geom: list):
+    """The m×k ADC lookup table of one quantized query (or query
+    residual) ``x``: per subspace, the exact int64 squared distance
+    from x's slice to every codeword (|x_s|² + |c|² − 2·x_s·c)."""
+    import numpy as np
+
+    return np.stack(
+        [
+            (x[lo - 1 : lo - 1 + w] ** 2).sum()
+            + norms[s]
+            - 2 * (mats[s] @ x[lo - 1 : lo - 1 + w])
+            for s, (lo, w) in enumerate(geom)
+        ]
+    )
+
+
 def pq_encode(
     vecs: DataFrame,
     m: int = PQ_M,
@@ -1947,14 +1963,7 @@ def knn_pq_adc_wide(
         if r["qvec"] is None:  # NULL embedding: never a query (ADVICE r13)
             continue
         x = np.asarray(r["qvec"], dtype=np.int64)
-        lut = np.stack(
-            [
-                (x[lo - 1 : lo - 1 + w] ** 2).sum()
-                + norms[s]
-                - 2 * (mats[s] @ x[lo - 1 : lo - 1 + w])
-                for s, (lo, w) in enumerate(geom)
-            ]
-        )
+        lut = _pq_lut(x, mats, norms, geom)
         entries.append((int(r["vec_id"]), None, lut))
     return _adc_scan_topk(index.codes, m, entries, topk)
 
@@ -1999,14 +2008,7 @@ def ivfpq_search_wide(
         x = np.asarray(r["qvec"], dtype=np.int64)
         d2 = (x * x).sum() + cnorm - 2 * (cmat @ x)
         order = np.lexsort((np.arange(len(d2)), d2))
-        lut = np.stack(
-            [
-                (x[lo - 1 : lo - 1 + w] ** 2).sum()
-                + norms[s]
-                - 2 * (mats[s] @ x[lo - 1 : lo - 1 + w])
-                for s, (lo, w) in enumerate(geom)
-            ]
-        )
+        lut = _pq_lut(x, mats, norms, geom)
         # ONE entry per query carrying its probed-cell list: the LUT is
         # cell-independent here, so the kernel masks each query once
         # (ADVICE r13 #3 — the per-(query, cell) entries also pickled
@@ -2575,14 +2577,7 @@ def ivfpq_search_residual(
         for cell in order[:nprobe]:
             # residual LUTs differ per probed cell — 1-element lists
             qres = x - cmat[cell]
-            lut = np.stack(
-                [
-                    (qres[lo - 1 : lo - 1 + w] ** 2).sum()
-                    + norms[s]
-                    - 2 * (mats[s] @ qres[lo - 1 : lo - 1 + w])
-                    for s, (lo, w) in enumerate(geom)
-                ]
-            )
+            lut = _pq_lut(qres, mats, norms, geom)
             entries.append((int(r["vec_id"]), [int(cell)], lut))
     # the residual codes frame already carries its coarse cell id, so
     # probe matching, per-(query, cell) LUT gather and the local top-k

@@ -118,38 +118,17 @@ def payload_rows_stream(
 ) -> DataFrame:
     """(cell, vec_id, qvec, qnorm) serving-complete payload rows from a
     STREAMING embedding source against FROZEN coarse centroids — one
-    map-only Arrow pass per micro-batch: quantize, exact-int64 argmin
-    cell assignment (identical tie-break to the batch kernel), exact
-    integer self-dot for the cosine norm."""
-    import numpy as np
-
+    map-only pass per micro-batch: quantize, exact integer self-dot for
+    the cosine norm, and the batch build's exact-int64 argmin kernel
+    (_assign_cells_passthrough: same tie-break, NULL embeddings
+    dropped). The batch twin is ann_serving.ivf_payload_frame, minus
+    its batch-only fan-out repartition."""
     d = SPARK
     qv = stream_vecs.select(
         "vec_id", F.expr(d.quantize_vec(vec_col, Q_SCALE)).alias("qvec")
-    )
-    cmat = np.asarray(centroids, dtype=np.int64)
-    cnorm = (cmat * cmat).sum(axis=1)
-
-    def kernel(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.asarray(list(pdf["qvec"]), dtype=np.int64)
-            xnorm = (x * x).sum(axis=1)
-            d2 = xnorm[:, None] + cnorm[None, :] - 2 * (x @ cmat.T)
-            yield pd.DataFrame(
-                {
-                    "cell": d2.argmin(axis=1),  # first-min → lower cid
-                    "vec_id": pdf["vec_id"],
-                    "qvec": pdf["qvec"],
-                    "qnorm": xnorm,
-                }
-            )
-
-    out = qv.mapInPandas(
-        kernel, "cell long, vec_id long, qvec array<long>, qnorm long"
+    ).withColumn("qnorm", F.expr(d.dot_q("qvec", "qvec")))
+    out = _assign_cells_passthrough(qv, centroids).select(
+        "cell", "vec_id", "qvec", "qnorm"
     )
     if include_binary:
         # the packed sign words are a pure stateless expression over

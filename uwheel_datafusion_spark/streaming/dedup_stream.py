@@ -39,13 +39,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uwheel_datafusion_spark.functions.dialect import SPARK
-from uwheel_datafusion_spark.streaming.wheel_stream import (
-    _load_state,
-    _persist_state,
-)
+from uwheel_datafusion_spark.streaming.wheel_stream import _DriverFoldStream
 
 
-class StreamingExactDedup:
+class StreamingExactDedup(_DriverFoldStream):
     """digest → (canonical_id, n_docs) from a document stream.
 
     ``canonical_id`` is the MINIMUM doc_id ever seen for the digest —
@@ -59,9 +56,9 @@ class StreamingExactDedup:
     object resuming the same checkpoint receives correct cumulative
     totals for every digest later batches touch. What a bare restart
     loses is the driver dict's rows for digests never touched again —
-    pass ``state_dir`` to persist/restore the dict itself (atomic
-    epoch-guarded snapshots shared with StreamingWheel) and close that
-    gap.
+    pass ``state_dir`` to persist/restore the dict itself (the
+    epoch-guarded lifecycle shared with StreamingWheel,
+    wheel_stream._DriverFoldStream) and close that gap.
     """
 
     def __init__(
@@ -71,11 +68,7 @@ class StreamingExactDedup:
         text_col: str = "text",
     ) -> None:
         self.store: dict[str, tuple[int, int]] = {}
-        self._last_epoch = -1
-        self._state_dir: str | None = None
-        self._checkpoint: str | None = None
-        self._query = None
-        self._agg = (
+        self._stream = (
             stream_df.select(
                 F.col(id_col).alias("doc_id"),
                 F.expr(SPARK.md5(text_col)).alias("text_md5"),
@@ -87,47 +80,12 @@ class StreamingExactDedup:
             )
         )
 
-    # -- sink -------------------------------------------------------------
+    def _state(self) -> dict:
+        return self.store
 
-    def _apply_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= self._last_epoch:
-            return  # replayed epoch: effects already persisted
-        # update mode: rows carry the CURRENT total per touched digest —
-        # replacement upsert, idempotent by construction
-        for r in batch_df.collect():
-            self.store[r.text_md5] = (r.canonical_id, r.n_docs)
-        self._last_epoch = epoch_id
-        if self._state_dir:
-            _persist_state(
-                self._state_dir,
-                dict(self.store),
-                epoch_id,
-                checkpoint=self._checkpoint,
-            )
-
-    def start(self, checkpoint_dir: str, state_dir: str | None = None):
-        self._checkpoint = checkpoint_dir
-        self._state_dir = state_dir
-        if state_dir:
-            st = _load_state(state_dir, checkpoint=checkpoint_dir)
-            if st is not None:
-                self.store = dict(st["slots"])
-                self._last_epoch = st["epoch"]
-        self._query = (
-            self._agg.writeStream.outputMode("update")
-            .foreachBatch(self._apply_batch)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-        return self._query
-
-    def process_available(self) -> None:
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+    @staticmethod
+    def _entry(r):
+        return r.text_md5, (r.canonical_id, r.n_docs)
 
     # -- serving ----------------------------------------------------------
 

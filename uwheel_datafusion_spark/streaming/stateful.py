@@ -49,6 +49,7 @@ from uwheel_datafusion_spark.functions.quant import (
     py_value_to_micros,
 )
 from uwheel_datafusion_spark.functions.time import ensure_event_time
+from uwheel_datafusion_spark.streaming.wheel_stream import _StreamQuery
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -134,7 +135,7 @@ def _make_sessionizer(gap_ms: int):
     return sessionize
 
 
-class StreamingSessionizer:
+class StreamingSessionizer(_StreamQuery):
     """Maintain per-user sessions from a streaming source; emit closed
     sessions to a driver list (production: any append sink)."""
 
@@ -165,7 +166,6 @@ class StreamingSessionizer:
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        self._query = None
 
     def start(self, checkpoint_dir: str):
         closed = self.closed
@@ -180,15 +180,6 @@ class StreamingSessionizer:
             .start()
         )
         return self._query
-
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
 
     def closed_sessions(self) -> list[dict]:
         """Closed sessions emitted so far, lowered to user columns."""

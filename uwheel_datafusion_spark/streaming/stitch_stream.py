@@ -55,6 +55,7 @@ from uwheel_datafusion_spark.functions.time import (
     MINUTE_MS,
     ensure_event_time,
 )
+from uwheel_datafusion_spark.streaming.wheel_stream import _StreamQuery
 
 #: buffered raw samples of one open bucket
 STATE_SCHEMA = StructType(
@@ -168,7 +169,7 @@ def _make_finalizer(family: str, slot_ms: int, keyed: bool):
     return fold
 
 
-class StreamingStitchWheel:
+class StreamingStitchWheel(_StreamQuery):
     """Maintain the TWA or counter minute rollup from a stream —
     unkeyed, or per-series with ``key_col`` (the streaming twin of
     build_[keyed_]twa_rollup / build_[keyed_]counter_rollup).
@@ -233,7 +234,6 @@ class StreamingStitchWheel:
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        self._query = None
 
     def start(self, checkpoint_dir: str, table_dir: str | None = None):
         """Without ``table_dir``: finalized partials land in the
@@ -282,15 +282,6 @@ class StreamingStitchWheel:
         )
         return self._query
 
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
-
     def snapshot_rollup(self, spark) -> DataFrame:
         """Finalized partials as the SAME frame the batch builder
         produces (area/inc as DECIMAL(38,0)) — ready for range_twa_df /
@@ -305,11 +296,8 @@ class StreamingStitchWheel:
                 else {"bucket_ms": k}
             )
             rows.append({**base, **d})
-        df = spark.createDataFrame(rows, self._out_schema_keyed_first())
+        df = spark.createDataFrame(rows, self._out_schema)
         return df.withColumn(acc, F.col(acc).cast("decimal(38,0)"))
-
-    def _out_schema_keyed_first(self) -> StructType:
-        return self._out_schema
 
     def table_rollup(self, spark, table_dir: str) -> DataFrame:
         """The table-sink rollup as the same serving-ready frame

@@ -25,19 +25,25 @@ Update output mode is used so each trigger emits the current total for
 every touched window — the upsert is therefore idempotent (exactly-once
 results under at-least-once delivery of micro-batches).
 
-LIFETIME CONTRACT (every wheel in this module): rollup state lives in
-a driver-side dict while the checkpoint marks micro-batches committed.
+LIFETIME CONTRACT (every driver-folded wheel, here and in
+dedup_stream): one shell, ``_DriverFoldStream``, owns the micro-batch
+lifecycle; a family supplies only its streaming frame, output mode,
+per-batch ``_fold`` and serving methods. Rollup state lives in a
+driver-side dict while the checkpoint marks micro-batches committed.
 After a driver RESTART the dict is empty but committed batches are NOT
 replayed — snapshots would silently undercount. Pass ``state_dir`` to
-``start()`` to make any wheel RESTART-SAFE: the sink persists the
-state atomically after every applied epoch (write-temp + rename,
-tagged with the epoch id), and a restarted wheel given the same
-(checkpoint_dir, state_dir) pair auto-restores and skips replayed
-epochs it already folded in — the transactional-foreachBatch pattern,
-required because the delta-merging wheels (MG) are not idempotent
-under epoch replay. Persist-then-commit ordering makes the state
-exactly-once: a crash after persist but before the checkpoint commit
-replays the epoch, and the epoch guard drops it. Without ``state_dir``
+``start()`` to make a wheel RESTART-SAFE: the sink persists the state
+atomically after every folded epoch (write-temp + rename, tagged with
+the epoch id and the checkpoint), and a restarted wheel given the same
+(checkpoint_dir, state_dir) pair restores it. Persist-then-commit
+ordering makes the state exactly-once: a crash after persist but
+before the checkpoint commit replays the epoch, and the epoch guard
+skips its fold — required because the delta-merging wheels (MG) are
+not idempotent under replay. The skipped batch is still DRAINED
+through a no-op write: an update-mode wheel's batch plan carries the
+streaming aggregation, and a replayed batch whose plan never runs
+fails the state-store commit check. ``start()`` resets the guard, so
+one object can be restarted on any checkpoint. Without ``state_dir``
 the wheels remain single-process (tests, notebooks, always-on serving)
 — or swap the sink body for a Delta/Iceberg MERGE keyed on the window;
 the serving side is unchanged either way.
@@ -257,7 +263,95 @@ class RollupStore:
         }
 
 
-class StreamingDistinctWheel:
+class _StreamQuery:
+    """The one running query of a streaming maintainer."""
+
+    _query = None
+
+    def process_available(self) -> None:
+        """Drain everything currently available (test/smoke path);
+        production runs with a processing-time trigger instead."""
+        assert self._query is not None, "call start() first"
+        self._query.processAllAvailable()
+
+    def stop(self) -> None:
+        if self._query is not None:
+            self._query.stop()
+            self._query = None
+
+
+class _DriverFoldStream(_StreamQuery):
+    """The micro-batch lifecycle of every driver-folded wheel (module
+    docstring, LIFETIME CONTRACT): restore, epoch guard, fold, persist.
+
+    A family sets ``_stream`` (its streaming frame) and ``_mode``, and
+    folds each micro-batch into ``_state()``. In ``update`` mode every
+    row is its slot's CURRENT partial, so the default ``_fold`` is a
+    replace-upsert of ``_entry(row)`` — idempotent by construction;
+    ``append`` families fold per-batch partials in their own ``_fold``."""
+
+    _mode = "update"
+    _last_epoch = -1
+
+    def start(self, checkpoint_dir: str, state_dir: str | None = None):
+        self._checkpoint, self._state_dir = checkpoint_dir, state_dir
+        self._last_epoch = self._resume()
+
+        def sink(batch_df: DataFrame, epoch_id: int) -> None:
+            if epoch_id <= self._last_epoch:
+                # replayed epoch already folded into the persisted state:
+                # skip the fold, but run the plan so its state commits
+                batch_df.write.format("noop").mode("overwrite").save()
+                return
+            self._fold(batch_df, epoch_id)
+            self._last_epoch = epoch_id
+            self._persist(epoch_id)
+
+        self._query = (
+            self._stream.writeStream.outputMode(self._mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .foreachBatch(sink)
+            .start()
+        )
+        return self._query
+
+    def _state(self) -> dict:
+        return self.slots
+
+    def _extra(self) -> dict | None:
+        return None
+
+    def _restore(self, st: dict) -> None:
+        self._state().update(st["slots"])
+
+    def _resume(self) -> int:
+        """Restore the ``state_dir`` snapshot; returns the last epoch
+        already folded in (-1: none)."""
+        st = (
+            _load_state(self._state_dir, self._checkpoint)
+            if self._state_dir is not None
+            else None
+        )
+        if st is None:
+            return -1
+        self._restore(st)
+        return st["epoch"]
+
+    def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
+        self._state().update(self._entry(r) for r in batch_df.collect())
+
+    def _persist(self, epoch_id: int) -> None:
+        if self._state_dir is not None:
+            _persist_state(
+                self._state_dir,
+                self._state(),
+                epoch_id,
+                self._extra(),
+                checkpoint=self._checkpoint,
+            )
+
+
+class StreamingDistinctWheel(_DriverFoldStream):
     """Streaming maintenance of the HLL distinct rollup — the
     distinct-count twin of StreamingWheel (operators/distinct is the
     batch side). The streaming aggregation keeps one HLL++ sketch per
@@ -280,49 +374,17 @@ class StreamingDistinctWheel:
         lg_k: int = 12,
     ) -> None:
         self.slots: dict[int, bytes] = {}  # bucket_ms → sketch binary
-        self._last_epoch = -1
-        self._agg = (
+        self._stream = (
             ensure_event_time(stream_df, ts_col)
             .withWatermark(ts_col, watermark_delay)
             .groupBy(F.window(ts_col, "1 minute").alias("w"))
             .agg(F.hll_sketch_agg(key_col, lg_k).alias("hll"))
             .select(ts_to_ms(F.col("w.start")).alias("bucket_ms"), "hll")
         )
-        self._query = None
 
-    def start(self, checkpoint_dir: str, state_dir: str | None = None):
-        slots = self.slots
-        if state_dir is not None:
-            st = _load_state(state_dir, checkpoint_dir)
-            if st is not None:
-                slots.update(st["slots"])
-                self._last_epoch = st["epoch"]
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if state_dir is not None and epoch_id <= self._last_epoch:
-                return  # replayed epoch already folded into the state
-            for r in batch_df.collect():
-                slots[r["bucket_ms"]] = bytes(r["hll"])
-            if state_dir is not None:
-                self._last_epoch = epoch_id
-                _persist_state(state_dir, slots, epoch_id, checkpoint=checkpoint_dir)
-
-        self._query = (
-            self._agg.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        return self._query
-
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+    @staticmethod
+    def _entry(r):
+        return r["bucket_ms"], bytes(r["hll"])
 
     def snapshot_rollup(self, spark) -> DataFrame:
         """Freeze the maintained sketches into the same
@@ -333,7 +395,7 @@ class StreamingDistinctWheel:
         )
 
 
-class StreamingBottomKWheel:
+class StreamingBottomKWheel(_DriverFoldStream):
     """Streaming maintenance of the bottom-k sample rollup
     (operators/bottomk is the batch side). Each micro-batch computes
     its OWN bottom-k partial per touched minute slot (≤ k rows/slot,
@@ -352,6 +414,8 @@ class StreamingBottomKWheel:
     (bucket_ms, h, key) with a per-slot rank re-truncation; serving
     (range_sample_df / cascade_bottomk) is identical either way."""
 
+    _mode = "append"
+
     def __init__(
         self,
         stream_df: DataFrame,
@@ -366,59 +430,25 @@ class StreamingBottomKWheel:
         self.k = k
         #: bucket_ms → ascending-sorted list of (h, key), ≤ k entries
         self.slots: dict[int, list[tuple[int, int]]] = {}
-        self._last_epoch = -1
-        self._pairs = stream_df.select(
+        self._stream = stream_df.select(
             bucket_ms(ts_to_ms(F.col(ts_col)), slot_ms).alias("bucket_ms"),
             F.col(key_col).cast("long").alias("key"),
         ).withColumn("h", F.expr(_mix_sql("key")))
-        self._query = None
 
     def _merge(self, bucket: int, pairs) -> None:
         cur = set(self.slots.get(bucket, ()))
         cur.update(pairs)
         self.slots[bucket] = sorted(cur)[: self.k]
 
-    def start(self, checkpoint_dir: str, state_dir: str | None = None):
+    def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
         from uwheel_datafusion_spark.operators.bottomk import _ranked_bottomk
 
-        k = self.k
-        if state_dir is not None:
-            st = _load_state(state_dir, checkpoint_dir)
-            if st is not None:
-                self.slots.update(st["slots"])
-                self._last_epoch = st["epoch"]
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if state_dir is not None and epoch_id <= self._last_epoch:
-                return  # replayed epoch already folded into the state
-            part = _ranked_bottomk(batch_df.distinct(), k)
-            merged: dict[int, list] = {}
-            for r in part.collect():  # ≤ k rows per touched slot
-                merged.setdefault(r["bucket_ms"], []).append(
-                    (r["h"], r["key"])
-                )
-            for bucket, pairs in merged.items():
-                self._merge(bucket, pairs)
-            if state_dir is not None:
-                self._last_epoch = epoch_id
-                _persist_state(state_dir, self.slots, epoch_id, checkpoint=checkpoint_dir)
-
-        self._query = (
-            self._pairs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        return self._query
-
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+        part = _ranked_bottomk(batch_df.distinct(), self.k)
+        merged: dict[int, list] = {}
+        for r in part.collect():  # ≤ k rows per touched slot
+            merged.setdefault(r["bucket_ms"], []).append((r["h"], r["key"]))
+        for bucket, pairs in merged.items():
+            self._merge(bucket, pairs)
 
     def snapshot_rollup(self, spark) -> DataFrame:
         """Freeze the maintained samples into the same
@@ -433,7 +463,7 @@ class StreamingBottomKWheel:
         return spark.createDataFrame(rows, "bucket_ms long, key long, h long")
 
 
-class StreamingMGWheel:
+class StreamingMGWheel(_DriverFoldStream):
     """Streaming maintenance of the Misra-Gries heavy-hitter rollup
     (operators/mgsketch is the batch side), by the mergeable-summaries
     composition (Agarwal et al., PODS'12): each micro-batch truncates
@@ -450,9 +480,15 @@ class StreamingMGWheel:
     so the budget multiplier is small and checkable (pinned in
     tests/test_streaming).
 
+    The merge folds per-batch DELTAS (counts add), so the epoch guard
+    is correctness here, not hygiene: a replayed epoch would otherwise
+    double-count.
+
     At scale the sink MERGEs into a Delta/Iceberg rollup keyed on
     (bucket_ms, key) with the same re-truncation; serving is identical
     either way."""
+
+    _mode = "append"
 
     def __init__(
         self,
@@ -467,16 +503,14 @@ class StreamingMGWheel:
         self.m = m
         #: bucket_ms → ({key: cnt}, bound)
         self.slots: dict[int, tuple[dict[int, int], int]] = {}
-        self._last_epoch = -1
         # NO streaming aggregation here: an update-mode streaming
         # groupBy would emit CUMULATIVE counts per trigger and the MG
         # merge needs per-batch DELTAS — the sink aggregates each
         # micro-batch itself (the StreamingBottomKWheel pattern)
-        self._pairs = ensure_event_time(stream_df, ts_col).select(
+        self._stream = ensure_event_time(stream_df, ts_col).select(
             bucket_ms(ts_to_ms(F.col(ts_col)), slot_ms).alias("bucket_ms"),
             F.expr(key_sql).cast("long").alias("key"),
         )
-        self._query = None
 
     def _merge(self, bucket: int, new_counts: dict, new_bound: int) -> None:
         cur_counts, cur_bound = self.slots.get(bucket, ({}, 0))
@@ -491,57 +525,23 @@ class StreamingMGWheel:
             ranked = ranked[: self.m]
         self.slots[bucket] = (dict(ranked), bound)
 
-    def start(self, checkpoint_dir: str, state_dir: str | None = None):
+    def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
         from uwheel_datafusion_spark.operators.mgsketch import _truncate_to_mg
 
-        m = self.m
-        if state_dir is not None:
-            st = _load_state(state_dir, checkpoint_dir)
-            if st is not None:
-                self.slots.update(st["slots"])
-                self._last_epoch = st["epoch"]
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            # the epoch guard is CORRECTNESS here, not hygiene: the MG
-            # merge folds per-batch DELTAS (counts add), so an epoch
-            # replayed after a crash-between-persist-and-commit would
-            # double-count without it
-            if state_dir is not None and epoch_id <= self._last_epoch:
-                return
-            # aggregate THIS batch's pairs, then cluster-side MG
-            # truncation: the collect is ≤ m rows per touched slot,
-            # never the batch's raw key set
-            counts_df = batch_df.groupBy("bucket_ms", "key").agg(
-                F.count(F.lit(1)).alias("cnt")
-            )
-            part = _truncate_to_mg(counts_df, m, F.lit(0))
-            per_slot: dict[int, tuple[dict, int]] = {}
-            for r in part.collect():
-                counts, _ = per_slot.setdefault(r["bucket_ms"], ({}, 0))
-                counts[r["key"]] = r["cnt"]
-                per_slot[r["bucket_ms"]] = (counts, r["bound"])
-            for bucket, (counts, bound) in per_slot.items():
-                self._merge(bucket, counts, bound)
-            if state_dir is not None:
-                self._last_epoch = epoch_id
-                _persist_state(state_dir, self.slots, epoch_id, checkpoint=checkpoint_dir)
-
-        self._query = (
-            self._pairs.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(sink)
-            .start()
+        # aggregate THIS batch's pairs, then cluster-side MG truncation:
+        # the collect is ≤ m rows per touched slot, never the batch's
+        # raw key set
+        counts_df = batch_df.groupBy("bucket_ms", "key").agg(
+            F.count(F.lit(1)).alias("cnt")
         )
-        return self._query
-
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+        part = _truncate_to_mg(counts_df, self.m, F.lit(0))
+        per_slot: dict[int, tuple[dict, int]] = {}
+        for r in part.collect():
+            counts, _ = per_slot.setdefault(r["bucket_ms"], ({}, 0))
+            counts[r["key"]] = r["cnt"]
+            per_slot[r["bucket_ms"]] = (counts, r["bound"])
+        for bucket, (counts, bound) in per_slot.items():
+            self._merge(bucket, counts, bound)
 
     def snapshot_rollup(self, spark) -> DataFrame:
         """Freeze into the same ``(bucket_ms, key, cnt, bound)`` frame
@@ -558,7 +558,7 @@ class StreamingMGWheel:
         )
 
 
-class StreamingHistogramWheel:
+class StreamingHistogramWheel(_DriverFoldStream):
     """Streaming maintenance of the equi-width histogram rollup
     (operators/quantile_rollup is the batch side) — the quantile
     family's mergeable partial is a plain additive (bucket, bin) count,
@@ -582,8 +582,7 @@ class StreamingHistogramWheel:
         bin_width: float = 1.0,
     ) -> None:
         self.slots: dict[tuple[int, int], int] = {}  # (bucket_ms, bin) → cnt
-        self._last_epoch = -1
-        self._agg = (
+        self._stream = (
             ensure_event_time(stream_df, ts_col)
             .withWatermark(ts_col, watermark_delay)
             .select(
@@ -598,41 +597,10 @@ class StreamingHistogramWheel:
                 ts_to_ms(F.col("w.start")).alias("bucket_ms"), "bin", "cnt"
             )
         )
-        self._query = None
 
-    def start(self, checkpoint_dir: str, state_dir: str | None = None):
-        slots = self.slots
-        if state_dir is not None:
-            st = _load_state(state_dir, checkpoint_dir)
-            if st is not None:
-                slots.update(st["slots"])
-                self._last_epoch = st["epoch"]
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if state_dir is not None and epoch_id <= self._last_epoch:
-                return  # replayed epoch already folded into the state
-            for r in batch_df.collect():
-                slots[(r["bucket_ms"], r["bin"])] = r["cnt"]
-            if state_dir is not None:
-                self._last_epoch = epoch_id
-                _persist_state(state_dir, slots, epoch_id, checkpoint=checkpoint_dir)
-
-        self._query = (
-            self._agg.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        return self._query
-
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+    @staticmethod
+    def _entry(r):
+        return (r["bucket_ms"], r["bin"]), r["cnt"]
 
     def snapshot_rollup(self, spark) -> DataFrame:
         """Freeze the maintained counts into the same
@@ -643,7 +611,7 @@ class StreamingHistogramWheel:
         return spark.createDataFrame(rows, "bucket_ms long, bin long, cnt long")
 
 
-class StreamingOHLCWheel:
+class StreamingOHLCWheel(_DriverFoldStream):
     """Streaming maintenance of the OHLC candle rollup
     (operators/ohlc is the batch side) — the aggregator whose partial
     CARRIES ITS OWN TIMESTAMP: open/close don't combine by sum, the
@@ -669,11 +637,10 @@ class StreamingOHLCWheel:
     ) -> None:
         #: bucket_ms → (open_ts_ms, open, high, low, close_ts_ms, close, cnt)
         self.slots: dict[int, tuple] = {}
-        self._last_epoch = -1
         ms = ts_to_ms(F.col(ts_col))
         v = F.col(value_col).cast("double")
         key = F.struct(ms.alias("t"), v.alias("v"))
-        self._agg = (
+        self._stream = (
             ensure_event_time(stream_df, ts_col)
             .withWatermark(ts_col, watermark_delay)
             .select(
@@ -695,49 +662,10 @@ class StreamingOHLCWheel:
             .select(ts_to_ms(F.col("w.start")).alias("bucket_ms"), "*")
             .drop("w")
         )
-        self._query = None
 
-    def start(self, checkpoint_dir: str, state_dir: str | None = None):
-        slots = self.slots
-        if state_dir is not None:
-            st = _load_state(state_dir, checkpoint_dir)
-            if st is not None:
-                slots.update(st["slots"])
-                self._last_epoch = st["epoch"]
-
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if state_dir is not None and epoch_id <= self._last_epoch:
-                return  # replayed epoch already folded into the state
-            for r in batch_df.collect():
-                slots[r["bucket_ms"]] = (
-                    r["open_ts_ms"],
-                    r["open"],
-                    r["high"],
-                    r["low"],
-                    r["close_ts_ms"],
-                    r["close"],
-                    r["cnt"],
-                )
-            if state_dir is not None:
-                self._last_epoch = epoch_id
-                _persist_state(state_dir, slots, epoch_id, checkpoint=checkpoint_dir)
-
-        self._query = (
-            self._agg.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        return self._query
-
-    def process_available(self) -> None:
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
+    @staticmethod
+    def _entry(r):
+        return r["bucket_ms"], tuple(r)[1:]  # the candle, in slot order
 
     def snapshot_rollup(self, spark) -> DataFrame:
         """Freeze the maintained candles into the same partial frame
@@ -751,7 +679,7 @@ class StreamingOHLCWheel:
         )
 
 
-class StreamingWheel:
+class StreamingWheel(_DriverFoldStream):
     """Maintain the minute rollup from a streaming source — unkeyed, or
     per-series when ``key_col`` is given (the streaming twin of
     KeyedWheelIndex: state is keyed by (series, window), the sink
@@ -767,16 +695,14 @@ class StreamingWheel:
         key_col: str | None = None,
     ) -> None:
         self.store = store if store is not None else RollupStore()
-        self._last_epoch = -1
         self._late_batch = -1  # last batchId whose late rows were counted
-        self._delay = watermark_delay
         self.key_col = key_col
         group_cols = [F.window(ts_col, "1 minute").alias("w")]
         out_cols = [ts_to_ms(F.col("w.start")).alias("bucket_ms")]
         if key_col is not None:
             group_cols.append(F.col(key_col).alias("key"))
             out_cols.insert(0, F.col("key"))
-        self._agg = (
+        self._stream = (
             ensure_event_time(stream_df, ts_col)
             .withWatermark(ts_col, watermark_delay)
             .groupBy(*group_cols)
@@ -794,7 +720,6 @@ class StreamingWheel:
                 "max_value",
             )
         )
-        self._query = None
 
     def start(
         self,
@@ -826,106 +751,89 @@ class StreamingWheel:
         structural here). Serving reads manifest_rollup_read; folding
         is manifest_rollup_compact + manifest_vacuum. No data rename
         ever happens — the S3A-safe sink shape."""
-        store = self.store
-        if state_dir is not None:
-            st = _load_state(state_dir, checkpoint_dir)
-            if st is not None:
-                store.slots.update(st["slots"])
-                store.n_late_rows += st.get("late", 0)
-                self._last_epoch = st["epoch"]
-        if table_dir is not None:
-            meta = _load_sink_meta(
-                self._agg.sparkSession, table_dir, checkpoint_dir
-            )
-            if meta is not None:
-                self._last_epoch = max(self._last_epoch, meta["epoch"])
-        if manifest_root is not None:
+        self._table_dir, self._manifest_root = table_dir, manifest_root
+        self._late_batch = -1  # a new query reports only its own batches
+        return super().start(checkpoint_dir, state_dir)
+
+    def _state(self) -> dict:
+        return self.store.slots
+
+    def _extra(self) -> dict:
+        return {"late": self.store.n_late_rows}
+
+    def _restore(self, st: dict) -> None:
+        super()._restore(st)
+        self.store.n_late_rows += st.get("late", 0)
+
+    def _resume(self) -> int:
+        """The last epoch EVERY configured sink holds (each marker is
+        checkpoint-checked): an epoch replayed past the laggard is
+        folded into all of them again, which their replace-upserts and
+        the manifest's own epoch check absorb."""
+        epochs = [super()._resume()] if self._state_dir is not None else []
+        spark = self._stream.sparkSession
+        if self._table_dir is not None:
+            meta = _load_sink_meta(spark, self._table_dir, self._checkpoint)
+            epochs.append(-1 if meta is None else meta["epoch"])
+        if self._manifest_root is not None:
             from uwheel_datafusion_spark.operators.manifest import (
                 manifest_latest,
             )
 
-            snap = manifest_latest(self._agg.sparkSession, manifest_root)
-            if snap is not None:
-                saved = snap.extra.get("checkpoint")
-                if saved is not None and saved != checkpoint_dir:
-                    raise ValueError(
-                        f"rollup manifest {manifest_root!r} was "
-                        f"maintained under checkpoint {saved!r} but is "
-                        f"being resumed under {checkpoint_dir!r}"
-                    )
-                self._last_epoch = max(
-                    self._last_epoch, int(snap.extra.get("epoch", -1))
+            snap = manifest_latest(spark, self._manifest_root)
+            extra = {} if snap is None else snap.extra
+            saved = extra.get("checkpoint")
+            if saved is not None and saved != self._checkpoint:
+                raise ValueError(
+                    f"rollup manifest {self._manifest_root!r} was "
+                    f"maintained under checkpoint {saved!r} but is "
+                    f"being resumed under {self._checkpoint!r}"
                 )
-        guarded = (
-            state_dir is not None
-            or table_dir is not None
-            or manifest_root is not None
-        )
+            epochs.append(int(extra.get("epoch", -1)))
+        return min(epochs, default=-1)
+
+    def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
         key_cols = (
             ("key", "bucket_ms") if self.key_col is not None else ("bucket_ms",)
         )
+        if self._manifest_root is not None:
+            from uwheel_datafusion_spark.operators.rollup_io import (
+                manifest_rollup_append,
+            )
 
-        def sink(batch_df: DataFrame, epoch_id: int) -> None:
-            if guarded and epoch_id <= self._last_epoch:
-                return  # replayed epoch already folded into the state
-            if manifest_root is not None:
-                from uwheel_datafusion_spark.operators.rollup_io import (
-                    manifest_rollup_append,
-                )
+            manifest_rollup_append(
+                batch_df.sparkSession,
+                self._manifest_root,
+                batch_df,
+                key_cols,
+                epoch=epoch_id,
+                checkpoint=self._checkpoint,
+            )
+        if self._table_dir is not None:
+            from uwheel_datafusion_spark.operators.rollup_io import (
+                upsert_rollup,
+            )
 
-                manifest_rollup_append(
-                    batch_df.sparkSession,
-                    manifest_root,
-                    batch_df,
-                    key_cols,
-                    epoch=epoch_id,
-                    checkpoint=checkpoint_dir,
-                )
-                self._last_epoch = epoch_id
-            if table_dir is not None:
-                from uwheel_datafusion_spark.operators.rollup_io import (
-                    upsert_rollup,
-                )
+            upsert_rollup(
+                batch_df.sparkSession, self._table_dir, batch_df, key_cols
+            )
+        if (
+            self._table_dir is None and self._manifest_root is None
+        ) or self._state_dir is not None:
+            self.store.upsert(batch_df.collect())
 
-                upsert_rollup(
-                    batch_df.sparkSession, table_dir, batch_df, key_cols
-                )
-            if (
-                table_dir is None and manifest_root is None
-            ) or state_dir is not None:
-                store.upsert(batch_df.collect())
-            if guarded:
-                self._last_epoch = epoch_id
-                if state_dir is not None:
-                    _persist_state(
-                        state_dir,
-                        store.slots,
-                        epoch_id,
-                        {"late": store.n_late_rows},
-                        checkpoint=checkpoint_dir,
-                    )
-                if table_dir is not None:
-                    _persist_sink_meta(
-                        batch_df.sparkSession,
-                        table_dir,
-                        epoch_id,
-                        checkpoint_dir,
-                    )
-
-        self._late_batch = -1  # a new query reports only its own batches
-        self._query = (
-            self._agg.writeStream.outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(sink)
-            .start()
-        )
-        return self._query
+    def _persist(self, epoch_id: int) -> None:
+        super()._persist(epoch_id)
+        if self._table_dir is not None:
+            _persist_sink_meta(
+                self._stream.sparkSession,
+                self._table_dir,
+                epoch_id,
+                self._checkpoint,
+            )
 
     def process_available(self) -> None:
-        """Drain everything currently available (test/smoke path);
-        production runs with a processing-time trigger instead."""
-        assert self._query is not None, "call start() first"
-        self._query.processAllAvailable()
+        super().process_available()
         self._harvest_late_metric()
 
     def _harvest_late_metric(self) -> None:
@@ -944,11 +852,6 @@ class StreamingWheel:
                     )
         except Exception:
             pass
-
-    def stop(self) -> None:
-        if self._query is not None:
-            self._query.stop()
-            self._query = None
 
     # serving --------------------------------------------------------------
 
