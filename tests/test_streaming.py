@@ -17,7 +17,7 @@ from uwheel_datafusion_spark.operators.wheel import WheelIndex
 from uwheel_datafusion_spark.sources.registry import load_table
 from uwheel_datafusion_spark.streaming.wheel_stream import StreamingWheel
 
-from datetime import datetime
+from datetime import datetime, timedelta
 
 WM = to_epoch_ms(datetime(2024, 1, 1))
 ADV = to_epoch_ms(datetime(2024, 2, 1))
@@ -100,14 +100,13 @@ def test_streaming_drops_late_rows(spark, tmp_path):
     lm = idx.landmark()
     assert lm["cnt"] == 3  # the late 100.0 row is NOT in the index
     assert lm["sum"] == 6.0
-    assert sw.store.n_late_rows >= 1
+    assert sw.store.n_late_rows == 1
 
 
 def test_late_row_counter_counts_each_batch_once(spark, tmp_path):
-    """``n_late_rows`` reports Spark's ``numRowsDroppedByWatermark``:
-    the stateful operator's input rows, which are partial aggregates —
-    5 late rows in one minute of one file count 1. Every micro-batch is
-    counted once, however many ``process_available()`` calls follow."""
+    """``n_late_rows`` counts late SOURCE rows — 5 late rows in one
+    minute of one file count 5. Every micro-batch is counted once,
+    however many ``process_available()`` calls follow."""
     src = str(tmp_path / "late_once")
     os.makedirs(src)
 
@@ -140,7 +139,7 @@ def test_late_row_counter_counts_each_batch_once(spark, tmp_path):
     sw.process_available()  # nothing new: nothing re-counted
     seen.append(sw.store.n_late_rows)
     sw.stop()
-    assert seen == [0, 1, 1, 1]
+    assert seen == [0, 5, 5, 5]
     assert sw.snapshot_index(WM, ADV).landmark()["cnt"] == 4
 
 
@@ -972,7 +971,7 @@ def _crash_cases():
 @pytest.mark.parametrize(
     "kind",
     ["distinct", "bottomk", "mg", "histogram", "ohlc", "wheel", "dedup",
-     "wheel_table"],
+     "wheel_table", "wheel_manifest"],
 )
 def test_crash_replay_resumes_every_wheel(
     spark, tmp_path, uncommit_last_batch, kind
@@ -980,18 +979,18 @@ def test_crash_replay_resumes_every_wheel(
     """A crash after the sink persisted an epoch but before Spark
     committed it replays that epoch on restart. The epoch guard skips
     the fold but still runs the batch's plan, so a fresh object on the
-    same (checkpoint, state_dir) — or table_dir — resumes and ends with
-    the slots of one uninterrupted run. Skipping the plan as well made
-    every update-mode wheel die with STATE_STORE_COMMIT_VALIDATION_FAILED."""
-    make, state_of = _crash_cases()[kind.replace("_table", "")]
+    same (checkpoint, state_dir) — or table_dir, or manifest_root —
+    resumes and ends with the slots of one uninterrupted run. Skipping
+    the plan as well made every update-mode wheel die with
+    STATE_STORE_COMMIT_VALIDATION_FAILED."""
+    make, state_of = _crash_cases()[kind.partition("_")[0]]
     src = str(tmp_path / "in")
     ckpt = str(tmp_path / "ckpt")
     table = str(tmp_path / "table")
-    sink = (
-        {"table_dir": table}
-        if kind == "wheel_table"
-        else {"state_dir": str(tmp_path / "state")}
-    )
+    sink = {
+        "wheel_table": {"table_dir": table},
+        "wheel_manifest": {"manifest_root": table},
+    }.get(kind, {"state_dir": str(tmp_path / "state")})
 
     def run(checkpoint, **kw):
         w = make(
@@ -1011,18 +1010,28 @@ def test_crash_replay_resumes_every_wheel(
     _crash_file(src, 2)
     resumed = run(ckpt, **sink)
     whole = state_of(run(str(tmp_path / "whole_ckpt")))
-    if kind == "wheel_table":
-        from uwheel_datafusion_spark.operators.rollup_io import load_rollup
-
-        got = {
-            r["bucket_ms"]: (
-                r["sum_micros"], r["cnt"], r["min_value"], r["max_value"]
-            )
-            for r in load_rollup(spark, table).collect()
-        }
-    else:
-        got = state_of(resumed)
+    got = (
+        _sink_slots(spark, sink) if kind.startswith("wheel_")
+        else state_of(resumed)
+    )
     assert whole and got == whole
+
+
+def _sink_slots(spark, sink):
+    """The minute slots a StreamingWheel table or manifest sink holds."""
+    from uwheel_datafusion_spark.operators.rollup_io import (
+        load_rollup,
+        manifest_rollup_read,
+    )
+
+    if "table_dir" in sink:
+        df = load_rollup(spark, sink["table_dir"])
+    else:
+        df = manifest_rollup_read(spark, sink["manifest_root"])
+    return {
+        r["bucket_ms"]: (r["sum_micros"], r["cnt"], r["min_value"], r["max_value"])
+        for r in df.collect()
+    }
 
 
 def test_crash_between_sinks_refolds_the_lagging_sink(
@@ -1078,6 +1087,323 @@ def test_crash_between_sinks_refolds_the_lagging_sink(
         for r in manifest_rollup_read(spark, root).collect()
     }
     assert len(table) == 4 and w.store.slots == table
+
+
+def test_table_crash_between_swap_and_marker_refolds(
+    spark, tmp_path, monkeypatch
+):
+    """Table-only StreamingWheel crashed after epoch 1's partition swap
+    but before its ``_sink_meta.json``: the restart restores the store
+    from the epoch-0 marker, refolds epoch 1 and rewrites its slots, so
+    the table equals one uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+
+    from uwheel_datafusion_spark.streaming import wheel_stream as ws
+
+    src = str(tmp_path / "in")
+    sink = {"table_dir": str(tmp_path / "table")}
+    persist = ws._persist_sink_meta
+
+    def crash_at_epoch_1(spark_, table_dir, epoch_id, *args):
+        if epoch_id == 1:
+            raise RuntimeError("crash between the partition swap and the marker")
+        persist(spark_, table_dir, epoch_id, *args)
+
+    def run(checkpoint, **kw):
+        w = StreamingWheel(
+            spark.readStream.schema(CRASH_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src),
+            "ts",
+            "value",
+        )
+        w.start(checkpoint, **kw)
+        w.process_available()
+        w.stop()
+        return w
+
+    _crash_file(src, 0)
+    _crash_file(src, 1)
+    monkeypatch.setattr(ws, "_persist_sink_meta", crash_at_epoch_1)
+    with pytest.raises(StreamingQueryException):
+        run(str(tmp_path / "ckpt"), **sink)
+    monkeypatch.undo()
+    run(str(tmp_path / "ckpt"), **sink)
+    whole = run(str(tmp_path / "whole_ckpt")).store.slots
+    assert len(whole) == 4 and _sink_slots(spark, sink) == whole
+
+
+LATE_SCHEMA = "ts timestamp, value double, k long"
+
+
+def _late_file(src, i, rows, mtime=None):
+    """File i of ``(datetime, value, key)`` rows; ``mtime`` fixes the
+    order in which the file source picks up files landed together."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    os.makedirs(src, exist_ok=True)
+    ts, val, key = zip(*rows)
+    path = os.path.join(src, f"part-{i}.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array(ts, pa.timestamp("us")),
+                "value": pa.array(val, pa.float64()),
+                "k": pa.array(key, pa.int64()),
+            }
+        ),
+        path,
+    )
+    if mtime is not None:
+        os.utime(path, (mtime, mtime))
+
+
+def _stateful_oracle(stream, delay, key_col, checkpoint):
+    """The stateful minute aggregate StreamingWheel used to run:
+    ``withWatermark`` + windowed ``groupBy`` in update mode, upserting
+    Spark's current totals; late drops are Spark's
+    ``numRowsDroppedByWatermark``, each batch counted once."""
+    from uwheel_datafusion_spark.functions.quant import value_to_micros
+
+    group = [F.window("ts", "1 minute").alias("w")]
+    slot = [ts_to_ms(F.col("w.start")).alias("bucket_ms")]
+    if key_col is not None:
+        group.append(F.col(key_col).alias("key"))
+        slot.insert(0, F.col("key"))
+    agg = (
+        stream.withWatermark("ts", delay)
+        .groupBy(*group)
+        .agg(
+            F.sum(value_to_micros(F.col("value"))).alias("sum_micros"),
+            F.count(F.lit(1)).alias("cnt"),
+            F.min("value").alias("min_value"),
+            F.max("value").alias("max_value"),
+        )
+        .select(*slot, "sum_micros", "cnt", "min_value", "max_value")
+    )
+    slots = {}
+    n = len(slot)
+
+    def sink(df, _epoch):
+        for r in df.collect():
+            slots[tuple(r[:n]) if n == 2 else r[0]] = tuple(r[n:])
+
+    q = (
+        agg.writeStream.outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .foreachBatch(sink)
+        .start()
+    )
+
+    def late():
+        batches = {p["batchId"]: p for p in q.recentProgress}
+        return sum(
+            int(op.get("numRowsDroppedByWatermark", 0))
+            for p in batches.values()
+            for op in p.get("stateOperators", [])
+        )
+
+    return q, slots, late
+
+
+def _late_stream(spark, src):
+    return (
+        spark.readStream.schema(LATE_SCHEMA)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+@pytest.mark.parametrize("key_col", [None, "k"])
+def test_late_rule_matches_spark_stateful_aggregate(spark, tmp_path, key_col):
+    """One ``process_available`` per file: the stateless fold keeps and
+    drops exactly the slots Spark's own stateful aggregate does — a
+    window ending AT the watermark is dropped, one ending a minute later
+    is kept — and counts the same late rows (one row per late slot, so
+    Spark's dropped partial aggregates are source rows)."""
+    src = str(tmp_path / "in")
+    t = lambda m, s=0: datetime(2024, 1, 1, 12, 0) + timedelta(minutes=m, seconds=s)  # noqa: E731
+    files = [
+        # max event 12:10 → watermark 12:00
+        [(t(0), 1.0, 1), (t(10), 2.0, 2)],
+        # [11:59, 12:00) ends at the watermark: dropped; [12:00, 12:01)
+        # is kept; [11:30, 11:31) dropped. Watermark → 12:10
+        [(t(-1, 30), 4.0, 1), (t(0, 30), 5.0, 1), (t(0, 40), 6.0, 2),
+         (t(-30), 7.0, 2), (t(20), 8.0, 1)],
+        # [12:09, 12:10) ends at the watermark: dropped
+        [(t(9, 59), 9.0, 1), (t(10, 30), 3.0, 2)],
+    ]
+    _late_file(src, 0, files[0])
+    w = StreamingWheel(
+        _late_stream(spark, src), "ts", "value",
+        watermark_delay="10 minutes", key_col=key_col,
+    )
+    w.start(str(tmp_path / "ckpt"))
+    q, oracle, oracle_late = _stateful_oracle(
+        _late_stream(spark, src), "10 minutes", key_col,
+        str(tmp_path / "oracle_ckpt"),
+    )
+    try:
+        for i, rows in enumerate(files):
+            if i:
+                _late_file(src, i, rows)
+            w.process_available()
+            q.processAllAvailable()
+    finally:
+        w.stop()
+        q.stop()
+    assert w.store.n_late_rows == oracle_late() == 3
+    assert w.store.slots == oracle and len(oracle) == (4 if key_col else 3)
+
+
+def test_late_rule_ignores_trigger_timing(spark, tmp_path):
+    """Files at minutes {0, 100}, {200} and {150, 50, 195}, 10-minute
+    delay. Landed together, Spark's stateful aggregate filters the third
+    file against the watermark of two batches back (90 min) and keeps
+    minute 150; the fold filters against the latest one (190 min) and
+    drops 150 and 50 whether the files land together or one trigger
+    apart."""
+    base = datetime(2024, 1, 1)
+    files = [
+        [(base + timedelta(minutes=m), float(m), 0) for m in ms]
+        for ms in ([0, 100], [200], [150, 50, 195])
+    ]
+    want = {
+        to_epoch_ms(base + timedelta(minutes=m)) for m in (0, 100, 200, 195)
+    }
+
+    def fold(tag, together):
+        src = str(tmp_path / tag)
+        for i, rows in enumerate(files[: 3 if together else 1]):
+            _late_file(src, i, rows, mtime=1_700_000_000 + i)
+        w = StreamingWheel(
+            _late_stream(spark, src), "ts", "value", watermark_delay="10 minutes"
+        )
+        w.start(str(tmp_path / f"{tag}_ckpt"))
+        w.process_available()
+        for i in range(1, 1 if together else 3):
+            _late_file(src, i, files[i])
+            w.process_available()
+        w.stop()
+        return w.store
+
+    for together in (True, False):
+        store = fold(f"fold_{together}", together)
+        assert set(store.slots) == want and store.n_late_rows == 2
+
+    q, oracle, oracle_late = _stateful_oracle(
+        _late_stream(spark, str(tmp_path / "fold_True")), "10 minutes", None,
+        str(tmp_path / "oracle_ckpt"),
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert set(oracle) == want | {to_epoch_ms(base + timedelta(minutes=150))}
+    assert oracle_late() == 1
+
+
+def test_streaming_merge_is_null_safe(spark, tmp_path):
+    """Spark's sum/min/max skip NULLs, so an all-NULL minute's partial
+    is (None, cnt, None, None). Merging it with a later 2.0 — and with
+    another all-NULL partial — must give the batch rollup's rows."""
+    src = str(tmp_path / "in")
+    m = lambda i: datetime(2024, 1, 1, 0, i)  # noqa: E731
+    files = [
+        [(m(0), None, 0), (m(1), None, 0), (m(2), 1.0, 0)],
+        [(m(0), 2.0, 0), (m(1), None, 0), (m(2), None, 0)],
+    ]
+    _late_file(src, 0, files[0])
+    w = StreamingWheel(_late_stream(spark, src), "ts", "value")
+    w.start(str(tmp_path / "ckpt"))
+    w.process_available()
+    _late_file(src, 1, files[1])
+    w.process_available()
+    w.stop()
+    batch = WheelIndex.build(
+        spark.read.schema(LATE_SCHEMA).parquet(src), "ts", "value", WM, ADV,
+        cache=False,
+    )
+    want = {
+        r["bucket_ms"]: (r["sum_micros"], r["cnt"], r["min_value"], r["max_value"])
+        for r in batch.rollups["minute"].collect()
+    }
+    assert w.store.slots == want
+    assert want[to_epoch_ms(m(0))] == (2_000_000, 2, 2.0, 2.0)
+    assert want[to_epoch_ms(m(1))] == (None, 2, None, None)
+
+
+_RESTART_FILES = [
+    # watermark → 2023-12-31 23:51:10
+    [(datetime(2024, 1, 1, 0, 0, 10), 1.0, 0),
+     (datetime(2024, 1, 1, 0, 1, 10), 2.0, 0)],
+    # one late row; watermark → 00:21:00
+    [(datetime(2023, 12, 31, 23, 50), 3.0, 0),
+     (datetime(2024, 1, 1, 0, 30), 4.0, 0),
+     (datetime(2024, 1, 1, 0, 31), 5.0, 0)],
+    # minute 5 is late only against the pre-restart watermark
+    [(datetime(2024, 1, 1, 0, 5), 6.0, 0),
+     (datetime(2024, 1, 1, 0, 29), 7.0, 0),
+     (datetime(2024, 1, 1, 0, 40), 8.0, 0)],
+]
+
+
+@pytest.fixture(scope="module")
+def uninterrupted_wheel(spark, tmp_path_factory):
+    """One uninterrupted in-memory run over ``_RESTART_FILES``."""
+    base = tmp_path_factory.mktemp("uninterrupted")
+    src = str(base / "in")
+    for i, rows in enumerate(_RESTART_FILES):
+        _late_file(src, i, rows, mtime=1_700_000_000 + i)
+    w = StreamingWheel(
+        _late_stream(spark, src), "ts", "value", watermark_delay="10 minutes"
+    )
+    w.start(str(base / "ckpt"))
+    w.process_available()
+    w.stop()
+    return w.store
+
+
+@pytest.mark.parametrize(
+    "party", ["save_load", "state_dir", "table_dir", "manifest_root"]
+)
+def test_watermark_survives_restart(spark, tmp_path, uninterrupted_wheel, party):
+    """Stop after two files, restart a FRESH object, then feed a row
+    that is late only against the pre-restart watermark: every place
+    the store is saved carries the watermark, so the result equals one
+    uninterrupted run — same slots, same late count."""
+    from uwheel_datafusion_spark.streaming.wheel_stream import RollupStore
+
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    saved = str(tmp_path / "saved")
+    sink = {} if party == "save_load" else {party: saved}
+
+    def run(store=None):
+        w = StreamingWheel(
+            _late_stream(spark, src), "ts", "value",
+            watermark_delay="10 minutes", store=store,
+        )
+        w.start(ckpt, **sink)
+        w.process_available()
+        w.stop()
+        return w
+
+    for i in (0, 1):
+        _late_file(src, i, _RESTART_FILES[i], mtime=1_700_000_000 + i)
+    first = run()
+    assert first.store.n_late_rows == 1
+    if party == "save_load":
+        first.store.save(saved)
+    _late_file(src, 2, _RESTART_FILES[2], mtime=1_700_000_002)
+    w = run(RollupStore.load(saved) if party == "save_load" else None)
+    slots = (
+        w.store.slots if party in ("save_load", "state_dir")
+        else _sink_slots(spark, sink)
+    )
+    assert slots == uninterrupted_wheel.slots
+    assert w.store.n_late_rows == uninterrupted_wheel.n_late_rows == 2
 
 
 def test_state_dir_checkpoint_mismatch_raises(tmp_path):

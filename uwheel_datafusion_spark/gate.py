@@ -1839,8 +1839,8 @@ def wheel_extend_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_keyed_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keyed streaming ingest, driver-gated: the per-series twin of
-    streaming_wheel_rollup_parity — state keyed by (series, window),
-    the sink upserts (key, bucket) partials; the store must match the
+    streaming_wheel_rollup_parity — slots keyed by (series, minute),
+    the sink merges (key, bucket) partials; the store must match the
     per-(event_type, minute) GROUP BY oracle exactly."""
     import shutil
     import tempfile
@@ -1894,8 +1894,8 @@ def streaming_wheel_rollup_parity(spark: SparkSession, sf_dir: str) -> DataFrame
     """Insert/advance stream parity, driver-gated (the reference's
     streaming ingest loop, /root/reference/src/main.rs:128-140): the
     events fixture is replayed as 4 time-ordered micro-batches through
-    a Structured Streaming windowed aggregation whose foreachBatch sink
-    upserts finalized minute slots into the rollup store; the store is
+    a Structured Streaming query whose foreachBatch sink merges each
+    micro-batch's minute partials into the rollup store; the store is
     then surfaced as the minute rollup and must hash-match the same
     DuckDB oracle as the BATCH-built wheel_rollup_minute — streaming
     and batch build the same index (A4/A5 equivalence, end-to-end
@@ -1955,8 +1955,8 @@ def streaming_table_sink_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming rollup maintained as a dt-partitioned parquet TABLE
     (the 100 TB sink shape), driver-gated end-to-end INCLUDING a
     kill-and-resume: chunk 1 of the events fixture streams through a
-    StreamingWheel whose foreachBatch MERGE-upserts current minute
-    partials into the table (rollup_io.upsert_rollup, per-partition
+    StreamingWheel whose foreachBatch MERGE-upserts the touched minute
+    slots' merged totals into the table (rollup_io.upsert_rollup, per-partition
     atomic swap + epoch guard in _sink_meta.json); the wheel is then
     KILLED and a FRESH object resumes from (same checkpoint, same
     table) for chunk 2 — nothing is restored driver-side, the table IS

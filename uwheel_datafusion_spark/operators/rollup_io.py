@@ -185,8 +185,9 @@ def upsert_rollup(
     staged to a temp dir, and swapped in with per-partition atomic
     renames. Crash safety: a torn swap is repaired on the next call
     (:func:`_recover_torn_partitions`); re-applying the same batch is
-    IDEMPOTENT (batch rows carry CURRENT totals under update output
-    mode), so an epoch replayed after a partial apply converges."""
+    IDEMPOTENT (batch rows carry each touched slot's merged TOTAL, as
+    StreamingWheel's driver store holds it), so an epoch replayed after
+    a partial apply converges."""
     _recover_torn_partitions(spark, path)
     tagged = batch.withColumn("dt", _dt_col())
     if not fs_exists(spark, path):
@@ -234,7 +235,7 @@ def upsert_rollup(
 # indexes: every micro-batch epoch publishes ONE immutable dt-
 # partitioned generation dir + ONE small-file commit; a slot's current
 # value is the row from the HIGHEST generation that carries its key
-# (update-mode batches emit CURRENT totals per slot, so
+# (each batch carries its touched slots' merged TOTALS, so
 # newest-generation-wins IS the MERGE). The epoch-replay guard and the
 # checkpoint-identity check ride the snapshot's ``extra`` — atomically
 # with the data, which the _sink_meta.json sidecar could not give
@@ -253,13 +254,16 @@ def manifest_rollup_append(
     epoch: "int | None" = None,
     checkpoint: "str | None" = None,
     note: str = "epoch",
+    extra: "dict | None" = None,
 ):
-    """Publish one micro-batch (CURRENT totals per slot key) as a new
-    rollup generation. Returns the committed Snapshot, or None when
-    ``epoch`` is ≤ the snapshot's recorded epoch (a replayed epoch —
-    the foreachBatch guard, now read from the commit log itself).
+    """Publish one micro-batch (merged TOTALS per touched slot key) as
+    a new rollup generation. Returns the committed Snapshot, or None
+    when ``epoch`` is ≤ the snapshot's recorded epoch (a replayed epoch
+    — the foreachBatch guard, now read from the commit log itself).
     Raises when the table was maintained under a different checkpoint
-    (epoch ids are only comparable within one checkpoint)."""
+    (epoch ids are only comparable within one checkpoint). ``extra``
+    keys ride the commit's ``extra`` atomically with the data (a
+    streaming maintainer's watermark)."""
     from uwheel_datafusion_spark.operators.manifest import (
         _commit_with_retry,
         _token,
@@ -293,8 +297,8 @@ def manifest_rollup_append(
     batch = batch.persist()
     try:
         if batch.isEmpty():
-            # update-mode triggers can fire with zero changed rows
-            # (e.g. a watermark-only advance); an empty generation dir
+            # a trigger can fire with zero changed rows (e.g. a
+            # watermark-only advance); an empty generation dir
             # would carry no parquet footer to read a schema from, and
             # there is nothing to commit — the epoch guard
             # intentionally stays put so a replay of the same empty
@@ -317,13 +321,13 @@ def manifest_rollup_append(
             # a concurrent commit already recorded this epoch
             raise _EpochReplayed
         dirs = (s.data_dirs if s else ()) + (dname,)
-        extra = dict(s.extra) if s else {}
-        extra["key_cols"] = list(key_cols)
+        commit_extra = {**(s.extra if s else {}), **(extra or {})}
+        commit_extra["key_cols"] = list(key_cols)
         if epoch is not None:
-            extra["epoch"] = int(epoch)
+            commit_extra["epoch"] = int(epoch)
         if checkpoint is not None:
-            extra["checkpoint"] = checkpoint
-        return dirs, (), note, extra
+            commit_extra["checkpoint"] = checkpoint
+        return dirs, (), note, commit_extra
 
     try:
         return _commit_with_retry(spark, root, mutate)

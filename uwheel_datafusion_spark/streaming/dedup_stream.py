@@ -8,7 +8,7 @@ Two streaming maintenance paths cover the batch tier's contracts:
     Streaming aggregation in update mode. Each trigger emits the
     CURRENT totals for every touched digest, so the foreachBatch
     upsert is idempotent (exactly-once results under at-least-once
-    micro-batch delivery — same contract as StreamingWheel). State is
+    micro-batch delivery — same contract as StreamingOHLCWheel). State is
     one row per distinct digest: the information-theoretic minimum
     for exact dedup, so there is deliberately no watermark eviction;
     bounded-memory approximations are the Bloom gate / LSH tiers

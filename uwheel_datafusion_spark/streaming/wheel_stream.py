@@ -1,29 +1,42 @@
 """Streaming wheel maintenance — µWheel's insert/advance as a
 Structured Streaming job (SURVEY §2.9, build-plan step 5).
 
-Semantics mapping (reference → Spark):
+Semantics mapping (reference → ``StreamingWheel``):
 
 - ``wheel.insert(entry)`` with out-of-order tolerance inside the
-  write-ahead horizon (/root/reference/src/main.rs:102,137) →
-  ``withWatermark(ts, delay)`` + windowed aggregation: the state store
-  buffers open windows, accepting disorder within the watermark delay.
-- late entries rejected below the low watermark [uwheel-pub] → rows
-  older than the event-time watermark are dropped by Spark; the count
-  is surfaced per micro-batch via ``numRowsDroppedByWatermark`` — the
-  observable late-drop metric (SURVEY §2.9).
+  write-ahead horizon (/root/reference/src/main.rs:102,137) → each
+  micro-batch aggregates its OWN minute partials (one stateless
+  ``groupBy``, collected: at most the touched slots), and the driver
+  merges them into the ``RollupStore`` with add / add / min / max. The
+  wheel is the state: Spark holds none (append mode, no
+  ``withWatermark``, no streaming aggregate, no state store).
+- late entries rejected below the low watermark [uwheel-pub] → the
+  store carries the event-time watermark: max event time (µs floored
+  to ms, as Spark's tracker takes it) of all EARLIER micro-batches
+  minus the delay, never moving back. A partial whose minute window
+  ends at or before it is dropped and its row count added to
+  ``n_late_rows`` — the exact number of late SOURCE rows (SURVEY §2.9).
 - ``wheel.advance(d)`` finalizing slots (/root/reference/src/main.rs:140)
-  → watermark progression per trigger; finalized window updates flow to
-  ``foreachBatch``, which upserts them into the rollup store.
+  → after each merge the watermark advances to the batch's max event
+  time minus the delay; a slot behind it is final.
 
-The micro-batch sink upserts (window → partial) rows into a driver
-store here; on a production cluster the same ``foreachBatch`` body
-would MERGE into a Delta/Iceberg rollup table — the serving side
+The late rule is Spark's own (a window is late iff its end ≤ the
+watermark; pinned against an inline stateful aggregate in
+tests/test_streaming.py) with one deliberate difference: Spark filters
+a batch's late rows against the watermark of the batch BEFORE the
+previous one when batches queue up back to back, and against the
+latest one when a no-data batch ran in between. Files at minutes
+{0, 100}, {200} and {150, 50, 195} with a 10-minute delay: landed
+together, Spark keeps minute 150 (filtered against 90); one trigger per
+file, Spark drops it (filtered against 190). This fold always filters
+against the latest watermark and drops it either way — answers no
+longer depend on trigger timing.
+
+The micro-batch sink merges into a driver store here; on a production
+cluster the same ``foreachBatch`` body would MERGE the touched slots'
+totals into a Delta/Iceberg rollup table — the serving side
 (DriverWheelIndex / distributed rollup queries) is identical either
 way, which is the point: batch and streaming build the SAME index.
-
-Update output mode is used so each trigger emits the current total for
-every touched window — the upsert is therefore idempotent (exactly-once
-results under at-least-once delivery of micro-batches).
 
 LIFETIME CONTRACT (every driver-folded wheel, here and in
 dedup_stream): one shell, ``_DriverFoldStream``, owns the micro-batch
@@ -38,29 +51,52 @@ the epoch id and the checkpoint), and a restarted wheel given the same
 (checkpoint_dir, state_dir) pair restores it. Persist-then-commit
 ordering makes the state exactly-once: a crash after persist but
 before the checkpoint commit replays the epoch, and the epoch guard
-skips its fold — required because the delta-merging wheels (MG) are
-not idempotent under replay. The skipped batch is still DRAINED
-through a no-op write: an update-mode wheel's batch plan carries the
-streaming aggregation, and a replayed batch whose plan never runs
-fails the state-store commit check. ``start()`` resets the guard, so
-one object can be restarted on any checkpoint. Without ``state_dir``
-the wheels remain single-process (tests, notebooks, always-on serving)
-— or swap the sink body for a Delta/Iceberg MERGE keyed on the window;
-the serving side is unchanged either way.
+skips its fold — required because the delta-merging wheels (MG,
+``StreamingWheel``) are not idempotent under replay. The skipped batch
+is still DRAINED through a no-op write: an update-mode wheel's batch
+plan carries the streaming aggregation, and a replayed batch whose
+plan never runs fails the state-store commit check. ``start()`` resets
+the guard, so one object can be restarted on any checkpoint. Without
+``state_dir`` the wheels remain single-process (tests, notebooks,
+always-on serving) — or swap the sink body for a Delta/Iceberg MERGE
+keyed on the window; the serving side is unchanged either way.
+
+``StreamingWheel`` keeps one epoch guard PER SINK. Its store folds an
+epoch only past the store's own epoch, and each of ``table_dir`` /
+``manifest_root`` writes an epoch only past its own marker, so a
+replay refolds exactly the parties that lag. Both sinks write the
+store's merged totals for the batch's touched slots (replace-upserts,
+idempotent under replay). Each saves what a restart needs beside its
+epoch: ``state_dir`` pickles the slots, late count and watermark; the
+table's ``_sink_meta.json`` (written after the partition swaps, which
+are not atomic with it) carries the watermark, late count and the
+OPEN slots (window end > watermark); the manifest commit carries the
+watermark and late count in its ``extra``, and its open slots are read
+back from its own generations, which commit atomically with the
+epoch. Without ``state_dir`` the store restores from the sink whose
+epoch lags and keeps only open slots, evicting a slot once the
+watermark passes it — the bound Spark's state store had. An epoch
+that touches no open slot commits nothing to the manifest, so in
+manifest-only mode the late rows of such an epoch are not in the
+count restored after a restart.
 """
 
 from __future__ import annotations
 
+import operator
 import os
 import pickle
 from dataclasses import dataclass, field
+from datetime import timedelta
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 from uwheel_datafusion_spark.functions.quant import value_to_micros
 from uwheel_datafusion_spark.functions.time import (
     MINUTE_MS,
+    bucket_ms,
     ensure_event_time,
     ts_to_ms,
 )
@@ -124,15 +160,18 @@ def _sink_meta_file(table_dir: str) -> str:
 
 
 def _persist_sink_meta(
-    spark, table_dir: str, epoch_id: int, checkpoint: str
+    spark, table_dir: str, epoch_id: int, checkpoint: str, store: dict
 ) -> None:
     """Atomic epoch marker for the table sink — written AFTER the
     partition upsert, so a crash in between replays the epoch; the
-    upsert is idempotent (current totals), so replay converges. The
-    marker lives NEXT TO the table, written through the Hadoop FS API
-    (round 11: a driver-local write would strand the guard on the
-    driver's disk while the table lives on HDFS/S3 — every resuming
-    driver would then re-apply epoch 0)."""
+    upsert replaces the touched slots with merged totals, so replay
+    converges. The swaps are not atomic with this file, so the marker
+    also carries what the store needs to resume at its epoch
+    (``store``: the watermark, late count and open slots). It lives
+    NEXT TO the table, written through the Hadoop FS API (round 11: a
+    driver-local write would strand the guard on the driver's disk
+    while the table lives on HDFS/S3 — every resuming driver would
+    then re-apply epoch 0)."""
     import json
 
     from uwheel_datafusion_spark.operators.util import fs_write_text
@@ -140,7 +179,7 @@ def _persist_sink_meta(
     fs_write_text(
         spark,
         _sink_meta_file(table_dir),
-        json.dumps({"epoch": epoch_id, "checkpoint": checkpoint}),
+        json.dumps({"epoch": epoch_id, "checkpoint": checkpoint, **store}),
     )
 
 
@@ -166,10 +205,32 @@ def _load_sink_meta(spark, table_dir: str, checkpoint: str):
     return meta
 
 
+def _slots_from_json(pairs) -> dict:
+    """``[[slot, partial], ...]`` → slots: unkeyed slots are int
+    buckets; keyed slots round-trip JSON as [key, bucket] lists —
+    coerce back to tuples."""
+    return {
+        ((b[0], int(b[1])) if isinstance(b, list) else int(b)): tuple(v)
+        for b, v in pairs
+    }
+
+
+def _bucket(slot) -> int:
+    return slot[1] if isinstance(slot, tuple) else slot
+
+
+def _nullsafe(op, a, b):
+    """``op`` with NULL as its identity — Spark's sum/min/max skip
+    NULLs, so an all-NULL minute's partial is (None, cnt, None, None)."""
+    return b if a is None else a if b is None else op(a, b)
+
+
 @dataclass
 class RollupStore:
-    """Driver-side upsert store for (bucket_ms → partial) rows.
-    Production swap-in: Delta MERGE keyed on bucket_ms.
+    """Driver-side rollup state: (bucket_ms | (key, bucket_ms)) →
+    (sum_micros, cnt, min_value, max_value), plus the event-time
+    watermark that decides which slots still take rows. Production
+    swap-in: Delta MERGE keyed on the slot.
 
     IMPORTANT (learned from a restart probe): the Spark checkpoint
     makes the *source* exactly-once — a restarted query will NOT replay
@@ -179,34 +240,62 @@ class RollupStore:
     serves an empty index."""
 
     slots: dict[int, tuple[int, int, float, float]] = field(default_factory=dict)
-    #: Spark's numRowsDroppedByWatermark summed once per micro-batch:
-    #: the stateful operator's dropped INPUT rows, which are partial
-    #: aggregates — one per late (minute[, key]) group per input task,
-    #: not one per late source row (5 late rows in one minute of one
-    #: file count 1)
+    #: source rows dropped because their minute window had closed (its
+    #: end ≤ the watermark) when their micro-batch arrived
     n_late_rows: int = 0
+    #: epoch ms: max event time of the folded micro-batches minus the
+    #: delay (0 before any, like Spark's); a slot whose window ends at
+    #: or before it is final
+    watermark_ms: int = 0
 
-    def upsert(self, rows) -> None:
-        for r in rows:
-            d = r.asDict() if hasattr(r, "asDict") else r
-            slot = (
-                (d["key"], d["bucket_ms"]) if "key" in d else d["bucket_ms"]
-            )
-            self.slots[slot] = (
-                d["sum_micros"],
-                d["cnt"],
-                d["min_value"],
-                d["max_value"],
-            )
+    def is_open(self, slot) -> bool:
+        return _bucket(slot) + MINUTE_MS > self.watermark_ms
+
+    def merge(self, parts, max_event_ms: int | None, delay_ms: int) -> list:
+        """Fold one micro-batch's ``(slot, partial)`` pairs: a partial
+        of a closed slot is dropped and its rows counted late, every
+        other one merges with add / add / min / max (NULL-safe). Then
+        the watermark advances to ``max_event_ms - delay_ms``. Returns
+        the slots the batch changed."""
+        touched = []
+        for slot, (s, c, mn, mx) in parts:
+            if not self.is_open(slot):
+                self.n_late_rows += c
+                continue
+            old = self.slots.get(slot)
+            if old is not None:
+                s = _nullsafe(operator.add, old[0], s)
+                c += old[1]
+                mn = _nullsafe(min, old[2], mn)
+                mx = _nullsafe(max, old[3], mx)
+            self.slots[slot] = (s, c, mn, mx)
+            touched.append(slot)
+        if max_event_ms is not None:
+            self.watermark_ms = max(self.watermark_ms, max_event_ms - delay_ms)
+        return touched
+
+    def evict_closed(self) -> None:
+        for slot in [s for s in self.slots if not self.is_open(s)]:
+            del self.slots[slot]
+
+    def to_json(self, open_only: bool = False) -> dict:
+        """JSON-ready state; ``open_only`` keeps just the slots the
+        watermark has not passed."""
+        return {
+            "slots": [
+                [b, v]
+                for b, v in self.slots.items()
+                if not open_only or self.is_open(b)
+            ],
+            "n_late_rows": self.n_late_rows,
+            "watermark_ms": self.watermark_ms,
+        }
 
     def save(self, path: str) -> None:
         import json
 
         with open(path, "w") as f:
-            json.dump(
-                {"slots": list(self.slots.items()), "n_late_rows": self.n_late_rows},
-                f,
-            )
+            json.dump(self.to_json(), f)
 
     @classmethod
     def load(cls, path: str) -> "RollupStore":
@@ -214,13 +303,11 @@ class RollupStore:
 
         with open(path) as f:
             d = json.load(f)
-        # unkeyed slots are int buckets; keyed slots round-trip JSON as
-        # [key, bucket] lists — coerce back to tuples
-        slots = {
-            (tuple((b[0], int(b[1]))) if isinstance(b, list) else int(b)): tuple(v)
-            for b, v in d["slots"]
-        }
-        return cls(slots=slots, n_late_rows=int(d["n_late_rows"]))
+        return cls(
+            slots=_slots_from_json(d["slots"]),
+            n_late_rows=int(d["n_late_rows"]),
+            watermark_ms=int(d.get("watermark_ms", 0)),
+        )
 
     def to_driver_index(self, watermark_ms: int, advanced_ms: int):
         from uwheel_datafusion_spark.operators.driver_index import DriverWheelIndex
@@ -682,8 +769,12 @@ class StreamingOHLCWheel(_DriverFoldStream):
 class StreamingWheel(_DriverFoldStream):
     """Maintain the minute rollup from a streaming source — unkeyed, or
     per-series when ``key_col`` is given (the streaming twin of
-    KeyedWheelIndex: state is keyed by (series, window), the sink
-    upserts (key, bucket) partials)."""
+    KeyedWheelIndex: slots are (series, minute), the sinks upsert
+    (key, bucket) totals). The store is the state (module docstring):
+    each micro-batch's minute partials merge into it on the driver
+    under its own watermark."""
+
+    _mode = "append"
 
     def __init__(
         self,
@@ -695,30 +786,30 @@ class StreamingWheel(_DriverFoldStream):
         key_col: str | None = None,
     ) -> None:
         self.store = store if store is not None else RollupStore()
-        self._late_batch = -1  # last batchId whose late rows were counted
         self.key_col = key_col
-        group_cols = [F.window(ts_col, "1 minute").alias("w")]
-        out_cols = [ts_to_ms(F.col("w.start")).alias("bucket_ms")]
+        # the delay through Spark's own interval parser, as withWatermark
+        delay = stream_df.sparkSession.sql(f"SELECT INTERVAL {watermark_delay}")
+        self._delay_ms = delay.first()[0] // timedelta(milliseconds=1)
+        ms = ts_to_ms(F.col(ts_col))
+        cols = [
+            bucket_ms(ms, MINUTE_MS).alias("bucket_ms"),
+            ms.alias("ts_ms"),
+            F.col(value_col).alias("value"),
+        ]
         if key_col is not None:
-            group_cols.append(F.col(key_col).alias("key"))
-            out_cols.insert(0, F.col("key"))
-        self._stream = (
-            ensure_event_time(stream_df, ts_col)
-            .withWatermark(ts_col, watermark_delay)
-            .groupBy(*group_cols)
-            .agg(
-                F.sum(value_to_micros(F.col(value_col))).alias("sum_micros"),
-                F.count(F.lit(1)).alias("cnt"),
-                F.min(value_col).alias("min_value"),
-                F.max(value_col).alias("max_value"),
-            )
-            .select(
-                *out_cols,
-                "sum_micros",
-                "cnt",
-                "min_value",
-                "max_value",
-            )
+            cols.insert(0, F.col(key_col).alias("key"))
+        self._stream = stream_df.where(F.col(ts_col).isNotNull()).select(*cols)
+        self._slot_cols = ["key", "bucket_ms"] if key_col is not None else ["bucket_ms"]
+        # the rollup rows the sinks write: slot columns, then the partial
+        value_type = self._stream.schema["value"].dataType
+        self._schema = StructType(
+            [self._stream.schema[c] for c in self._slot_cols]
+            + [
+                StructField("sum_micros", LongType()),
+                StructField("cnt", LongType()),
+                StructField("min_value", value_type),
+                StructField("max_value", value_type),
+            ]
         )
 
     def start(
@@ -728,130 +819,192 @@ class StreamingWheel(_DriverFoldStream):
         table_dir: str | None = None,
         manifest_root: str | None = None,
     ):
-        """``state_dir``: auto-persisted restart-safe driver state —
-        the hands-off alternative to the manual RollupStore.save/load
-        lifecycle (which remains supported for explicit control).
+        """``state_dir``: auto-persisted restart-safe driver state (slots,
+        late count, watermark) — the hands-off alternative to the manual
+        RollupStore.save/load lifecycle (which remains supported for
+        explicit control).
 
         ``table_dir``: maintain the rollup as a dt-partitioned parquet
         TABLE instead of (or alongside) the driver dict — the 100 TB
-        shape: each micro-batch's (bucket → current partials) rows are
-        MERGE-upserted via rollup_io.upsert_rollup (O(touched
-        partitions) per trigger, per-partition atomic swap), with the
-        same epoch-replay guard, persisted in ``_sink_meta.json``.
-        Serving reads the table (rollup_io.load_rollup) — any session,
-        any scale; the driver dict is never required.
+        shape: each micro-batch's touched slots are MERGE-upserted with
+        the store's merged totals via rollup_io.upsert_rollup (O(touched
+        partitions) per trigger, per-partition atomic swap), under the
+        table's own epoch guard in ``_sink_meta.json``, which also
+        carries the watermark and the open slots. Serving reads the
+        table (rollup_io.load_rollup) — any session, any scale; the
+        driver dict then holds only the open slots.
 
         ``manifest_root`` (round 13 — VERDICT r12 next #5): maintain
         the rollup as a MANIFEST-COMMITTED table instead — each epoch
         publishes one immutable generation dir + one atomic small-file
         commit (rollup_io.manifest_rollup_append), newest generation
-        wins per slot key, and the epoch-replay guard + checkpoint
-        identity ride the snapshot's ``extra`` ATOMICALLY with the
-        data (the _sink_meta.json sidecar's torn-overwrite dance is
-        structural here). Serving reads manifest_rollup_read; folding
-        is manifest_rollup_compact + manifest_vacuum. No data rename
-        ever happens — the S3A-safe sink shape."""
+        wins per slot key, and the epoch-replay guard, checkpoint
+        identity and watermark ride the snapshot's ``extra`` ATOMICALLY
+        with the data (the _sink_meta.json sidecar's torn-overwrite
+        dance is structural here). Serving reads manifest_rollup_read;
+        folding is manifest_rollup_compact + manifest_vacuum. No data
+        rename ever happens — the S3A-safe sink shape.
+
+        A restart resumes each of these at its own epoch (module
+        docstring, LIFETIME CONTRACT)."""
         self._table_dir, self._manifest_root = table_dir, manifest_root
-        self._late_batch = -1  # a new query reports only its own batches
         return super().start(checkpoint_dir, state_dir)
 
     def _state(self) -> dict:
         return self.store.slots
 
     def _extra(self) -> dict:
-        return {"late": self.store.n_late_rows}
+        return {
+            "n_late_rows": self.store.n_late_rows,
+            "watermark_ms": self.store.watermark_ms,
+        }
 
     def _restore(self, st: dict) -> None:
         super()._restore(st)
-        self.store.n_late_rows += st.get("late", 0)
+        self.store.n_late_rows = st.get("n_late_rows", 0)
+        self.store.watermark_ms = st.get("watermark_ms", 0)
 
     def _resume(self) -> int:
-        """The last epoch EVERY configured sink holds (each marker is
-        checkpoint-checked): an epoch replayed past the laggard is
-        folded into all of them again, which their replace-upserts and
-        the manifest's own epoch check absorb."""
-        epochs = [super()._resume()] if self._state_dir is not None else []
+        """Read every configured party's epoch (each checkpoint-checked)
+        and restore the store; returns the last epoch ALL of them hold.
+        The store restores from ``state_dir``, or else from the sink
+        whose epoch lags, so that the epochs it replays are folded into
+        the store too."""
         spark = self._stream.sparkSession
+        saved = {}  # party → (epoch, loader of its saved store state | None)
+        if self._state_dir is not None:
+            st = _load_state(self._state_dir, self._checkpoint)
+            saved["store"] = (-1, None) if st is None else (st["epoch"], lambda: st)
         if self._table_dir is not None:
             meta = _load_sink_meta(spark, self._table_dir, self._checkpoint)
-            epochs.append(-1 if meta is None else meta["epoch"])
-        if self._manifest_root is not None:
-            from uwheel_datafusion_spark.operators.manifest import (
-                manifest_latest,
+            saved["table"] = (-1, None) if meta is None else (
+                meta["epoch"],
+                lambda: {**meta, "slots": _slots_from_json(meta["slots"])},
             )
+        if self._manifest_root is not None:
+            saved["manifest"] = self._manifest_mark(spark)
+        if "store" not in saved:
+            # no state_dir: the store is the lagging sink's (no sink: empty)
+            saved["store"] = min(saved.values(), key=lambda m: m[0], default=(-1, None))
+        self._epochs = {party: epoch for party, (epoch, _) in saved.items()}
+        load = saved["store"][1]
+        if load is not None:
+            self._restore(load())
+        return min(self._epochs.values())
 
-            snap = manifest_latest(spark, self._manifest_root)
-            extra = {} if snap is None else snap.extra
-            saved = extra.get("checkpoint")
-            if saved is not None and saved != self._checkpoint:
-                raise ValueError(
-                    f"rollup manifest {self._manifest_root!r} was "
-                    f"maintained under checkpoint {saved!r} but is "
-                    f"being resumed under {self._checkpoint!r}"
-                )
-            epochs.append(int(extra.get("epoch", -1)))
-        return min(epochs, default=-1)
+    def _manifest_mark(self, spark):
+        """The manifest's (epoch, loader of its store state): watermark
+        and late count from the commit's ``extra``, open slots from its
+        generations."""
+        from uwheel_datafusion_spark.operators.manifest import manifest_latest
+        from uwheel_datafusion_spark.operators.rollup_io import (
+            manifest_rollup_read,
+        )
+
+        snap = manifest_latest(spark, self._manifest_root)
+        extra = {} if snap is None else snap.extra
+        saved = extra.get("checkpoint")
+        if saved is not None and saved != self._checkpoint:
+            raise ValueError(
+                f"rollup manifest {self._manifest_root!r} was "
+                f"maintained under checkpoint {saved!r} but is "
+                f"being resumed under {self._checkpoint!r}"
+            )
+        epoch = int(extra.get("epoch", -1))
+        if epoch < 0:
+            return -1, None
+
+        def load():
+            wm = int(extra.get("watermark_ms", 0))
+            rows = (
+                manifest_rollup_read(spark, self._manifest_root, snapshot=snap)
+                .where(F.col("bucket_ms") + MINUTE_MS > wm)
+                .select(*self._schema.names)
+                .collect()
+            )
+            return {
+                "slots": dict(self._parts(rows)),
+                "n_late_rows": int(extra.get("n_late_rows", 0)),
+                "watermark_ms": wm,
+            }
+
+        return epoch, load
+
+    def _parts(self, rows) -> list:
+        """Rows of ``(slot cols, sum_micros, cnt, min, max, ...)`` →
+        ``(slot, partial)`` pairs."""
+        if self.key_col is not None:
+            return [((r[0], r[1]), tuple(r[2:6])) for r in rows]
+        return [(r[0], tuple(r[1:5])) for r in rows]
+
+    def _frame(self, slots) -> DataFrame:
+        rows = [
+            (*slot, *v) if isinstance(slot, tuple) else (slot, *v)
+            for slot, v in slots
+        ]
+        return self._stream.sparkSession.createDataFrame(rows, self._schema)
 
     def _fold(self, batch_df: DataFrame, epoch_id: int) -> None:
-        key_cols = (
-            ("key", "bucket_ms") if self.key_col is not None else ("bucket_ms",)
+        rows = (
+            batch_df.groupBy(*self._slot_cols)
+            .agg(
+                F.sum(value_to_micros(F.col("value"))).alias("sum_micros"),
+                F.count(F.lit(1)).alias("cnt"),
+                F.min("value").alias("min_value"),
+                F.max("value").alias("max_value"),
+                F.max("ts_ms").alias("max_ts_ms"),
+            )
+            .collect()
         )
-        if self._manifest_root is not None:
+        store = self.store
+        parts = self._parts(rows)
+        if epoch_id > self._epochs["store"]:
+            max_ts = max((r["max_ts_ms"] for r in rows), default=None)
+            touched = store.merge(parts, max_ts, self._delay_ms)
+            self._epochs["store"] = epoch_id
+        else:  # a lagging sink's replay: the store already holds it
+            touched = [slot for slot, _ in parts if slot in store.slots]
+        totals = [(slot, store.slots[slot]) for slot in touched]
+        spark = batch_df.sparkSession
+        if self._manifest_root is not None and epoch_id > self._epochs["manifest"]:
             from uwheel_datafusion_spark.operators.rollup_io import (
                 manifest_rollup_append,
             )
 
-            manifest_rollup_append(
-                batch_df.sparkSession,
-                self._manifest_root,
-                batch_df,
-                key_cols,
-                epoch=epoch_id,
-                checkpoint=self._checkpoint,
-            )
-        if self._table_dir is not None:
-            from uwheel_datafusion_spark.operators.rollup_io import (
-                upsert_rollup,
-            )
+            if totals:
+                manifest_rollup_append(
+                    spark,
+                    self._manifest_root,
+                    self._frame(totals),
+                    tuple(self._slot_cols),
+                    epoch=epoch_id,
+                    checkpoint=self._checkpoint,
+                    extra=self._extra(),
+                )
+            self._epochs["manifest"] = epoch_id
+        if self._table_dir is not None and epoch_id > self._epochs["table"] and totals:
+            from uwheel_datafusion_spark.operators.rollup_io import upsert_rollup
 
             upsert_rollup(
-                batch_df.sparkSession, self._table_dir, batch_df, key_cols
+                spark, self._table_dir, self._frame(totals), tuple(self._slot_cols)
             )
-        if (
-            self._table_dir is None and self._manifest_root is None
-        ) or self._state_dir is not None:
-            self.store.upsert(batch_df.collect())
+        if self._state_dir is None and (
+            self._table_dir is not None or self._manifest_root is not None
+        ):
+            store.evict_closed()  # the sinks hold the final slots
 
     def _persist(self, epoch_id: int) -> None:
-        super()._persist(epoch_id)
-        if self._table_dir is not None:
+        if epoch_id == self._epochs["store"]:  # not a lagging sink's replay
+            super()._persist(epoch_id)
+        if self._table_dir is not None and epoch_id > self._epochs["table"]:
             _persist_sink_meta(
                 self._stream.sparkSession,
                 self._table_dir,
                 epoch_id,
                 self._checkpoint,
+                self.store.to_json(open_only=True),
             )
-
-    def process_available(self) -> None:
-        super().process_available()
-        self._harvest_late_metric()
-
-    def _harvest_late_metric(self) -> None:
-        """Add the late-row counts of the micro-batches not yet counted:
-        ``recentProgress`` lists every recent batch on every call, so
-        each batchId is harvested once."""
-        q = self._query
-        try:
-            for prog in q.recentProgress:
-                if prog["batchId"] <= self._late_batch:
-                    continue
-                self._late_batch = prog["batchId"]
-                for op in prog.get("stateOperators", []):
-                    self.store.n_late_rows += int(
-                        op.get("numRowsDroppedByWatermark", 0)
-                    )
-        except Exception:
-            pass
+            self._epochs["table"] = epoch_id
 
     # serving --------------------------------------------------------------
 
