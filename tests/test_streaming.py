@@ -1250,6 +1250,9 @@ def test_late_rule_matches_spark_stateful_aggregate(spark, tmp_path, key_col):
                 _late_file(src, i, rows)
             w.process_available()
             q.processAllAvailable()
+        # the wheel's plan keeps no Spark state; the oracle's does
+        assert w._query.lastProgress["stateOperators"] == []
+        assert q.lastProgress["stateOperators"]
     finally:
         w.stop()
         q.stop()
