@@ -1089,25 +1089,32 @@ def test_crash_between_sinks_refolds_the_lagging_sink(
     assert len(table) == 4 and w.store.slots == table
 
 
+@pytest.mark.parametrize("site", ["marker", "swap"])
 def test_table_crash_between_swap_and_marker_refolds(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, site
 ):
-    """Table-only StreamingWheel crashed after epoch 1's partition swap
-    but before its ``_sink_meta.json``: the restart restores the store
-    from the epoch-0 marker, refolds epoch 1 and rewrites its slots, so
-    the table equals one uninterrupted run."""
+    """Table-only StreamingWheel crashed in epoch 1's ``_sink_meta.json``
+    write (``marker``: nothing of the epoch landed) or in its partition
+    upsert after the marker (``swap``): the restart redoes the marked
+    epoch's swaps, restores the store from the table, and the table
+    equals one uninterrupted run."""
     from pyspark.errors import StreamingQueryException
 
+    from uwheel_datafusion_spark.operators import rollup_io
     from uwheel_datafusion_spark.streaming import wheel_stream as ws
 
     src = str(tmp_path / "in")
     sink = {"table_dir": str(tmp_path / "table")}
-    persist = ws._persist_sink_meta
+    module, name = (ws, "_persist_sink_meta") if site == "marker" else (
+        rollup_io, "upsert_rollup"
+    )
+    write, calls = getattr(module, name), []
 
-    def crash_at_epoch_1(spark_, table_dir, epoch_id, *args):
-        if epoch_id == 1:
-            raise RuntimeError("crash between the partition swap and the marker")
-        persist(spark_, table_dir, epoch_id, *args)
+    def crash_at_epoch_1(*args):
+        calls.append(args)
+        if len(calls) == 2:  # one write per epoch
+            raise RuntimeError(f"crash in {name} at epoch 1")
+        write(*args)
 
     def run(checkpoint, **kw):
         w = StreamingWheel(
@@ -1124,13 +1131,91 @@ def test_table_crash_between_swap_and_marker_refolds(
 
     _crash_file(src, 0)
     _crash_file(src, 1)
-    monkeypatch.setattr(ws, "_persist_sink_meta", crash_at_epoch_1)
+    monkeypatch.setattr(module, name, crash_at_epoch_1)
     with pytest.raises(StreamingQueryException):
         run(str(tmp_path / "ckpt"), **sink)
     monkeypatch.undo()
-    run(str(tmp_path / "ckpt"), **sink)
+    resumed = run(str(tmp_path / "ckpt"), **sink)
     whole = run(str(tmp_path / "whole_ckpt")).store.slots
     assert len(whole) == 4 and _sink_slots(spark, sink) == whole
+    assert resumed.store.slots == whole  # a 1-hour delay: every slot open
+
+
+@pytest.mark.parametrize(
+    "kind, party",
+    [("wheel", "state_dir"), ("wheel", "table_dir"), ("wheel", None),
+     ("mg", "state_dir")],
+)
+def test_same_object_restart_folds_each_epoch_once(
+    spark, tmp_path, monkeypatch, uncommit_last_batch, kind, party
+):
+    """ONE object folds an epoch into its state, then loses it:
+    ``state_dir`` (with a manifest for the wheel) crashes in the pickle
+    at epoch 1, ``table_dir`` in its first marker (epoch 0: the table
+    has saved nothing), and with no party epoch 1's commit is lost.
+    Restarted with ``start()`` on the same checkpoint, the object folds
+    the replayed epoch exactly once — a merge family would otherwise
+    count its minutes twice — and equals one uninterrupted run."""
+    from pyspark.errors import StreamingQueryException
+
+    from uwheel_datafusion_spark.streaming import wheel_stream as ws
+
+    make, state_of = _crash_cases()[kind]
+    src = str(tmp_path / "in")
+    ckpt = str(tmp_path / "ckpt")
+    sinks = {
+        "state_dir": {"state_dir": str(tmp_path / "state")},
+        "table_dir": {"table_dir": str(tmp_path / "table")},
+        None: {},
+    }[party]
+    if kind == "wheel" and party == "state_dir":
+        sinks["manifest_root"] = str(tmp_path / "manifest")
+
+    def stream():
+        return (
+            spark.readStream.schema(CRASH_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+
+    _crash_file(src, 0)
+    _crash_file(src, 1)
+    w = make(stream())
+    if party is None:
+        w.start(ckpt)
+        w.process_available()
+        w.stop()
+        assert uncommit_last_batch(ckpt) == 1
+    else:
+        name = "_persist_state" if party == "state_dir" else "_persist_sink_meta"
+        write, epoch = getattr(ws, name), int(party == "state_dir")
+
+        def crash(*args, **kw):
+            if args[2] == epoch:  # the epoch id of both writers
+                raise RuntimeError(f"crash in {name} at epoch {epoch}")
+            write(*args, **kw)
+
+        monkeypatch.setattr(ws, name, crash)
+        w.start(ckpt, **sinks)
+        with pytest.raises(StreamingQueryException):
+            w.process_available()
+        w.stop()
+        monkeypatch.undo()
+    w.start(ckpt, **sinks)
+    w.process_available()
+    w.stop()
+    whole = make(stream())
+    whole.start(str(tmp_path / "whole_ckpt"))
+    whole.process_available()
+    whole.stop()
+    assert len(state_of(whole)) == 4 and state_of(w) == state_of(whole)
+    if kind == "wheel":
+        assert (w.store.n_late_rows, w.store.watermark_ms) == (
+            whole.store.n_late_rows,
+            whole.store.watermark_ms,
+        )
+    if "table_dir" in sinks or "manifest_root" in sinks:
+        assert _sink_slots(spark, sinks) == state_of(whole)
 
 
 LATE_SCHEMA = "ts timestamp, value double, k long"

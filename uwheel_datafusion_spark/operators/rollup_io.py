@@ -190,10 +190,11 @@ def upsert_rollup(
     a partial apply converges."""
     _recover_torn_partitions(spark, path)
     tagged = batch.withColumn("dt", _dt_col())
-    if not fs_exists(spark, path):
+    if not fs_list_names(spark, path, "dt="):
+        # no partition yet; append keeps a sink marker already in the dir
         (
             tagged.repartition("dt")
-            .write.mode("overwrite")
+            .write.mode("append")
             .partitionBy("dt")
             .parquet(path)
         )

@@ -55,22 +55,27 @@ skips its fold — required because the delta-merging wheels (MG,
 ``StreamingWheel``) are not idempotent under replay. The skipped batch
 is still DRAINED through a no-op write: an update-mode wheel's batch
 plan carries the streaming aggregation, and a replayed batch whose
-plan never runs fails the state-store commit check. ``start()`` resets
-the guard, so one object can be restarted on any checkpoint. Without
-``state_dir`` the wheels remain single-process (tests, notebooks,
-always-on serving) — or swap the sink body for a Delta/Iceberg MERGE
-keyed on the window; the serving side is unchanged either way.
+plan never runs fails the state-store commit check. A restore REPLACES
+the in-memory state; without a snapshot the in-memory state stands at
+its last folded epoch, which ``start()`` resets on a new checkpoint, so
+one object can be restarted on any checkpoint. Without ``state_dir``
+the wheels remain single-process (tests, notebooks, always-on
+serving) — or swap the sink body for a Delta/Iceberg MERGE keyed on
+the window; the serving side is unchanged either way.
 
-``StreamingWheel`` keeps one epoch guard PER SINK. Its store folds an
-epoch only past the store's own epoch, and each of ``table_dir`` /
-``manifest_root`` writes an epoch only past its own marker, so a
-replay refolds exactly the parties that lag. Both sinks write the
-store's merged totals for the batch's touched slots (replace-upserts,
-idempotent under replay). Each saves what a restart needs beside its
-epoch: ``state_dir`` pickles the slots, late count and watermark; the
-table's ``_sink_meta.json`` (written after the partition swaps, which
-are not atomic with it) carries the watermark, late count and the
-OPEN slots (window end > watermark); the manifest commit carries the
+``StreamingWheel`` keeps one epoch guard PER SINK: each of
+``table_dir`` / ``manifest_root`` writes an epoch only past its own
+marker. The sinks write before ``state_dir`` (manifest commit, table
+marker, table swaps, then the pickle), so after a crash the store is
+the party that lags: a replayed epoch merges into the store and is
+rewritten only to the sinks that lack it. Both sinks write the store's
+merged totals for the batch's touched slots (replace-upserts,
+idempotent under replay), and each saves what a restart needs beside
+its epoch, in O(touched slots) per trigger: ``state_dir`` pickles the
+slots, late count and watermark; the table's ``_sink_meta.json`` is a
+redo record of the epoch (watermark, late count, touched totals),
+whose swaps a restart redoes before reading the open slots (window
+end > watermark) back from the table; the manifest commit carries the
 watermark and late count in its ``extra``, and its open slots are read
 back from its own generations, which commit atomically with the
 epoch. Without ``state_dir`` the store restores from the sink whose
@@ -87,7 +92,7 @@ import operator
 import os
 import pickle
 from dataclasses import dataclass, field
-from datetime import timedelta
+from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -160,14 +165,14 @@ def _sink_meta_file(table_dir: str) -> str:
 
 
 def _persist_sink_meta(
-    spark, table_dir: str, epoch_id: int, checkpoint: str, store: dict
+    spark, table_dir: str, epoch_id: int, checkpoint: str, state: dict
 ) -> None:
-    """Atomic epoch marker for the table sink — written AFTER the
-    partition upsert, so a crash in between replays the epoch; the
-    upsert replaces the touched slots with merged totals, so replay
-    converges. The swaps are not atomic with this file, so the marker
-    also carries what the store needs to resume at its epoch
-    (``store``: the watermark, late count and open slots). It lives
+    """Atomic epoch marker for the table sink — a redo record written
+    BEFORE the epoch's partition upsert. ``state`` carries the
+    watermark, the late count and the epoch's touched slots with their
+    merged totals; the swaps are not atomic with this file, so a
+    restart redoes them from it (replace-upserts: idempotent) and then
+    reads the store's open slots back from the table. It lives
     NEXT TO the table, written through the Hadoop FS API (round 11: a
     driver-local write would strand the guard on the driver's disk
     while the table lives on HDFS/S3 — every resuming driver would
@@ -179,7 +184,7 @@ def _persist_sink_meta(
     fs_write_text(
         spark,
         _sink_meta_file(table_dir),
-        json.dumps({"epoch": epoch_id, "checkpoint": checkpoint, **store}),
+        json.dumps({"epoch": epoch_id, "checkpoint": checkpoint, **state}),
     )
 
 
@@ -278,24 +283,18 @@ class RollupStore:
         for slot in [s for s in self.slots if not self.is_open(s)]:
             del self.slots[slot]
 
-    def to_json(self, open_only: bool = False) -> dict:
-        """JSON-ready state; ``open_only`` keeps just the slots the
-        watermark has not passed."""
-        return {
-            "slots": [
-                [b, v]
-                for b, v in self.slots.items()
-                if not open_only or self.is_open(b)
-            ],
-            "n_late_rows": self.n_late_rows,
-            "watermark_ms": self.watermark_ms,
-        }
-
     def save(self, path: str) -> None:
         import json
 
         with open(path, "w") as f:
-            json.dump(self.to_json(), f)
+            json.dump(
+                {
+                    "slots": list(self.slots.items()),
+                    "n_late_rows": self.n_late_rows,
+                    "watermark_ms": self.watermark_ms,
+                },
+                f,
+            )
 
     @classmethod
     def load(cls, path: str) -> "RollupStore":
@@ -378,9 +377,12 @@ class _DriverFoldStream(_StreamQuery):
     ``append`` families fold per-batch partials in their own ``_fold``."""
 
     _mode = "update"
-    _last_epoch = -1
+    _checkpoint = None
+    _last_epoch = -1  # last epoch folded into the in-memory state
 
     def start(self, checkpoint_dir: str, state_dir: str | None = None):
+        if checkpoint_dir != self._checkpoint:
+            self._last_epoch = -1  # epoch ids restart under a new checkpoint
         self._checkpoint, self._state_dir = checkpoint_dir, state_dir
         self._last_epoch = self._resume()
 
@@ -409,18 +411,24 @@ class _DriverFoldStream(_StreamQuery):
         return None
 
     def _restore(self, st: dict) -> None:
-        self._state().update(st["slots"])
+        # replace, not update: a slot first made by an epoch the snapshot
+        # lacks must not survive to be folded again when it replays
+        state = self._state()
+        state.clear()
+        state.update(st["slots"])
 
     def _resume(self) -> int:
         """Restore the ``state_dir`` snapshot; returns the last epoch
-        already folded in (-1: none)."""
+        already folded in. Without a snapshot the in-memory state
+        stands, at its last folded epoch (-1 unless this object already
+        ran on this checkpoint)."""
         st = (
             _load_state(self._state_dir, self._checkpoint)
             if self._state_dir is not None
             else None
         )
         if st is None:
-            return -1
+            return self._last_epoch
         self._restore(st)
         return st["epoch"]
 
@@ -829,8 +837,9 @@ class StreamingWheel(_DriverFoldStream):
         shape: each micro-batch's touched slots are MERGE-upserted with
         the store's merged totals via rollup_io.upsert_rollup (O(touched
         partitions) per trigger, per-partition atomic swap), under the
-        table's own epoch guard in ``_sink_meta.json``, which also
-        carries the watermark and the open slots. Serving reads the
+        table's own epoch guard in ``_sink_meta.json``, a redo record
+        of the epoch (watermark, late count, touched totals) written
+        before its swaps. Serving reads the
         table (rollup_io.load_rollup) — any session, any scale; the
         driver dict then holds only the open slots.
 
@@ -854,48 +863,72 @@ class StreamingWheel(_DriverFoldStream):
         return self.store.slots
 
     def _extra(self) -> dict:
-        return {
-            "n_late_rows": self.store.n_late_rows,
-            "watermark_ms": self.store.watermark_ms,
-        }
+        return {"late": self.store.n_late_rows, "watermark_ms": self.store.watermark_ms}
 
     def _restore(self, st: dict) -> None:
         super()._restore(st)
-        self.store.n_late_rows = st.get("n_late_rows", 0)
+        self.store.n_late_rows = st.get("late", 0)
         self.store.watermark_ms = st.get("watermark_ms", 0)
 
     def _resume(self) -> int:
         """Read every configured party's epoch (each checkpoint-checked)
-        and restore the store; returns the last epoch ALL of them hold.
-        The store restores from ``state_dir``, or else from the sink
-        whose epoch lags, so that the epochs it replays are folded into
-        the store too."""
+        and restore the store from ``state_dir``, or else from the sink
+        whose epoch lags; returns the store's epoch. Every party writes
+        an epoch before Spark commits it and ``state_dir`` writes last
+        (``_persist``), so the store is the party that lags: every epoch
+        that reaches ``_fold`` merges, and the sinks that hold it
+        already skip it."""
         spark = self._stream.sparkSession
         saved = {}  # party → (epoch, loader of its saved store state | None)
         if self._state_dir is not None:
             st = _load_state(self._state_dir, self._checkpoint)
             saved["store"] = (-1, None) if st is None else (st["epoch"], lambda: st)
         if self._table_dir is not None:
-            meta = _load_sink_meta(spark, self._table_dir, self._checkpoint)
-            saved["table"] = (-1, None) if meta is None else (
-                meta["epoch"],
-                lambda: {**meta, "slots": _slots_from_json(meta["slots"])},
-            )
+            saved["table"] = self._table_mark(spark)
         if self._manifest_root is not None:
             saved["manifest"] = self._manifest_mark(spark)
-        if "store" not in saved:
-            # no state_dir: the store is the lagging sink's (no sink: empty)
-            saved["store"] = min(saved.values(), key=lambda m: m[0], default=(-1, None))
-        self._epochs = {party: epoch for party, (epoch, _) in saved.items()}
-        load = saved["store"][1]
+        self._epochs = {party: e for party, (e, _) in saved.items() if party != "store"}
+        if not saved:  # the store lives in memory only
+            return self._last_epoch
+        epoch, load = saved.get("store") or min(saved.values(), key=lambda m: m[0])
         if load is not None:
             self._restore(load())
-        return min(self._epochs.values())
+        elif self._last_epoch >= 0:
+            # this object folded epochs that its party never saved
+            self._restore({"slots": {}})
+        return epoch
+
+    def _table_mark(self, spark):
+        """The table's (epoch, loader of its store state). The marker
+        precedes its epoch's swaps, so they are redone here first
+        (replace-upserts: idempotent); the open slots are then read back
+        from the table."""
+        from uwheel_datafusion_spark.operators.rollup_io import (
+            load_rollup,
+            upsert_rollup,
+        )
+
+        meta = _load_sink_meta(spark, self._table_dir, self._checkpoint)
+        if meta is None:
+            return -1, None
+        redo = _slots_from_json(meta.get("slots", []))
+        if redo:
+            upsert_rollup(
+                spark,
+                self._table_dir,
+                self._frame(redo.items()),
+                tuple(self._slot_cols),
+            )
+        wm = meta.get("watermark_ms", 0)
+        return meta["epoch"], lambda: {
+            **meta,
+            "slots": self._open_slots(load_rollup(spark, self._table_dir), wm),
+        }
 
     def _manifest_mark(self, spark):
         """The manifest's (epoch, loader of its store state): watermark
         and late count from the commit's ``extra``, open slots from its
-        generations."""
+        generations, which commit atomically with the epoch."""
         from uwheel_datafusion_spark.operators.manifest import manifest_latest
         from uwheel_datafusion_spark.operators.rollup_io import (
             manifest_rollup_read,
@@ -913,22 +946,25 @@ class StreamingWheel(_DriverFoldStream):
         epoch = int(extra.get("epoch", -1))
         if epoch < 0:
             return -1, None
+        wm = int(extra.get("watermark_ms", 0))
+        return epoch, lambda: {
+            "slots": self._open_slots(
+                manifest_rollup_read(spark, self._manifest_root, snapshot=snap), wm
+            ),
+            "late": int(extra.get("late", 0)),
+            "watermark_ms": wm,
+        }
 
-        def load():
-            wm = int(extra.get("watermark_ms", 0))
-            rows = (
-                manifest_rollup_read(spark, self._manifest_root, snapshot=snap)
-                .where(F.col("bucket_ms") + MINUTE_MS > wm)
-                .select(*self._schema.names)
-                .collect()
-            )
-            return {
-                "slots": dict(self._parts(rows)),
-                "n_late_rows": int(extra.get("n_late_rows", 0)),
-                "watermark_ms": wm,
-            }
-
-        return epoch, load
+    def _open_slots(self, rollup: DataFrame, watermark_ms: int) -> dict:
+        """The slots of a sink's rollup whose window ends after
+        ``watermark_ms`` (a table's closed days are pruned)."""
+        pred = F.col("bucket_ms") + MINUTE_MS > watermark_ms
+        if "dt" in rollup.columns:
+            first = (watermark_ms - MINUTE_MS) / 1000  # the first open day
+            day = datetime.fromtimestamp(first, timezone.utc).strftime("%Y-%m-%d")
+            pred &= F.col("dt") >= day
+        rows = rollup.where(pred).select(*self._schema.names).collect()
+        return dict(self._parts(rows))
 
     def _parts(self, rows) -> list:
         """Rows of ``(slot cols, sum_micros, cnt, min, max, ...)`` →
@@ -956,16 +992,15 @@ class StreamingWheel(_DriverFoldStream):
             )
             .collect()
         )
-        store = self.store
-        parts = self._parts(rows)
-        if epoch_id > self._epochs["store"]:
-            max_ts = max((r["max_ts_ms"] for r in rows), default=None)
-            touched = store.merge(parts, max_ts, self._delay_ms)
-            self._epochs["store"] = epoch_id
-        else:  # a lagging sink's replay: the store already holds it
-            touched = [slot for slot, _ in parts if slot in store.slots]
-        totals = [(slot, store.slots[slot]) for slot in touched]
-        spark = batch_df.sparkSession
+        max_ts = max((r["max_ts_ms"] for r in rows), default=None)
+        self._touched = self.store.merge(self._parts(rows), max_ts, self._delay_ms)
+
+    def _persist(self, epoch_id: int) -> None:
+        """Write the epoch's touched slots to each sink that lacks it,
+        then ``state_dir`` last (``_resume``)."""
+        store, spark = self.store, self._stream.sparkSession
+        totals = [(slot, store.slots[slot]) for slot in self._touched]
+        frame = self._frame(totals) if totals and self._epochs else None
         if self._manifest_root is not None and epoch_id > self._epochs["manifest"]:
             from uwheel_datafusion_spark.operators.rollup_io import (
                 manifest_rollup_append,
@@ -975,36 +1010,30 @@ class StreamingWheel(_DriverFoldStream):
                 manifest_rollup_append(
                     spark,
                     self._manifest_root,
-                    self._frame(totals),
+                    frame,
                     tuple(self._slot_cols),
                     epoch=epoch_id,
                     checkpoint=self._checkpoint,
                     extra=self._extra(),
                 )
             self._epochs["manifest"] = epoch_id
-        if self._table_dir is not None and epoch_id > self._epochs["table"] and totals:
+        if self._table_dir is not None and epoch_id > self._epochs["table"]:
             from uwheel_datafusion_spark.operators.rollup_io import upsert_rollup
 
-            upsert_rollup(
-                spark, self._table_dir, self._frame(totals), tuple(self._slot_cols)
-            )
-        if self._state_dir is None and (
-            self._table_dir is not None or self._manifest_root is not None
-        ):
-            store.evict_closed()  # the sinks hold the final slots
-
-    def _persist(self, epoch_id: int) -> None:
-        if epoch_id == self._epochs["store"]:  # not a lagging sink's replay
-            super()._persist(epoch_id)
-        if self._table_dir is not None and epoch_id > self._epochs["table"]:
+            # the marker first: a restart redoes its swaps (_table_mark)
             _persist_sink_meta(
-                self._stream.sparkSession,
+                spark,
                 self._table_dir,
                 epoch_id,
                 self._checkpoint,
-                self.store.to_json(open_only=True),
+                {**self._extra(), "slots": totals},
             )
+            if totals:
+                upsert_rollup(spark, self._table_dir, frame, tuple(self._slot_cols))
             self._epochs["table"] = epoch_id
+        super()._persist(epoch_id)
+        if self._state_dir is None and self._epochs:
+            store.evict_closed()  # the sinks hold the final slots
 
     # serving --------------------------------------------------------------
 
