@@ -1422,6 +1422,42 @@ def test_streaming_merge_is_null_safe(spark, tmp_path):
     assert want[to_epoch_ms(m(1))] == (None, 2, None, None)
 
 
+def test_driver_index_serves_all_null_minutes(spark, tmp_path):
+    """A minute whose values are all NULL holds the partial
+    (None, cnt, None, None) in the batch rollup and in the stream's
+    store alike. The O(1) index must treat it as the identity: every
+    range, the all-NULL minute alone or mixed with values, reads what
+    the distributed ``range_agg_df`` reads."""
+    src = str(tmp_path / "in")
+    m = lambda i: datetime(2024, 1, 1, 0, i)  # noqa: E731
+    _late_file(src, 0, [(m(0), None, 0), (m(1), None, 0), (m(2), 1.0, 0)])
+    _late_file(src, 1, [(m(0), 5.0, 0), (m(1), None, 0), (m(3), -2.0, 0)])
+    w = StreamingWheel(_late_stream(spark, src), "ts", "value")
+    w.start(str(tmp_path / "ckpt"))
+    w.process_available()
+    w.stop()
+    batch = WheelIndex.build(
+        spark.read.schema(LATE_SCHEMA).parquet(src), "ts", "value", WM, ADV,
+        cache=False,
+    )
+    indexes = {
+        "batch": batch.to_driver_index(),
+        "stream": w.snapshot_index(WM, ADV),
+    }
+    t = lambda i: to_epoch_ms(m(i))  # noqa: E731
+    for s, e in [(t(1), t(2)), (t(0), t(2)), (t(1), t(3)), (t(0), t(4))]:
+        r = batch.range_agg_df(s, e).first()
+        want = {
+            "sum": r["sum_value"], "cnt": r["cnt"], "min": r["min_value"],
+            "max": r["max_value"], "avg": r["avg_value"],
+        }
+        for name, di in indexes.items():
+            assert di.query_all(s, e) == want, (name, s, e)
+    assert indexes["batch"].query_all(t(1), t(2)) == {
+        "sum": None, "cnt": 2, "min": None, "max": None, "avg": None,
+    }
+
+
 _RESTART_FILES = [
     # watermark → 2023-12-31 23:51:10
     [(datetime(2024, 1, 1, 0, 0, 10), 1.0, 0),

@@ -22,8 +22,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from uwheel_datafusion_spark.functions.time import MINUTE_MS
+from uwheel_datafusion_spark.operators.counter import COUNTER
+from uwheel_datafusion_spark.operators.ohlc import OHLC
+from uwheel_datafusion_spark.operators.twa import TWA
 from uwheel_datafusion_spark.operators.wheel import WheelIndex
 from uwheel_datafusion_spark.plans.sql_router import WheelSqlRouter
+
+#: the stitch families register_table builds and batch() serves
+_STITCH = (OHLC, TWA, COUNTER)
 
 
 class WheelEngine:
@@ -133,80 +140,21 @@ class WheelEngine:
                         table, key_col, value_col, ts_col, khist,
                         watermark_ms, advance_to_ms,
                     )
-            if ohlc:
-                from uwheel_datafusion_spark.operators.ohlc import (
-                    build_keyed_ohlc_rollup,
-                    build_ohlc_rollup,
-                )
-
-                oh = build_ohlc_rollup(
-                    df, ts_col, value_col, watermark_ms, advance_to_ms,
-                    cache=cache,
-                )
-                layers["ohlc"] = oh
-                r.register_ohlc_rollup(
-                    table, value_col, ts_col, oh,
-                    watermark_ms, advance_to_ms,
-                )
+            kw = {"watermark_ms": watermark_ms,
+                  "advance_to_ms": advance_to_ms, "cache": cache}
+            for fam, on in zip(_STITCH, (ohlc, twa, counter)):
+                if not on:
+                    continue
+                built = {None: fam.build(df, ts_col, value_col, **kw)}
                 if key_col is not None:
-                    koh = build_keyed_ohlc_rollup(
-                        df, ts_col, value_col, key_col,
-                        watermark_ms, advance_to_ms, cache=cache,
+                    built[key_col] = fam.build_keyed(
+                        df, ts_col, value_col, key_col, **kw
                     )
-                    layers["keyed_ohlc"] = koh
-                    r.register_keyed_ohlc_rollup(
-                        table, key_col, value_col, ts_col, koh,
-                        watermark_ms, advance_to_ms,
-                    )
-            if twa:
-                from uwheel_datafusion_spark.operators.twa import (
-                    build_keyed_twa_rollup,
-                    build_twa_rollup,
-                )
-
-                tw = build_twa_rollup(
-                    df, ts_col, value_col, watermark_ms, advance_to_ms,
-                    cache=cache,
-                )
-                layers["twa"] = tw
-                r.register_twa_rollup(
-                    table, value_col, ts_col, tw,
-                    watermark_ms, advance_to_ms,
-                )
-                if key_col is not None:
-                    ktw = build_keyed_twa_rollup(
-                        df, ts_col, value_col, key_col,
-                        watermark_ms, advance_to_ms, cache=cache,
-                    )
-                    layers["keyed_twa"] = ktw
-                    r.register_keyed_twa_rollup(
-                        table, key_col, value_col, ts_col, ktw,
-                        watermark_ms, advance_to_ms,
-                    )
-            if counter:
-                from uwheel_datafusion_spark.operators.counter import (
-                    build_counter_rollup,
-                    build_keyed_counter_rollup,
-                )
-
-                ct = build_counter_rollup(
-                    df, ts_col, value_col, watermark_ms, advance_to_ms,
-                    cache=cache,
-                )
-                layers["counter"] = ct
-                r.register_counter_rollup(
-                    table, value_col, ts_col, ct,
-                    watermark_ms, advance_to_ms,
-                )
-                if key_col is not None:
-                    kct = build_keyed_counter_rollup(
-                        df, ts_col, value_col, key_col,
-                        watermark_ms, advance_to_ms, cache=cache,
-                    )
-                    layers["keyed_counter"] = kct
-                    r.register_keyed_counter_rollup(
-                        table, key_col, value_col, ts_col, kct,
-                        watermark_ms, advance_to_ms,
+                for key, rollup in built.items():
+                    layers[("keyed_" if key else "") + fam.name] = rollup
+                    r._register_stitch(
+                        fam.name, table, key, ts_col, value_col, rollup,
+                        MINUTE_MS, watermark_ms, advance_to_ms,
                     )
             if key_col is not None:
                 from uwheel_datafusion_spark.operators.keyed_wheel import (
@@ -360,20 +308,16 @@ class WheelEngine:
         layer = {"m4": "ohlc", "keyed_m4": "keyed_ohlc"}.get(family, family)
         rollup = self._layers.get(t, {}).get(layer)
         if rollup is None:
+            base = family.removeprefix("keyed_")
             flag = {
+                "agg": "value_col=...",
                 "quantile": "quantiles=True",
-                "ohlc": "ohlc=True",
                 "m4": "ohlc=True",
-                "twa": "twa=True",
-                "counter": "counter=True",
                 "distinct": "distinct_col=...",
-                "keyed_agg": "key_col=... and value_col=...",
-                "keyed_quantile": "key_col=... and quantiles=True",
-                "keyed_ohlc": "key_col=... and ohlc=True",
-                "keyed_m4": "key_col=... and ohlc=True",
-                "keyed_twa": "key_col=... and twa=True",
-                "keyed_counter": "key_col=... and counter=True",
-            }[family]
+                **{f.name: f"{f.name}=True" for f in _STITCH},
+            }[base]
+            if base != family:
+                flag = f"key_col=... and {flag}"
             raise ValueError(
                 f"no {family} rollup for {table!r}: register_table with "
                 f"{flag} first"
@@ -384,21 +328,7 @@ class WheelEngine:
     #: with the batch family and the (batch column → role) projection
     _BATCHABLE = {
         "quantile_rollup": ("quantile", (("QUANTILE", "approx_quantile"),)),
-        "ohlc_rollup": (
-            "ohlc",
-            (
-                ("OPEN", "open"), ("HIGH", "high"), ("LOW", "low"),
-                ("CLOSE", "close"), ("CNT", "cnt"),
-            ),
-        ),
-        "twa_rollup": ("twa", (("TWA", "twa"), ("CNT", "cnt"))),
-        "counter_rollup": (
-            "counter",
-            (
-                ("INCREASE", "increase"), ("RATE", "rate_per_sec"),
-                ("CNT", "cnt"),
-            ),
-        ),
+        **{f"{fam.name}_rollup": (fam.name, fam.roles) for fam in _STITCH},
     }
 
     def sql_many(self, queries: "list[str]") -> "list[DataFrame]":

@@ -37,31 +37,53 @@ PromQL-class TSDBs ingest counters too (append-only per-series order).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uwheel_datafusion_spark.functions.quant import value_to_micros
-from uwheel_datafusion_spark.functions.time import (
-    MINUTE_MS,
-    bucket_ms,
-    ts_range_pred,
-    ts_to_ms,
-)
-
-_DEC = "decimal(38,0)"
+from uwheel_datafusion_spark.functions.time import MINUTE_MS
+from uwheel_datafusion_spark.operators import stitch
 
 
-def _step(prev_vm, cur_vm):
-    """Reset-aware per-step increase in micros (exact integers). A
-    null predecessor (first sample of a bucket / first partial of a
-    group) must yield NULL — a naive ``when(cur >= prev)`` would fall
-    through to the reset branch and count the first value as growth
-    (caught by the cascade-vs-direct differential)."""
+def _step(prev_vm, _prev_ts, cur_vm, _cur_ts):
+    """Reset-aware per-step increase in micros (exact integers), inside
+    a slot and across partials alike. A null predecessor (first sample
+    of a bucket / first partial of a group) must yield NULL — a naive
+    ``when(cur >= prev)`` would fall through to the reset branch and
+    count the first value as growth (caught by the cascade-vs-direct
+    differential)."""
     return (
         F.when(prev_vm.isNull(), F.lit(None).cast("long"))
         .when(cur_vm >= prev_vm, cur_vm - prev_vm)
         .otherwise(cur_vm)
     )
+
+
+def _partial(rows: DataFrame, group_cols: list) -> DataFrame:
+    rows = rows.withColumn("vm", value_to_micros(F.col("value")))
+    return stitch.edge_partial(rows, group_cols, "vm", "vm", _step, "inc")
+
+
+def _combine(parts: DataFrame, group_cols: list) -> DataFrame:
+    return stitch.ordered_edge_combine(parts, group_cols, "vm", _step, "inc")
+
+
+def _lower() -> list:
+    """increase (null for an empty group) and rate per second — null
+    for zero-duration extents (single observation)."""
+    inc = F.col("inc").cast("double") / F.lit(1e6)
+    dur_s = (
+        F.col("last_ts_ms") - F.col("first_ts_ms")
+    ).cast("double") / F.lit(1e3)
+    rate = F.when(
+        F.col("last_ts_ms") == F.col("first_ts_ms"), F.lit(None).cast("double")
+    ).otherwise(inc / dur_s)
+    return [
+        F.when(F.col("cnt").isNull(), F.lit(None).cast("double"))
+        .otherwise(inc)
+        .alias("increase"),
+        rate.alias("rate_per_sec"),
+    ]
 
 
 def build_counter_rollup(
@@ -73,69 +95,23 @@ def build_counter_rollup(
     slot_ms: int = MINUTE_MS,
     cache: bool = True,
 ) -> DataFrame:
-    ms = ts_to_ms(F.col(ts_col))
-    rows = df.filter(
-        ts_range_pred(df, ts_col, watermark_ms, advance_to_ms)
-    ).select(
-        bucket_ms(ms, slot_ms).alias("bucket_ms"),
-        ms.alias("ts_ms"),
-        F.col(value_col).cast("double").alias("value"),
-        value_to_micros(F.col(value_col).cast("double")).alias("vm"),
-    )
-    w = Window.partitionBy("bucket_ms").orderBy("ts_ms", "value")
-    step = _step(F.lag("vm").over(w), F.col("vm")).cast(_DEC)
-    okey = F.struct(F.col("ts_ms").alias("t"), F.col("value").alias("v"))
-    rollup = rows.withColumn("step", step).groupBy("bucket_ms").agg(
-        F.min_by(F.col("ts_ms"), okey).alias("first_ts_ms"),
-        F.min_by(F.col("vm"), okey).alias("first_vm"),
-        F.max_by(F.col("ts_ms"), okey).alias("last_ts_ms"),
-        F.max_by(F.col("vm"), okey).alias("last_vm"),
-        F.coalesce(F.sum("step"), F.lit(0).cast(_DEC)).alias("inc"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    # one cached partition: the rollup is tiny regardless of fact size;
-    # a range probe should be a single task (cf. WheelIndex build)
+    """Counter partial ``(bucket_ms, first/last edges in micros, inc,
+    cnt)``. One cached partition: the rollup is tiny regardless of fact
+    size; a range probe should be a single task (cf. WheelIndex
+    build)."""
+    rollup = stitch.build(COUNTER, df, ts_col, value_col, None,
+                          watermark_ms, advance_to_ms, slot_ms)
     return rollup.coalesce(1).cache() if cache else rollup
 
 
-def _combine(parts: DataFrame, group_cols: list) -> DataFrame:
-    """Ordered combine via the shared boundary-fold (operators/stitch);
-    the counter seam is the reset-aware step across the boundary."""
-    from uwheel_datafusion_spark.operators.stitch import ordered_edge_combine
-
-    def seam(prev_last_vm, _prev_last_ts, cur_first_vm, _cur_first_ts):
-        return _step(prev_last_vm, cur_first_vm)
-
-    return ordered_edge_combine(parts, group_cols, "vm", seam, "inc")
-
-
 def cascade_counter(rollup: DataFrame, slot_ms: int) -> DataFrame:
-    coarse = (F.col("bucket_ms") - F.col("bucket_ms") % F.lit(slot_ms)).alias(
-        "_cb"
-    )
-    return _combine(rollup.withColumn("_cb", coarse), ["_cb"]).withColumnRenamed(
-        "_cb", "bucket_ms"
-    )
-
-
-def _lowered_cols():
-    inc = F.col("inc").cast("double") / F.lit(1e6)
-    dur_s = (
-        F.col("last_ts_ms") - F.col("first_ts_ms")
-    ).cast("double") / F.lit(1e3)
-    rate = F.when(
-        F.col("last_ts_ms") == F.col("first_ts_ms"), F.lit(None).cast("double")
-    ).otherwise(inc / dur_s)
-    return inc.alias("increase"), rate.alias("rate_per_sec")
+    return stitch.cascade(COUNTER, rollup, slot_ms, [])
 
 
 def grouped_increase_df(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """Per-coarse-bucket ``(bucket_ms, increase, rate_per_sec, cnt)``;
     rate is null for zero-duration extents (single observation)."""
-    inc, rate = _lowered_cols()
-    return cascade_counter(rollup, slot_ms).select(
-        "bucket_ms", inc, rate, "cnt"
-    )
+    return stitch.grouped(COUNTER, rollup, slot_ms, [])
 
 
 def range_increase_df(
@@ -143,18 +119,7 @@ def range_increase_df(
 ) -> DataFrame:
     """Increase + rate over the bucket-aligned ``[start, end)``; 1-row,
     nulls/0 for an empty range."""
-    from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-    part = rollup.filter(_bucket_range_pred(rollup, start_ms, end_ms))
-    inc, rate = _lowered_cols()
-    combined = _combine(part, [])
-    return combined.select(
-        F.when(F.col("cnt").isNull(), F.lit(None).cast("double"))
-        .otherwise(F.col("inc").cast("double") / F.lit(1e6))
-        .alias("increase"),
-        rate,
-        F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-    )
+    return stitch.range_df(COUNTER, rollup, start_ms, end_ms)
 
 
 def build_keyed_counter_rollup(
@@ -172,45 +137,30 @@ def build_keyed_counter_rollup(
     ``increase()``/``rate()`` (every Prometheus counter is a labeled
     series): one shared build shuffle; resets detect strictly WITHIN a
     series. NOT coalesced (scales with cardinality × slots)."""
-    ms = ts_to_ms(F.col(ts_col))
-    rows = df.filter(
-        ts_range_pred(df, ts_col, watermark_ms, advance_to_ms)
-    ).select(
-        F.col(key_col).alias("grp"),
-        bucket_ms(ms, slot_ms).alias("bucket_ms"),
-        ms.alias("ts_ms"),
-        F.col(value_col).cast("double").alias("value"),
-        value_to_micros(F.col(value_col).cast("double")).alias("vm"),
-    )
-    w = Window.partitionBy("grp", "bucket_ms").orderBy("ts_ms", "value")
-    step = _step(F.lag("vm").over(w), F.col("vm")).cast(_DEC)
-    okey = F.struct(F.col("ts_ms").alias("t"), F.col("value").alias("v"))
-    rollup = rows.withColumn("step", step).groupBy("grp", "bucket_ms").agg(
-        F.min_by(F.col("ts_ms"), okey).alias("first_ts_ms"),
-        F.min_by(F.col("vm"), okey).alias("first_vm"),
-        F.max_by(F.col("ts_ms"), okey).alias("last_ts_ms"),
-        F.max_by(F.col("vm"), okey).alias("last_vm"),
-        F.coalesce(F.sum("step"), F.lit(0).cast(_DEC)).alias("inc"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
+    rollup = stitch.build(COUNTER, df, ts_col, value_col, key_col,
+                          watermark_ms, advance_to_ms, slot_ms)
     return rollup.cache() if cache else rollup
 
 
 def cascade_keyed_counter(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """A4 per series: reset-aware seams fold PARTITIONED BY the series
     key (one hash shuffle, collect-free at any cardinality)."""
-    coarse = (F.col("bucket_ms") - F.col("bucket_ms") % F.lit(slot_ms)).alias(
-        "_cb"
-    )
-    return _combine(
-        rollup.withColumn("_cb", coarse), ["grp", "_cb"]
-    ).withColumnRenamed("_cb", "bucket_ms")
+    return stitch.cascade(COUNTER, rollup, slot_ms, ["grp"])
 
 
 def keyed_grouped_increase_df(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """Per-(series, coarse bucket) ``(grp, bucket_ms, increase,
     rate_per_sec, cnt)``."""
-    inc, rate = _lowered_cols()
-    return cascade_keyed_counter(rollup, slot_ms).select(
-        "grp", "bucket_ms", inc, rate, "cnt"
-    )
+    return stitch.grouped(COUNTER, rollup, slot_ms, ["grp"])
+
+
+COUNTER = stitch.Family(
+    name="counter",
+    partial=_partial,
+    combine=_combine,
+    lower=_lower,
+    roles=(("INCREASE", "increase"), ("RATE", "rate_per_sec"),
+           ("CNT", "cnt")),
+    build=build_counter_rollup,
+    build_keyed=build_keyed_counter_rollup,
+)

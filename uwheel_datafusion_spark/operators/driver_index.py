@@ -67,7 +67,11 @@ class DriverWheelIndex:
 
     @classmethod
     def from_minute_rows(cls, rows, watermark_ms: int, advanced_ms: int):
-        """rows: (bucket_ms, sum_micros, cnt, min_value, max_value)."""
+        """rows: (bucket_ms, sum_micros, cnt, min_value, max_value).
+
+        A minute whose values are all NULL holds ``(None, cnt, None,
+        None)``: NULL is the identity (0, +inf, −inf). NumPy stores a
+        None min/max as NaN, which is replaced once after the loop."""
         n = (advanced_ms - watermark_ms) // MINUTE_MS
         sums = np.zeros(n, dtype=np.int64)
         cnts = np.zeros(n, dtype=np.int64)
@@ -76,10 +80,12 @@ class DriverWheelIndex:
         for r in rows:
             i = (r["bucket_ms"] - watermark_ms) // MINUTE_MS
             if 0 <= i < n:
-                sums[i] = r["sum_micros"]
+                sums[i] = r["sum_micros"] or 0
                 cnts[i] = r["cnt"]
                 mins[i] = r["min_value"]
                 maxs[i] = r["max_value"]
+        mins[np.isnan(mins)] = np.inf
+        maxs[np.isnan(maxs)] = -np.inf
         sum_prefix = np.concatenate(([0], np.cumsum(sums)))
         cnt_prefix = np.concatenate(([0], np.cumsum(cnts)))
         return cls(
@@ -113,8 +119,14 @@ class DriverWheelIndex:
             return 0
         return int(self._cnt_prefix[s[1]] - self._cnt_prefix[s[0]])
 
+    def _no_values(self, lo: int, hi: int) -> bool:
+        """No non-NULL value in slots [lo, hi): the min table keeps its
+        +inf identity and the max table its −inf one."""
+        return self._min.query(lo, hi) > self._max.query(lo, hi)
+
     def query_sum(self, start_ms: int, end_ms: int) -> float | None:
-        """SUM over [start, end) — two array reads (A5)."""
+        """SUM over [start, end) — two array reads (A5); a zero total is
+        told apart from an all-NULL range by the min/max tables."""
         s = self._slots(start_ms, end_ms)
         if s is None:
             return None
@@ -122,19 +134,23 @@ class DriverWheelIndex:
         if cp[s[1]] == cp[s[0]]:  # no rows in range ⇒ Option::None
             return None
         total = int(self._sum_prefix[s[1]] - self._sum_prefix[s[0]])
+        if total == 0 and self._no_values(*s):
+            return None
         return float(total) / QUANT_SCALE
 
     def query_min(self, start_ms: int, end_ms: int) -> float | None:
         s = self._slots(start_ms, end_ms)
         if s is None or self._cnt_prefix[s[1]] == self._cnt_prefix[s[0]]:
             return None
-        return float(self._min.query(s[0], s[1]))
+        v = float(self._min.query(s[0], s[1]))
+        return None if v == np.inf and self._no_values(*s) else v
 
     def query_max(self, start_ms: int, end_ms: int) -> float | None:
         s = self._slots(start_ms, end_ms)
         if s is None or self._cnt_prefix[s[1]] == self._cnt_prefix[s[0]]:
             return None
-        return float(self._max.query(s[0], s[1]))
+        v = float(self._max.query(s[0], s[1]))
+        return None if v == -np.inf and self._no_values(*s) else v
 
     def query_avg(self, start_ms: int, end_ms: int) -> float | None:
         s = self._slots(start_ms, end_ms)
@@ -144,6 +160,8 @@ class DriverWheelIndex:
         if not c:
             return None
         total = int(self._sum_prefix[s[1]] - self._sum_prefix[s[0]])
+        if total == 0 and self._no_values(*s):
+            return None
         return float(total) / float(c) / QUANT_SCALE
 
     def query_all(self, start_ms: int, end_ms: int) -> dict:

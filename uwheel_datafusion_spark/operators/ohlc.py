@@ -36,23 +36,54 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from uwheel_datafusion_spark.functions.time import (
-    MINUTE_MS,
-    bucket_ms,
-    ts_range_pred,
-    ts_to_ms,
-)
+from uwheel_datafusion_spark.functions.time import MINUTE_MS
+from uwheel_datafusion_spark.operators import stitch
 
-_PARTIAL_COLS = (
-    "bucket_ms",
-    "open_ts_ms",
-    "open",
-    "high",
-    "low",
-    "close_ts_ms",
-    "close",
-    "cnt",
-)
+
+def _partial(rows: DataFrame, group_cols: list) -> DataFrame:
+    """Lift + first combine in a single aggregation: ``min_by/max_by``
+    over a ``struct(ts, value)`` key implements the deterministic
+    tie-break (earliest ts, then smallest value for open; latest ts,
+    then largest value for close) — no window, no second pass. The key
+    is projected once below the aggregate, not rebuilt per function."""
+    rows = rows.withColumn(
+        "key", F.struct(F.col("ts_ms").alias("t"), F.col("value").alias("v"))
+    )
+    key = F.col("key")
+    return rows.groupBy(*group_cols, "bucket_ms").agg(
+        F.min_by(F.col("ts_ms"), key).alias("open_ts_ms"),
+        F.min_by(F.col("value"), key).alias("open"),
+        F.max("value").alias("high"),
+        F.min("value").alias("low"),
+        F.max_by(F.col("ts_ms"), key).alias("close_ts_ms"),
+        F.max_by(F.col("value"), key).alias("close"),
+        F.count(F.lit(1)).alias("cnt"),
+    )
+
+
+def _combine(parts: DataFrame, group_cols: list) -> DataFrame:
+    """Open from the earliest partial open, close from the latest
+    partial close, on the same (ts, value) key as the build; order-free,
+    so ``group_cols`` may be any column expressions."""
+    okey = F.struct(
+        F.col("open_ts_ms").alias("t"), F.col("open").alias("v")
+    )
+    ckey = F.struct(
+        F.col("close_ts_ms").alias("t"), F.col("close").alias("v")
+    )
+    return parts.groupBy(*group_cols).agg(
+        F.min_by(F.col("open_ts_ms"), okey).alias("open_ts_ms"),
+        F.min_by(F.col("open"), okey).alias("open"),
+        F.max("high").alias("high"),
+        F.min("low").alias("low"),
+        F.max_by(F.col("close_ts_ms"), ckey).alias("close_ts_ms"),
+        F.max_by(F.col("close"), ckey).alias("close"),
+        F.sum("cnt").alias("cnt"),
+    )
+
+
+def _lower() -> list:
+    return [F.col("open"), F.col("high"), F.col("low"), F.col("close")]
 
 
 def build_ohlc_rollup(
@@ -64,57 +95,14 @@ def build_ohlc_rollup(
     slot_ms: int = MINUTE_MS,
     cache: bool = True,
 ) -> DataFrame:
-    """Lift + first combine: one scan, one shuffle on the bucket key.
-
-    ``min_by/max_by`` over a ``struct(ts, value)`` key implements the
-    deterministic tie-break (earliest ts, then smallest value for open;
-    latest ts, then largest value for close) in a single aggregation —
-    no window, no second pass."""
-    ms = ts_to_ms(F.col(ts_col))
-    v = F.col(value_col).cast("double")
-    okey = F.struct(ms.alias("t"), v.alias("v"))  # asc ⇒ earliest, smallest
-    ckey = F.struct(ms.alias("t"), v.alias("v"))  # desc via max_by
-    rollup = (
-        df.filter(ts_range_pred(df, ts_col, watermark_ms, advance_to_ms))
-        .select(
-            bucket_ms(ms, slot_ms).alias("bucket_ms"),
-            ms.alias("ts_ms"),
-            v.alias("value"),
-            okey.alias("okey"),
-            ckey.alias("ckey"),
-        )
-        .groupBy("bucket_ms")
-        .agg(
-            F.min_by(F.col("ts_ms"), F.col("okey")).alias("open_ts_ms"),
-            F.min_by(F.col("value"), F.col("okey")).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by(F.col("ts_ms"), F.col("ckey")).alias("close_ts_ms"),
-            F.max_by(F.col("value"), F.col("ckey")).alias("close"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
-    # one cached partition: the rollup is tiny regardless of fact size;
-    # a range probe should be a single task (cf. WheelIndex build)
+    """Candle partial ``(bucket_ms, open_ts_ms, open, high, low,
+    close_ts_ms, close, cnt)``: one scan, one shuffle on the bucket
+    key. One cached partition: the rollup is tiny regardless of fact
+    size; a range probe should be a single task (cf. WheelIndex
+    build)."""
+    rollup = stitch.build(OHLC, df, ts_col, value_col, None, watermark_ms,
+                          advance_to_ms, slot_ms)
     return rollup.coalesce(1).cache() if cache else rollup
-
-
-def _combine(grouped) -> DataFrame:
-    okey = F.struct(
-        F.col("open_ts_ms").alias("t"), F.col("open").alias("v")
-    )
-    ckey = F.struct(
-        F.col("close_ts_ms").alias("t"), F.col("close").alias("v")
-    )
-    return grouped.agg(
-        F.min_by(F.col("open_ts_ms"), okey).alias("open_ts_ms"),
-        F.min_by(F.col("open"), okey).alias("open"),
-        F.max("high").alias("high"),
-        F.min("low").alias("low"),
-        F.max_by(F.col("close_ts_ms"), ckey).alias("close_ts_ms"),
-        F.max_by(F.col("close"), ckey).alias("close"),
-        F.sum("cnt").alias("cnt"),
-    )
 
 
 def cascade_ohlc(rollup: DataFrame, slot_ms: int) -> DataFrame:
@@ -122,10 +110,7 @@ def cascade_ohlc(rollup: DataFrame, slot_ms: int) -> DataFrame:
     the earliest fine open, close from the latest fine close. Exactly
     equal to a direct coarse build (combine is associative; ties break
     on the same (ts, value) key at every level)."""
-    coarse = (F.col("bucket_ms") - F.col("bucket_ms") % F.lit(slot_ms)).alias(
-        "bucket_ms"
-    )
-    return _combine(rollup.groupBy(coarse))
+    return stitch.cascade(OHLC, rollup, slot_ms, [])
 
 
 def m4_downsample_df(
@@ -148,23 +133,7 @@ def m4_downsample_df(
     less time; the produced buckets are exact M4 for the quantized
     width. Output: one row per non-empty pixel,
     ``(px_ms, open, high, low, close, cnt)``."""
-    from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-    assert n_pixels >= 1
-    span = end_ms - start_ms
-    px_ms = max(1, -(-span // n_pixels))  # ceil division
-    px_ms = -(-px_ms // slot_ms) * slot_ms  # round up to slot multiple
-    part = rollup.filter(_bucket_range_pred(rollup, start_ms, end_ms))
-    px = (
-        F.lit(start_ms)
-        + F.floor((F.col("bucket_ms") - F.lit(start_ms)) / F.lit(px_ms)).cast(
-            "long"
-        )
-        * F.lit(px_ms)
-    ).alias("px_ms")
-    return _combine(part.groupBy(px)).select(
-        "px_ms", "open", "high", "low", "close", "cnt"
-    )
+    return stitch.m4(OHLC, rollup, start_ms, end_ms, n_pixels, slot_ms, [])
 
 
 def m4_downsample_keyed_df(
@@ -180,22 +149,8 @@ def m4_downsample_keyed_df(
     re-combine groups by ``(grp, px_ms)`` so the single shuffle is
     over rollup rows (occupied slots × series), never fact rows.
     Output: ``(grp, px_ms, open, high, low, close, cnt)``."""
-    from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-    assert n_pixels >= 1
-    span = end_ms - start_ms
-    px_ms = max(1, -(-span // n_pixels))
-    px_ms = -(-px_ms // slot_ms) * slot_ms
-    part = rollup.filter(_bucket_range_pred(rollup, start_ms, end_ms))
-    px = (
-        F.lit(start_ms)
-        + F.floor((F.col("bucket_ms") - F.lit(start_ms)) / F.lit(px_ms)).cast(
-            "long"
-        )
-        * F.lit(px_ms)
-    ).alias("px_ms")
-    return _combine(part.groupBy("grp", px)).select(
-        "grp", "px_ms", "open", "high", "low", "close", "cnt"
+    return stitch.m4(
+        OHLC, rollup, start_ms, end_ms, n_pixels, slot_ms, ["grp"]
     )
 
 
@@ -203,13 +158,7 @@ def range_ohlc_df(rollup: DataFrame, start_ms: int, end_ms: int) -> DataFrame:
     """Candlestick of the bucket-aligned ``[start, end)``: combine the
     covered slots' partials (A5 combine+lower). 1-row; nulls/0 for an
     empty range."""
-    from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-    part = rollup.filter(_bucket_range_pred(rollup, start_ms, end_ms))
-    return _combine(part.groupBy()).select(
-        "open", "high", "low", "close",
-        F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-    )
+    return stitch.range_df(OHLC, rollup, start_ms, end_ms)
 
 
 def build_keyed_ohlc_rollup(
@@ -226,37 +175,26 @@ def build_keyed_ohlc_rollup(
     open, high, low, close_ts_ms, close, cnt)`` — one candle wheel per
     series sharing a single build shuffle (the keyed_wheel pattern
     applied to the OHLC family; per-symbol candlesticks are the
-    canonical multi-series workload)."""
-    ms = ts_to_ms(F.col(ts_col))
-    v = F.col(value_col).cast("double")
-    key = F.struct(ms.alias("t"), v.alias("v"))
-    rollup = (
-        df.filter(ts_range_pred(df, ts_col, watermark_ms, advance_to_ms))
-        .select(
-            F.col(key_col).alias("grp"),
-            bucket_ms(ms, slot_ms).alias("bucket_ms"),
-            ms.alias("ts_ms"),
-            v.alias("value"),
-            key.alias("k"),
-        )
-        .groupBy("grp", "bucket_ms")
-        .agg(
-            F.min_by(F.col("ts_ms"), F.col("k")).alias("open_ts_ms"),
-            F.min_by(F.col("value"), F.col("k")).alias("open"),
-            F.max("value").alias("high"),
-            F.min("value").alias("low"),
-            F.max_by(F.col("ts_ms"), F.col("k")).alias("close_ts_ms"),
-            F.max_by(F.col("value"), F.col("k")).alias("close"),
-            F.count(F.lit(1)).alias("cnt"),
-        )
-    )
+    canonical multi-series workload). NOT coalesced: keyed rollups
+    scale with key cardinality × slots."""
+    rollup = stitch.build(OHLC, df, ts_col, value_col, key_col,
+                          watermark_ms, advance_to_ms, slot_ms)
     return rollup.cache() if cache else rollup
 
 
 def cascade_keyed_ohlc(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """A4 tick/rotate per series: same associative combine as
     cascade_ohlc, grouped by (grp, coarse bucket)."""
-    coarse = (F.col("bucket_ms") - F.col("bucket_ms") % F.lit(slot_ms)).alias(
-        "bucket_ms"
-    )
-    return _combine(rollup.groupBy("grp", coarse))
+    return stitch.cascade(OHLC, rollup, slot_ms, ["grp"])
+
+
+OHLC = stitch.Family(
+    name="ohlc",
+    partial=_partial,
+    combine=_combine,
+    lower=_lower,
+    roles=(("OPEN", "open"), ("HIGH", "high"), ("LOW", "low"),
+           ("CLOSE", "close"), ("CNT", "cnt")),
+    build=build_ohlc_rollup,
+    build_keyed=build_keyed_ohlc_rollup,
+)

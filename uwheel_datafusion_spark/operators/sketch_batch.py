@@ -25,9 +25,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uwheel_datafusion_spark.functions.time import MINUTE_MS
+from uwheel_datafusion_spark.operators import stitch
+from uwheel_datafusion_spark.operators.counter import COUNTER
+from uwheel_datafusion_spark.operators.ohlc import OHLC
 from uwheel_datafusion_spark.operators.quantile_rollup import (
     DEFAULT_BIN_WIDTH,
 )
+from uwheel_datafusion_spark.operators.twa import TWA
 
 _BLOCK_SLOTS = 64
 
@@ -148,20 +152,8 @@ def range_twa_batch_df(
     twa double, cnt)`` per input range, null/0 for empty ranges — the
     same values ``range_twa_df`` returns per query. The ordered
     boundary-fold (operators/stitch) runs per query id."""
-    from uwheel_datafusion_spark.operators.twa import _combine, _lower_twa
-
-    tagged, qids = _tag_rollup_with_queries(rollup, ranges, slot_ms)
-    per_q = _combine(tagged, ["query_id"]).select(
-        "query_id", _lower_twa().alias("twa"), "cnt"
-    )
-    return (
-        qids.join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            "twa",
-            F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-        )
-        .orderBy("query_id")
+    return stitch.per_query(
+        TWA, *_tag_rollup_with_queries(rollup, ranges, slot_ms)
     )
 
 
@@ -174,30 +166,8 @@ def range_increase_batch_df(
     increase, rate_per_sec, cnt)`` per input range — the same values
     ``range_increase_df`` returns per query (reset-aware seam folded
     per query id)."""
-    from uwheel_datafusion_spark.operators.counter import (
-        _combine,
-        _lowered_cols,
-    )
-
-    tagged, qids = _tag_rollup_with_queries(rollup, ranges, slot_ms)
-    inc, rate = _lowered_cols()
-    per_q = _combine(tagged, ["query_id"]).select(
-        "query_id",
-        F.when(F.col("cnt").isNull(), F.lit(None).cast("double"))
-        .otherwise(F.col("inc").cast("double") / F.lit(1e6))
-        .alias("increase"),
-        rate,
-        "cnt",
-    )
-    return (
-        qids.join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            "increase",
-            "rate_per_sec",
-            F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-        )
-        .orderBy("query_id")
+    return stitch.per_query(
+        COUNTER, *_tag_rollup_with_queries(rollup, ranges, slot_ms)
     )
 
 
@@ -281,23 +251,8 @@ def range_ohlc_batch_df(
     for empty ranges — the same values ``range_ohlc_df`` returns per
     query. Combine is the family's associative (ts, value)-keyed fold,
     grouped by query id."""
-    from uwheel_datafusion_spark.operators.ohlc import _combine
-
-    tagged, qids = _tag_rollup_with_queries(rollup, ranges, slot_ms)
-    per_q = _combine(tagged.groupBy("query_id")).select(
-        "query_id", "open", "high", "low", "close", "cnt"
-    )
-    return (
-        qids.join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            "open",
-            "high",
-            "low",
-            "close",
-            F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-        )
-        .orderBy("query_id")
+    return stitch.per_query(
+        OHLC, *_tag_rollup_with_queries(rollup, ranges, slot_ms)
     )
 
 
@@ -417,37 +372,28 @@ def range_m4_batch_df(
     the block tag — still one job, rollup cells only. An empty range
     contributes no rows (a chart with no pixels), unlike the scalar
     batch families' null row."""
-    from uwheel_datafusion_spark.operators.ohlc import _combine
-
     assert n_pixels >= 1
     tagged, _qids = _tag_rollup_with_queries(rollup, ranges, slot_ms)
-    geo = []
-    for qid, (s, e) in enumerate(ranges):
-        px = max(1, -(-(e - s) // n_pixels))
-        px = -(-px // slot_ms) * slot_ms
-        geo.append((qid, s, px))
+    geo = [
+        (qid, s, stitch.pixel_width(e - s, n_pixels, slot_ms))
+        for qid, (s, e) in enumerate(ranges)
+    ]
     gdf = rollup.sparkSession.createDataFrame(
         geo, "query_id int, q_s long, q_px long"
     )
     j = tagged.join(F.broadcast(gdf), "query_id")
-    pxcol = (
-        F.col("q_s")
-        + F.floor((F.col("bucket_ms") - F.col("q_s")) / F.col("q_px")).cast(
-            "long"
-        )
-        * F.col("q_px")
-    ).alias("px_ms")
-    return _combine(j.groupBy("query_id", pxcol)).select(
-        "query_id", "px_ms", "open", "high", "low", "close", "cnt"
+    return stitch.pixel_candles(
+        OHLC, j, ["query_id"], F.col("q_s"), F.col("q_px")
     ).orderBy("query_id", "px_ms")
 
 
-def _keyed_probe_frames(rollup: DataFrame, probes: "list[tuple]"):
-    """Broadcastable ``(query_id, pkey, run_s, run_e)`` probe frame for
-    keyed batch serving, key-typed from the rollup's ``grp`` column
+def _probe_join(rollup: DataFrame, probes: "list[tuple]"):
+    """Keyed rollup rows tagged with the ids of the ``(key, start_ms,
+    end_ms)`` probes covering them, plus the bare query_id frame for
+    left-join null semantics. The broadcast ``(query_id, pkey, run_s,
+    run_e)`` probe frame is key-typed from the rollup's ``grp`` column
     (the keyed_wheel.query_rollup_batch_df pattern: key EQUALITY is
-    selective, so a plain hash join replaces the block trick), plus
-    the bare query_id frame for left-join null semantics."""
+    selective, so a plain hash join replaces the block trick)."""
     from pyspark.sql.types import (
         IntegerType,
         LongType,
@@ -468,7 +414,13 @@ def _keyed_probe_frames(rollup: DataFrame, probes: "list[tuple]"):
     pdf = spark.createDataFrame(
         [(i, k, s, e) for i, (k, s, e) in enumerate(probes)], schema
     )
-    return pdf, pdf.select("query_id")
+    joined = rollup.join(
+        F.broadcast(pdf),
+        (rollup["grp"] == pdf["pkey"])
+        & (rollup["bucket_ms"] >= pdf["run_s"])
+        & (rollup["bucket_ms"] < pdf["run_e"]),
+    )
+    return joined, pdf.select("query_id")
 
 
 def keyed_range_quantile_batch_df(
@@ -483,13 +435,7 @@ def keyed_range_quantile_batch_df(
     probes with no data — the keyed twin of range_quantile_batch_df.
     Join on key equality + bucket containment (broadcast probes),
     merge bins per (query_id, bin), one packed CDF walk per query."""
-    pdf, qids = _keyed_probe_frames(rollup, probes)
-    joined = rollup.join(
-        F.broadcast(pdf),
-        (rollup["grp"] == pdf["pkey"])
-        & (rollup["bucket_ms"] >= pdf["run_s"])
-        & (rollup["bucket_ms"] < pdf["run_e"]),
-    )
+    joined, qids = _probe_join(rollup, probes)
     bins = joined.groupBy("query_id", "bin").agg(F.sum("cnt").alias("cnt"))
     packed = bins.groupBy("query_id").agg(
         F.sort_array(F.collect_list(F.struct("bin", "cnt"))).alias("bc"),
@@ -524,28 +470,7 @@ def keyed_range_ohlc_batch_df(
     order, nulls/0 for empty probes — the keyed twin of
     range_ohlc_batch_df with the same associative (ts, value)-keyed
     candle fold per query id."""
-    from uwheel_datafusion_spark.operators.ohlc import _combine
-
-    pdf, qids = _keyed_probe_frames(rollup, probes)
-    joined = rollup.join(
-        F.broadcast(pdf),
-        (rollup["grp"] == pdf["pkey"])
-        & (rollup["bucket_ms"] >= pdf["run_s"])
-        & (rollup["bucket_ms"] < pdf["run_e"]),
-    )
-    out = _combine(joined.groupBy("query_id"))
-    return (
-        qids.join(out, "query_id", "left")
-        .select(
-            "query_id",
-            "open",
-            "high",
-            "low",
-            "close",
-            F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-        )
-        .orderBy("query_id")
-    )
+    return stitch.per_query(OHLC, *_probe_join(rollup, probes))
 
 
 def keyed_range_twa_batch_df(
@@ -556,27 +481,7 @@ def keyed_range_twa_batch_df(
     cnt)`` per probe in input order, null/0 for empty probes. The
     ordered boundary stitch folds per query_id — a probe only ever
     covers ONE series, so the per-query fold never crosses series."""
-    from uwheel_datafusion_spark.operators.twa import _combine, _lower_twa
-
-    pdf, qids = _keyed_probe_frames(rollup, probes)
-    joined = rollup.join(
-        F.broadcast(pdf),
-        (rollup["grp"] == pdf["pkey"])
-        & (rollup["bucket_ms"] >= pdf["run_s"])
-        & (rollup["bucket_ms"] < pdf["run_e"]),
-    ).drop("grp", "pkey", "run_s", "run_e")
-    per_q = _combine(joined, ["query_id"]).select(
-        "query_id", _lower_twa().alias("twa"), "cnt"
-    )
-    return (
-        qids.join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            "twa",
-            F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-        )
-        .orderBy("query_id")
-    )
+    return stitch.per_query(TWA, *_probe_join(rollup, probes))
 
 
 def keyed_range_increase_batch_df(
@@ -586,37 +491,7 @@ def keyed_range_increase_batch_df(
     in ONE job from the keyed counter rollup: ``(query_id, increase,
     rate_per_sec, cnt)`` per probe in input order (reset-aware seams
     fold per query_id — one series per probe)."""
-    from uwheel_datafusion_spark.operators.counter import (
-        _combine,
-        _lowered_cols,
-    )
-
-    pdf, qids = _keyed_probe_frames(rollup, probes)
-    joined = rollup.join(
-        F.broadcast(pdf),
-        (rollup["grp"] == pdf["pkey"])
-        & (rollup["bucket_ms"] >= pdf["run_s"])
-        & (rollup["bucket_ms"] < pdf["run_e"]),
-    ).drop("grp", "pkey", "run_s", "run_e")
-    _inc, rate = _lowered_cols()
-    per_q = _combine(joined, ["query_id"]).select(
-        "query_id",
-        F.when(F.col("cnt").isNull(), F.lit(None).cast("double"))
-        .otherwise(F.col("inc").cast("double") / F.lit(1e6))
-        .alias("increase"),
-        rate,
-        "cnt",
-    )
-    return (
-        qids.join(per_q, "query_id", "left")
-        .select(
-            "query_id",
-            "increase",
-            "rate_per_sec",
-            F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-        )
-        .orderBy("query_id")
-    )
+    return stitch.per_query(COUNTER, *_probe_join(rollup, probes))
 
 
 def keyed_range_m4_batch_df(
@@ -631,26 +506,13 @@ def keyed_range_m4_batch_df(
     range_m4_batch_df. Pixel geometry is computed IN-PLAN from each
     probe's own (run_s, run_e) span (slot-quantized, same contract as
     m4_downsample_df); empty probes emit no pixels."""
-    from uwheel_datafusion_spark.operators.ohlc import _combine
-
     assert n_pixels >= 1
-    pdf, _qids = _keyed_probe_frames(rollup, probes)
-    joined = rollup.join(
-        F.broadcast(pdf),
-        (rollup["grp"] == pdf["pkey"])
-        & (rollup["bucket_ms"] >= pdf["run_s"])
-        & (rollup["bucket_ms"] < pdf["run_e"]),
-    )
+    joined, _qids = _probe_join(rollup, probes)
     span = F.col("run_e") - F.col("run_s")
     px0 = F.floor((span + F.lit(n_pixels - 1)) / F.lit(n_pixels)).cast("long")
     px_w = (
         F.floor((px0 + F.lit(slot_ms - 1)) / F.lit(slot_ms)) * F.lit(slot_ms)
     ).cast("long")
-    pxcol = (
-        F.col("run_s")
-        + F.floor((F.col("bucket_ms") - F.col("run_s")) / px_w).cast("long")
-        * px_w
-    ).alias("px_ms")
-    return _combine(joined.groupBy("query_id", pxcol)).select(
-        "query_id", "px_ms", "open", "high", "low", "close", "cnt"
+    return stitch.pixel_candles(
+        OHLC, joined, ["query_id"], F.col("run_s"), px_w
     ).orderBy("query_id", "px_ms")

@@ -35,18 +35,39 @@ window+agg over SLOT rows only (≤ horizon/slot), never fact rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from uwheel_datafusion_spark.functions.quant import value_to_micros
-from uwheel_datafusion_spark.functions.time import (
-    MINUTE_MS,
-    bucket_ms,
-    ts_range_pred,
-    ts_to_ms,
-)
+from uwheel_datafusion_spark.functions.time import MINUTE_MS
+from uwheel_datafusion_spark.operators import stitch
 
-_DEC = "decimal(38,0)"
+
+def _seam(prev_v, prev_ts, _cur_v, cur_ts):
+    """LOCF segment ``vm(prev_v) × (cur_ts − prev_ts)`` between two
+    consecutive samples — inside a slot and across partials alike."""
+    return value_to_micros(prev_v).cast(stitch.DEC) * (
+        cur_ts - prev_ts
+    ).cast(stitch.DEC)
+
+
+def _partial(rows: DataFrame, group_cols: list) -> DataFrame:
+    return stitch.edge_partial(rows, group_cols, "value", "v", _seam, "area")
+
+
+def _combine(parts: DataFrame, group_cols: list) -> DataFrame:
+    return stitch.ordered_edge_combine(parts, group_cols, "v", _seam, "area")
+
+
+def _lower() -> list:
+    """area(micros·ms) → double TWA; all-one-ts buckets lower to the
+    first value (zero-duration integral)."""
+    dur = F.col("last_ts_ms") - F.col("first_ts_ms")
+    return [
+        F.when(dur == 0, F.col("first_v")).otherwise(
+            F.col("area").cast("double") / F.lit(1e6) / dur.cast("double")
+        ).alias("twa")
+    ]
 
 
 def build_twa_rollup(
@@ -58,72 +79,24 @@ def build_twa_rollup(
     slot_ms: int = MINUTE_MS,
     cache: bool = True,
 ) -> DataFrame:
-    ms = ts_to_ms(F.col(ts_col))
-    rows = df.filter(
-        ts_range_pred(df, ts_col, watermark_ms, advance_to_ms)
-    ).select(
-        bucket_ms(ms, slot_ms).alias("bucket_ms"),
-        ms.alias("ts_ms"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    w = Window.partitionBy("bucket_ms").orderBy("ts_ms", "value")
-    seg = (
-        value_to_micros(F.lag("value").over(w)).cast(_DEC)
-        * (F.col("ts_ms") - F.lag("ts_ms").over(w)).cast(_DEC)
-    )
-    okey = F.struct(F.col("ts_ms").alias("t"), F.col("value").alias("v"))
-    with_seg = rows.withColumn("seg", seg)
-    rollup = with_seg.groupBy("bucket_ms").agg(
-        F.min_by(F.col("ts_ms"), okey).alias("first_ts_ms"),
-        F.min_by(F.col("value"), okey).alias("first_v"),
-        F.max_by(F.col("ts_ms"), okey).alias("last_ts_ms"),
-        F.max_by(F.col("value"), okey).alias("last_v"),
-        F.coalesce(F.sum("seg"), F.lit(0).cast(_DEC)).alias("area"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    # one cached partition: the rollup is tiny regardless of fact size;
-    # a range probe should be a single task (cf. WheelIndex build)
+    """TWA partial ``(bucket_ms, first/last edges, area, cnt)``. One
+    cached partition: the rollup is tiny regardless of fact size; a
+    range probe should be a single task (cf. WheelIndex build)."""
+    rollup = stitch.build(TWA, df, ts_col, value_col, None, watermark_ms,
+                          advance_to_ms, slot_ms)
     return rollup.coalesce(1).cache() if cache else rollup
-
-
-def _combine(parts: DataFrame, group_cols: list) -> DataFrame:
-    """Ordered combine via the shared boundary-fold (operators/stitch);
-    the TWA seam is the LOCF segment between partials."""
-    from uwheel_datafusion_spark.operators.stitch import ordered_edge_combine
-
-    def seam(prev_last_v, prev_last_ts, _cur_first_v, cur_first_ts):
-        return value_to_micros(prev_last_v).cast(_DEC) * (
-            cur_first_ts - prev_last_ts
-        ).cast(_DEC)
-
-    return ordered_edge_combine(parts, group_cols, "v", seam, "area")
-
-
-def _lower_twa() -> F.Column:
-    """area(micros·ms) → double TWA; all-one-ts buckets lower to the
-    first value (zero-duration integral)."""
-    dur = F.col("last_ts_ms") - F.col("first_ts_ms")
-    return F.when(dur == 0, F.col("first_v")).otherwise(
-        F.col("area").cast("double") / F.lit(1e6) / dur.cast("double")
-    )
 
 
 def cascade_twa(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """Coarse-grain partials from fine ones (A4) — exactly the direct
     coarse build (segment-once invariant)."""
-    coarse = (F.col("bucket_ms") - F.col("bucket_ms") % F.lit(slot_ms)).alias(
-        "_cb"
-    )
-    out = _combine(rollup.withColumn("_cb", coarse), ["_cb"])
-    return out.withColumnRenamed("_cb", "bucket_ms")
+    return stitch.cascade(TWA, rollup, slot_ms, [])
 
 
 def grouped_twa_df(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """Per-coarse-bucket time-weighted average
     ``(bucket_ms, twa double, cnt)``."""
-    return cascade_twa(rollup, slot_ms).select(
-        "bucket_ms", _lower_twa().alias("twa"), "cnt"
-    )
+    return stitch.grouped(TWA, rollup, slot_ms, [])
 
 
 def range_twa_df(rollup: DataFrame, start_ms: int, end_ms: int) -> DataFrame:
@@ -131,13 +104,7 @@ def range_twa_df(rollup: DataFrame, start_ms: int, end_ms: int) -> DataFrame:
     slots in bucket order. 1-row ``(twa double, cnt)``; null/0 when the
     range has no samples. Integration is sample-extent-based (first to
     last observation inside the range — TimescaleDB semantics)."""
-    from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-    part = rollup.filter(_bucket_range_pred(rollup, start_ms, end_ms))
-    return _combine(part, []).select(
-        _lower_twa().alias("twa"),
-        F.coalesce(F.col("cnt"), F.lit(0).cast("long")).alias("cnt"),
-    )
+    return stitch.range_df(TWA, rollup, start_ms, end_ms)
 
 
 def build_keyed_twa_rollup(
@@ -157,29 +124,8 @@ def build_keyed_twa_rollup(
     segments integrate strictly WITHIN a series — no cross-series
     seams. NOT coalesced to one partition: keyed rollups scale with
     key cardinality × slots."""
-    ms = ts_to_ms(F.col(ts_col))
-    rows = df.filter(
-        ts_range_pred(df, ts_col, watermark_ms, advance_to_ms)
-    ).select(
-        F.col(key_col).alias("grp"),
-        bucket_ms(ms, slot_ms).alias("bucket_ms"),
-        ms.alias("ts_ms"),
-        F.col(value_col).cast("double").alias("value"),
-    )
-    w = Window.partitionBy("grp", "bucket_ms").orderBy("ts_ms", "value")
-    seg = (
-        value_to_micros(F.lag("value").over(w)).cast(_DEC)
-        * (F.col("ts_ms") - F.lag("ts_ms").over(w)).cast(_DEC)
-    )
-    okey = F.struct(F.col("ts_ms").alias("t"), F.col("value").alias("v"))
-    rollup = rows.withColumn("seg", seg).groupBy("grp", "bucket_ms").agg(
-        F.min_by(F.col("ts_ms"), okey).alias("first_ts_ms"),
-        F.min_by(F.col("value"), okey).alias("first_v"),
-        F.max_by(F.col("ts_ms"), okey).alias("last_ts_ms"),
-        F.max_by(F.col("value"), okey).alias("last_v"),
-        F.coalesce(F.sum("seg"), F.lit(0).cast(_DEC)).alias("area"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
+    rollup = stitch.build(TWA, df, ts_col, value_col, key_col,
+                          watermark_ms, advance_to_ms, slot_ms)
     return rollup.cache() if cache else rollup
 
 
@@ -187,15 +133,20 @@ def cascade_keyed_twa(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """A4 per series: the ordered boundary-stitch runs PARTITIONED BY
     the series key — each series' seams fold independently in its own
     partition (one hash shuffle, collect-free at any cardinality)."""
-    coarse = (F.col("bucket_ms") - F.col("bucket_ms") % F.lit(slot_ms)).alias(
-        "_cb"
-    )
-    out = _combine(rollup.withColumn("_cb", coarse), ["grp", "_cb"])
-    return out.withColumnRenamed("_cb", "bucket_ms")
+    return stitch.cascade(TWA, rollup, slot_ms, ["grp"])
 
 
 def keyed_grouped_twa_df(rollup: DataFrame, slot_ms: int) -> DataFrame:
     """Per-(series, coarse bucket) TWA ``(grp, bucket_ms, twa, cnt)``."""
-    return cascade_keyed_twa(rollup, slot_ms).select(
-        "grp", "bucket_ms", _lower_twa().alias("twa"), "cnt"
-    )
+    return stitch.grouped(TWA, rollup, slot_ms, ["grp"])
+
+
+TWA = stitch.Family(
+    name="twa",
+    partial=_partial,
+    combine=_combine,
+    lower=_lower,
+    roles=(("TWA", "twa"), ("CNT", "cnt")),
+    build=build_twa_rollup,
+    build_keyed=build_keyed_twa_rollup,
+)

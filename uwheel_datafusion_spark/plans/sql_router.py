@@ -27,10 +27,15 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass
 from datetime import datetime, timezone
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 from uwheel_datafusion_spark.functions.time import HOUR_MS, MINUTE_MS
+from uwheel_datafusion_spark.operators import stitch
+from uwheel_datafusion_spark.operators.counter import COUNTER
+from uwheel_datafusion_spark.operators.ohlc import OHLC
+from uwheel_datafusion_spark.operators.twa import TWA
 from uwheel_datafusion_spark.operators.wheel import WheelIndex
 
 _AGGS = ("SUM", "COUNT", "MIN", "MAX", "AVG")
@@ -419,6 +424,49 @@ def _gran_finer_than_slot(gran: str, slot_ms: int) -> bool:
     return g_ms < slot_ms or g_ms % slot_ms != 0
 
 
+def _stitch_range(m: re.Match, ts_col: str, slot_ms: int, wm: int, adv: int):
+    """Shared ts-column / GROUP BY / alignment / horizon validation for
+    every stitch-family spelling (scalar, GROUP BY date_trunc, GROUP BY
+    key[, date_trunc]): whichever groups the matched pattern has are
+    checked. Returns ``(s, e, gran, balias, kalias)`` or a
+    fallback-reason string."""
+    g = m.groupdict()
+    ts_refs = {g[k].lower() for k in ("ts0", "ts1", "ts2", "ts3") if g.get(k)}
+    if ts_refs != {ts_col}:
+        return "bucket/filter column is not the rollup ts"
+    gran = balias = kalias = None
+    if g.get("gran"):
+        gran = g["gran"].lower()
+        if g.get("gran2") and g["gran2"].lower() != gran:
+            return "GROUP BY granularity differs from SELECT"
+        if _gran_finer_than_slot(gran, slot_ms):
+            return "granularity finer than the rollup slot grain"
+        balias = g["balias"] or "bucket"
+        if g.get("gb_alias") and g["gb_alias"].lower() not in (
+            balias.lower(), ts_col,
+        ):
+            return "GROUP BY key is not the bucket expression"
+    if "key" in g:
+        kalias = g["kalias"] or g["key"]
+        if g["gb_key"] and g["gb_key"].lower() not in (
+            g["key"].lower(), kalias.lower(),
+        ):
+            return "GROUP BY key is not the series key"
+    if g.get("gb_bucket") and g["gb_bucket"].lower() not in (
+        balias.lower(), ts_col,
+    ):
+        return "GROUP BY bucket is not the bucket expr"
+    s = _parse_ts_literal(g["start"])
+    e = _parse_ts_literal(g["end"])
+    if s is None or e is None:
+        return "unparseable timestamp literal"
+    if s % slot_ms or e % slot_ms:
+        return "endpoints not aligned to the rollup slot grain"
+    if s < wm or e > adv:
+        return "range outside the rollup horizon"
+    return (s, e, gran, balias, kalias)
+
+
 @dataclass
 class RouteDecision:
     path: str  # "index" | "rollup" | "keyed_rollup" | "distinct_rollup" | "sql"
@@ -626,7 +674,7 @@ def _counter_fallback_sql(
     """
 
 
-def _m4_fallback_sql(m: re.Match, slot_ms: int = MINUTE_MS) -> str:
+def _m4_fallback_sql(m: re.Match, keyed: bool, slot_ms: int) -> str:
     """Lower a matched-but-unservable M4 query to a min_by/max_by scan
     with the same slot-quantized pixel geometry as m4_downsample_df
     (the REGISTERED rollup slot grain when one exists, else the
@@ -635,8 +683,12 @@ def _m4_fallback_sql(m: re.Match, slot_ms: int = MINUTE_MS) -> str:
     for non-minute-slot registrations), so the dialect query runs,
     and agrees with the rollup path on servable ranges. Pixel width
     derives in-plan from the query's own literals (integer
-    ceil-division; a 1-row broadcast geometry frame)."""
+    ceil-division; a 1-row broadcast geometry frame). The keyed form
+    adds the series key to every clause."""
     ts, v, n = m["mts"], m["mv"], int(m["npx"])
+    k_sel = f"{m['key']} AS k," if keyed else ""
+    k_out = f"k AS {m['kalias'] or m['key']}," if keyed else ""
+    k_mid = "k, " if keyed else ""
     return f"""
         WITH g AS (
             SELECT s_ms,
@@ -646,55 +698,121 @@ def _m4_fallback_sql(m: re.Match, slot_ms: int = MINUTE_MS) -> str:
                          unix_millis(TIMESTAMP '{m['end']}') AS e_ms)
         ),
         ev AS (
-            SELECT g.s_ms + ((t - g.s_ms) DIV g.px) * g.px AS px_ms, t, v
+            SELECT {k_mid}g.s_ms + ((t - g.s_ms) DIV g.px) * g.px AS px_ms, t, v
             FROM (
-                SELECT CAST(floor(unix_micros(
-                           CAST({ts} AS TIMESTAMP)) / 1000) AS BIGINT) AS t,
-                       {v} AS v
-                FROM {m['table']} {_range_where(m)}
-            ) CROSS JOIN g
-        )
-        SELECT px_ms,
-               min_by(v, struct(t, v)) AS open,
-               max(v) AS high,
-               min(v) AS low,
-               max_by(v, struct(t, v)) AS close,
-               count(*) AS cnt
-        FROM ev GROUP BY px_ms
-    """
-
-
-def _keyed_m4_fallback_sql(m: re.Match, slot_ms: int = MINUTE_MS) -> str:
-    """Keyed twin of _m4_fallback_sql: per-series pixels from a
-    min_by/max_by scan partitioned by the series key."""
-    ts, v, n = m["mts"], m["mv"], int(m["npx"])
-    key, kalias = m["key"], m["kalias"] or m["key"]
-    return f"""
-        WITH g AS (
-            SELECT s_ms,
-                   ((((e_ms - s_ms) + {n - 1}) DIV {n} + {slot_ms - 1})
-                       DIV {slot_ms}) * {slot_ms} AS px
-            FROM (SELECT unix_millis(TIMESTAMP '{m['start']}') AS s_ms,
-                         unix_millis(TIMESTAMP '{m['end']}') AS e_ms)
-        ),
-        ev AS (
-            SELECT k, g.s_ms + ((t - g.s_ms) DIV g.px) * g.px AS px_ms, t, v
-            FROM (
-                SELECT {key} AS k,
+                SELECT {k_sel}
                        CAST(floor(unix_micros(
                            CAST({ts} AS TIMESTAMP)) / 1000) AS BIGINT) AS t,
                        {v} AS v
                 FROM {m['table']} {_range_where(m)}
             ) CROSS JOIN g
         )
-        SELECT k AS {kalias}, px_ms,
+        SELECT {k_out} px_ms,
                min_by(v, struct(t, v)) AS open,
                max(v) AS high,
                min(v) AS low,
                max_by(v, struct(t, v)) AS close,
                count(*) AS cnt
-        FROM ev GROUP BY k, px_ms
+        FROM ev GROUP BY {k_mid}px_ms
     """
+
+
+def _ohlc_cols(m: re.Match, ts_col: str, value_col: str) -> str | None:
+    if {m["ov"].lower(), m["hv"].lower(), m["lv"].lower(),
+            m["cv"].lower()} != {value_col}:
+        return "aggregated column is not the rollup value"
+    for k, k1, k2 in (("ok", "ok1", "ok2"), ("ck", "ck1", "ck2")):
+        if m[k] is not None:
+            ok = m[k].lower() == ts_col
+        else:
+            ok = (m[k1].lower(), m[k2].lower()) == (ts_col, value_col)
+        if not ok:
+            return (
+                "min_by/max_by order key is not the rollup ts "
+                "(or its (ts, value) tie-break)"
+            )
+    return None
+
+
+def _fn_cols(label: str, pairs):
+    """Column check of a dialect function family: every present
+    ``(value group, ts group)`` pair must name the rollup's columns."""
+
+    def check(m: re.Match, ts_col: str, value_col: str) -> str | None:
+        for vg, tg in pairs:
+            if m[vg] is not None and (
+                m[vg].lower() != value_col or m[tg].lower() != ts_col
+            ):
+                return f"{label} columns are not the rollup (value, ts)"
+        return None
+
+    return check
+
+
+@dataclass(frozen=True)
+class _StitchCell:
+    """The router side of a stitch family: the SQL spellings it serves
+    and how a match becomes a decision. The rollup's own combine,
+    lowering and roles come from the operator descriptor ``fam``."""
+
+    fam: stitch.Family
+    #: RouteDecision.path is ``[keyed_]<path>_rollup``
+    path: str
+    agg: str
+    #: the rollup's name in reasons ("no OHLC rollup for …")
+    label: str
+    how: str
+    #: (scalar, grouped | None, keyed) statement patterns
+    patterns: tuple
+    #: (m, ts_col, value_col) → fallback reason, or None when the
+    #: statement names the rollup's columns
+    cols: Callable
+    #: role → (alias group, group whose presence requests the role)
+    aliases: dict
+    #: (m, grouped, keyed, slot_ms) → generated Spark statement, for
+    #: the dialect functions with no Spark builtin
+    fallback: Callable | None = None
+
+
+_CNT_ALIAS = {"CNT": ("cntalias", "cnt")}
+
+_OHLC_CELL = _StitchCell(
+    OHLC, "ohlc", "OHLC", "OHLC", "associative candle re-combine",
+    (_OHLC_PATTERN, _OHLC_GROUP_PATTERN, _KEYED_OHLC_PATTERN),
+    _ohlc_cols,
+    {"OPEN": ("oalias", None), "HIGH": ("halias", None),
+     "LOW": ("lalias", None), "CLOSE": ("calias", None), **_CNT_ALIAS},
+)
+_TWA_CELL = _StitchCell(
+    TWA, "twa", "TWA", "TWA", "boundary-stitching combine",
+    (_TWA_PATTERN, _TWA_GROUP_PATTERN, _KEYED_TWA_PATTERN),
+    _fn_cols("TWA", (("tv", "tts"),)),
+    {"TWA": ("talias", None), **_CNT_ALIAS},
+    lambda m, grouped, keyed, _slot: _twa_fallback_sql(m, grouped, keyed),
+)
+_COUNTER_CELL = _StitchCell(
+    COUNTER, "counter", "COUNTER", "counter", "reset-aware stitch",
+    (_CTR_PATTERN, _CTR_GROUP_PATTERN, _KEYED_CTR_PATTERN),
+    _fn_cols("counter", (("iv", "its"), ("rv", "rts"))),
+    {"INCREASE": ("ialias", None), "RATE": ("ralias", "rv"), **_CNT_ALIAS},
+    lambda m, grouped, keyed, _slot: _counter_fallback_sql(m, grouped, keyed),
+)
+#: M4 serves pixel candles from the OHLC rollup; its items are empty
+#: (the pixel columns are fixed) and ``limit`` carries n_pixels
+_M4_CELL = _StitchCell(
+    OHLC, "m4", "M4", "OHLC", "per-pixel candle re-combine",
+    (_M4_PATTERN, None, _KEYED_M4_PATTERN),
+    _fn_cols("M4", (("mv", "mts"),)),
+    {},
+    lambda m, _grouped, keyed, slot_ms: _m4_fallback_sql(m, keyed, slot_ms),
+)
+
+#: route path → cell, for the one stitch serve
+_STITCH_PATHS = {
+    f"{keyed}{cell.path}_rollup": cell
+    for cell in (_OHLC_CELL, _TWA_CELL, _COUNTER_CELL, _M4_CELL)
+    for keyed in ("", "keyed_")
+}
 
 
 class WheelSqlRouter:
@@ -715,15 +833,9 @@ class WheelSqlRouter:
         self._hist: dict[tuple, tuple] = {}
         #: (table, key_col, value_col) → (ts_col, hist_df, bin_width, slot_ms, wm, adv)
         self._khist: dict[tuple, tuple] = {}
-        #: table → (ts_col, value_col, rollup_df, slot_ms, wm, adv)
-        #: one per family; all three share the registration shape
-        self._ohlc: dict[str, tuple] = {}
-        self._twa: dict[str, tuple] = {}
-        self._counter: dict[str, tuple] = {}
-        #: (table, key_col) → (ts_col, value_col, rollup, slot_ms, wm, adv)
-        self._kohlc: dict[tuple, tuple] = {}
-        self._ktwa: dict[tuple, tuple] = {}
-        self._kcounter: dict[tuple, tuple] = {}
+        #: stitch families (OHLC, TWA, counter): (family, table,
+        #: key_col | None) → (ts_col, value_col, rollup, slot_ms, wm, adv)
+        self._stitch: dict[tuple, tuple] = {}
         self.last_decision: RouteDecision | None = None
 
     def register_index(
@@ -858,8 +970,8 @@ class WheelSqlRouter:
         over an aligned range, scalar or GROUP BY date_trunc — rewrite
         onto it: one associative re-combine of covered slots, never
         the fact scan."""
-        self._ohlc[table.lower()] = (
-            ts_col.lower(), value_col.lower(), rollup, slot_ms,
+        self._register_stitch(
+            "ohlc", table, None, ts_col, value_col, rollup, slot_ms,
             watermark_ms, advanced_ms,
         )
 
@@ -878,8 +990,8 @@ class WheelSqlRouter:
         queries rewrite onto it — the boundary-stitching combine over
         covered slots; unservable matches lower to a generated
         lag-window scan (the dialect function has no Spark builtin)."""
-        self._twa[table.lower()] = (
-            ts_col.lower(), value_col.lower(), rollup, slot_ms,
+        self._register_stitch(
+            "twa", table, None, ts_col, value_col, rollup, slot_ms,
             watermark_ms, advanced_ms,
         )
 
@@ -897,8 +1009,8 @@ class WheelSqlRouter:
         so ``COUNTER_INCREASE/COUNTER_RATE(value, ts)`` range queries
         (PromQL increase/rate) rewrite onto it; unservable matches
         lower to a generated lag-window scan."""
-        self._counter[table.lower()] = (
-            ts_col.lower(), value_col.lower(), rollup, slot_ms,
+        self._register_stitch(
+            "counter", table, None, ts_col, value_col, rollup, slot_ms,
             watermark_ms, advanced_ms,
         )
 
@@ -909,8 +1021,8 @@ class WheelSqlRouter:
         """Keyed OHLC (build_keyed_ohlc_rollup): per-series candlestick
         SQL (`SELECT key, date_trunc, min_by… GROUP BY 1, 2`) rewrites
         onto it — one per-series cascade, never the fact scan."""
-        self._kohlc[(table.lower(), key_col.lower())] = (
-            ts_col.lower(), value_col.lower(), rollup, slot_ms,
+        self._register_stitch(
+            "ohlc", table, key_col, ts_col, value_col, rollup, slot_ms,
             watermark_ms, advanced_ms,
         )
 
@@ -921,8 +1033,8 @@ class WheelSqlRouter:
         """Keyed TWA (build_keyed_twa_rollup): per-series
         TWA(value, ts) grouped SQL rewrites onto it; unservable
         matches lower to a keyed lag-window scan."""
-        self._ktwa[(table.lower(), key_col.lower())] = (
-            ts_col.lower(), value_col.lower(), rollup, slot_ms,
+        self._register_stitch(
+            "twa", table, key_col, ts_col, value_col, rollup, slot_ms,
             watermark_ms, advanced_ms,
         )
 
@@ -933,7 +1045,15 @@ class WheelSqlRouter:
         """Keyed counter (build_keyed_counter_rollup): per-series
         COUNTER_INCREASE/RATE grouped SQL rewrites onto it; unservable
         matches lower to a keyed lag-window scan."""
-        self._kcounter[(table.lower(), key_col.lower())] = (
+        self._register_stitch(
+            "counter", table, key_col, ts_col, value_col, rollup, slot_ms,
+            watermark_ms, advanced_ms,
+        )
+
+    def _register_stitch(self, family, table, key_col, ts_col, value_col,
+                         rollup, slot_ms, watermark_ms, advanced_ms) -> None:
+        key = None if key_col is None else key_col.lower()
+        self._stitch[(family, table.lower(), key)] = (
             ts_col.lower(), value_col.lower(), rollup, slot_ms,
             watermark_ms, advanced_ms,
         )
@@ -980,46 +1100,21 @@ class WheelSqlRouter:
             if mm is not None:
                 return self._decide_median(mm, grouped=False)
         if "M4" in qu:
-            if "GROUP" in qu:
-                km = _KEYED_M4_PATTERN.match(query)
-                if km is not None:
-                    return self._decide_keyed_m4(km)
-            mm = _M4_PATTERN.match(query)
-            if mm is not None:
-                return self._decide_m4(mm)
+            d = self._route_stitch(_M4_CELL, qu, query)
+            if d is not None:
+                return d
         if "MIN_BY" in qu and "MAX_BY" in qu:
-            if "GROUP" in qu:
-                km = _KEYED_OHLC_PATTERN.match(query)
-                if km is not None:
-                    return self._decide_keyed_ohlc(km)
-                om = _OHLC_GROUP_PATTERN.match(query)
-                if om is not None:
-                    return self._decide_ohlc(om, grouped=True)
-            om = _OHLC_PATTERN.match(query)
-            if om is not None:
-                return self._decide_ohlc(om, grouped=False)
+            d = self._route_stitch(_OHLC_CELL, qu, query)
+            if d is not None:
+                return d
         if "TWA" in qu or "TIME_WEIGHTED_AVG" in qu:
-            if "GROUP" in qu:
-                km = _KEYED_TWA_PATTERN.match(query)
-                if km is not None:
-                    return self._decide_keyed_twa(km)
-                tw = _TWA_GROUP_PATTERN.match(query)
-                if tw is not None:
-                    return self._decide_twa(tw, grouped=True)
-            tw = _TWA_PATTERN.match(query)
-            if tw is not None:
-                return self._decide_twa(tw, grouped=False)
+            d = self._route_stitch(_TWA_CELL, qu, query)
+            if d is not None:
+                return d
         if "COUNTER_INCREASE" in qu:
-            if "GROUP" in qu:
-                km = _KEYED_CTR_PATTERN.match(query)
-                if km is not None:
-                    return self._decide_keyed_counter(km)
-                cm = _CTR_GROUP_PATTERN.match(query)
-                if cm is not None:
-                    return self._decide_counter(cm, grouped=True)
-            cm = _CTR_PATTERN.match(query)
-            if cm is not None:
-                return self._decide_counter(cm, grouped=False)
+            d = self._route_stitch(_COUNTER_CELL, qu, query)
+            if d is not None:
+                return d
         if "GROUP" in qu:  # whitespace-tolerant: patterns allow GROUP\s+BY
             if "LIMIT" in qu:
                 tm = _TOPK_PATTERN.match(query)
@@ -1233,567 +1328,96 @@ class WheelSqlRouter:
 
     # ------------------------------------------ stitch families (OHLC/TWA/ctr)
 
-    def _stitch_range(self, m: re.Match, grouped: bool, ts_col: str,
-                      slot_ms: int, wm: int, adv: int):
-        """Shared ts-column / alignment / horizon validation for the
-        stitch families. Returns ``(s, e, gran, balias)`` on success or
-        a fallback-reason string."""
-        ts_refs = {m["ts1"].lower(), m["ts2"].lower()}
-        if grouped:
-            ts_refs.add(m["ts0"].lower())
-            if m["ts3"]:
-                ts_refs.add(m["ts3"].lower())
-        if ts_refs != {ts_col}:
-            return "bucket/filter column is not the rollup ts"
-        gran = balias = None
-        if grouped:
-            gran = m["gran"].lower()
-            if m["gran2"] and m["gran2"].lower() != gran:
-                return "GROUP BY granularity differs from SELECT"
-            if _gran_finer_than_slot(gran, slot_ms):
-                return "granularity finer than the rollup slot grain"
-            balias = m["balias"] or "bucket"
-            if m["gb_alias"] and m["gb_alias"].lower() not in (
-                balias.lower(), ts_col,
-            ):
-                return "GROUP BY key is not the bucket expression"
-        s = _parse_ts_literal(m["start"])
-        e = _parse_ts_literal(m["end"])
-        if s is None or e is None:
-            return "unparseable timestamp literal"
-        if s % slot_ms or e % slot_ms:
-            return "endpoints not aligned to the rollup slot grain"
-        if s < wm or e > adv:
-            return "range outside the rollup horizon"
-        return (s, e, gran, balias)
+    def _route_stitch(self, cell, qu: str, query: str):
+        """Match ``query`` against the cell's keyed, grouped and scalar
+        spellings; None when none matches."""
+        scalar, grouped, keyed = cell.patterns
+        if "GROUP" in qu:
+            for form, pattern in (("keyed", keyed), ("grouped", grouped)):
+                m = pattern.match(query) if pattern is not None else None
+                if m is not None:
+                    return self._decide_stitch(cell, m, form)
+        m = scalar.match(query)
+        return None if m is None else self._decide_stitch(cell, m, None)
 
-    def _keyed_stitch_range(self, m: re.Match, ts_col: str, slot_ms: int,
-                            wm: int, adv: int):
-        """Keyed-form twin of _stitch_range. Returns
-        ``(s, e, gran, balias, kalias)`` or a fallback-reason string."""
-        ts_refs = {m["ts0"].lower(), m["ts1"].lower(), m["ts2"].lower()}
-        if ts_refs != {ts_col}:
-            return "bucket/filter column is not the rollup ts"
-        gran = m["gran"].lower()
-        if _gran_finer_than_slot(gran, slot_ms):
-            return "granularity finer than the rollup slot grain"
-        kalias = m["kalias"] or m["key"]
-        balias = m["balias"] or "bucket"
-        if m["gb_key"] and m["gb_key"].lower() not in (
-            m["key"].lower(), kalias.lower(),
-        ):
-            return "GROUP BY key is not the series key"
-        if m["gb_bucket"] and m["gb_bucket"].lower() not in (
-            balias.lower(), ts_col,
-        ):
-            return "GROUP BY bucket is not the bucket expr"
-        s = _parse_ts_literal(m["start"])
-        e = _parse_ts_literal(m["end"])
-        if s is None or e is None:
-            return "unparseable timestamp literal"
-        if s % slot_ms or e % slot_ms:
-            return "endpoints not aligned to the rollup slot grain"
-        if s < wm or e > adv:
-            return "range outside the rollup horizon"
-        return (s, e, gran, balias, kalias)
-
-    def _decide_keyed_m4(self, m: re.Match) -> RouteDecision:
-        """Per-series M4 (GROUP BY key) → keyed OHLC rollup re-combine;
-        unservable matches lower to the keyed rank-window scan."""
-        table, key = m["table"].lower(), m["key"].lower()
-        fb = _keyed_m4_fallback_sql(m)
-        reg = self._kohlc.get((table, key))
+    def _decide_stitch(self, cell, m: re.Match, form) -> RouteDecision:
+        """A stitch-family statement (``form`` None, "grouped" or
+        "keyed") → its registered rollup, or the SQL path with the
+        family's generated lowering when it has no Spark builtin."""
+        keyed = form == "keyed"
+        table = m["table"].lower()
+        key = m["key"].lower() if keyed else None
+        reg = self._stitch.get((cell.fam.name, table, key))
+        slot_ms = reg[3] if reg is not None else MINUTE_MS
+        fb = cell.fallback and cell.fallback(m, form is not None, keyed, slot_ms)
         if reg is None:
+            where = f"({table}, {key})" if keyed else table
             return RouteDecision(
-                "sql", f"no keyed OHLC rollup for ({table}, {key})",
+                "sql",
+                f"no {'keyed ' if keyed else ''}{cell.label} rollup for {where}",
                 fallback_sql=fb,
             )
         ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        fb = _keyed_m4_fallback_sql(m, slot_ms)
-        if m["mv"].lower() != value_col or m["mts"].lower() != ts_col:
-            return RouteDecision(
-                "sql", "M4 columns are not the rollup (value, ts)",
-                fallback_sql=fb,
-            )
-        kalias = m["kalias"] or m["key"]
-        if m["gb_key"] and m["gb_key"].lower() not in (key, kalias.lower()):
-            return RouteDecision(
-                "sql", "GROUP BY key is not the series key", fallback_sql=fb
-            )
-        if {m["ts1"].lower(), m["ts2"].lower()} != {ts_col}:
-            return RouteDecision(
-                "sql", "filter column is not the rollup ts", fallback_sql=fb
-            )
-        s = _parse_ts_literal(m["start"])
-        e = _parse_ts_literal(m["end"])
-        if s is None or e is None:
-            return RouteDecision(
-                "sql", "unparseable timestamp literal", fallback_sql=fb
-            )
-        if s % slot_ms or e % slot_ms:
-            return RouteDecision(
-                "sql", "endpoints not aligned to the rollup slot grain",
-                fallback_sql=fb,
-            )
-        if s < wm or e > adv:
-            return RouteDecision(
-                "sql", "range outside the rollup horizon", fallback_sql=fb
-            )
-        return RouteDecision(
-            "keyed_m4_rollup",
-            "rewritten onto keyed OHLC rollup (per-series pixel re-combine)",
-            table,
-            "M4",
-            (s, e),
-            limit=int(m["npx"]),
-            key_alias=kalias,
-            key_col=key,
-            value_col=value_col,
+        rng = cell.cols(m, ts_col, value_col) or _stitch_range(
+            m, ts_col, slot_ms, wm, adv
         )
-
-    def _decide_keyed_ohlc(self, m: re.Match) -> RouteDecision:
-        table, key = m["table"].lower(), m["key"].lower()
-        reg = self._kohlc.get((table, key))
-        if reg is None:
-            return RouteDecision(
-                "sql", f"no keyed OHLC rollup for ({table}, {key})"
-            )
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        if {m["ov"].lower(), m["hv"].lower(), m["lv"].lower(),
-                m["cv"].lower()} != {value_col}:
-            return RouteDecision(
-                "sql", "aggregated column is not the rollup value"
-            )
-        for k, k1, k2 in (("ok", "ok1", "ok2"), ("ck", "ck1", "ck2")):
-            if m[k] is not None:
-                ok = m[k].lower() == ts_col
-            else:
-                ok = (m[k1].lower(), m[k2].lower()) == (ts_col, value_col)
-            if not ok:
-                return RouteDecision(
-                    "sql", "min_by/max_by order key is not the rollup ts"
-                )
-        rng = self._keyed_stitch_range(m, ts_col, slot_ms, wm, adv)
-        if isinstance(rng, str):
-            return RouteDecision("sql", rng)
-        s, e, gran, balias, kalias = rng
-        items = [
-            ("OPEN", m["oalias"] or "open"),
-            ("HIGH", m["halias"] or "high"),
-            ("LOW", m["lalias"] or "low"),
-            ("CLOSE", m["calias"] or "close"),
-        ]
-        if m["cnt"] is not None:
-            items.append(("CNT", m["cntalias"] or "cnt"))
-        return RouteDecision(
-            "keyed_ohlc_rollup",
-            "rewritten onto keyed OHLC rollup (per-series candle cascade)",
-            table, "OHLC", (s, e), tuple(items),
-            granularity=gran, bucket_alias=balias,
-            key_alias=kalias, key_col=key, value_col=value_col,
-        )
-
-    def _decide_keyed_twa(self, m: re.Match) -> RouteDecision:
-        table, key = m["table"].lower(), m["key"].lower()
-        fb = _twa_fallback_sql(m, grouped=True, keyed=True)
-        reg = self._ktwa.get((table, key))
-        if reg is None:
-            return RouteDecision(
-                "sql", f"no keyed TWA rollup for ({table}, {key})",
-                fallback_sql=fb,
-            )
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        if m["tv"].lower() != value_col or m["tts"].lower() != ts_col:
-            return RouteDecision(
-                "sql", "TWA columns are not the rollup (value, ts)",
-                fallback_sql=fb,
-            )
-        rng = self._keyed_stitch_range(m, ts_col, slot_ms, wm, adv)
         if isinstance(rng, str):
             return RouteDecision("sql", rng, fallback_sql=fb)
         s, e, gran, balias, kalias = rng
-        items = [("TWA", m["talias"] or "twa")]
-        if m["cnt"] is not None:
-            items.append(("CNT", m["cntalias"] or "cnt"))
+        items = []
+        for role, col in cell.fam.roles:
+            alias, present = cell.aliases.get(role, (None, None))
+            if alias and (present is None or m[present] is not None):
+                items.append((role, m[alias] or col))
+        npx = m.groupdict().get("npx")
         return RouteDecision(
-            "keyed_twa_rollup",
-            "rewritten onto keyed TWA rollup (per-series stitch)",
-            table, "TWA", (s, e), tuple(items),
+            f"{'keyed_' if keyed else ''}{cell.path}_rollup",
+            f"rewritten onto {'keyed ' if keyed else ''}{cell.label} rollup "
+            f"({'per-series ' if keyed else ''}{cell.how})",
+            table, cell.agg, (s, e), tuple(items),
             granularity=gran, bucket_alias=balias,
             key_alias=kalias, key_col=key, value_col=value_col,
+            limit=None if npx is None else int(npx),
         )
 
-    def _decide_keyed_counter(self, m: re.Match) -> RouteDecision:
-        table, key = m["table"].lower(), m["key"].lower()
-        fb = _counter_fallback_sql(m, grouped=True, keyed=True)
-        reg = self._kcounter.get((table, key))
-        if reg is None:
-            return RouteDecision(
-                "sql", f"no keyed counter rollup for ({table}, {key})",
-                fallback_sql=fb,
-            )
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        cols_ok = m["iv"].lower() == value_col and m["its"].lower() == ts_col
-        if m["rv"] is not None:
-            cols_ok = cols_ok and (
-                m["rv"].lower() == value_col and m["rts"].lower() == ts_col
-            )
-        if not cols_ok:
-            return RouteDecision(
-                "sql", "counter columns are not the rollup (value, ts)",
-                fallback_sql=fb,
-            )
-        rng = self._keyed_stitch_range(m, ts_col, slot_ms, wm, adv)
-        if isinstance(rng, str):
-            return RouteDecision("sql", rng, fallback_sql=fb)
-        s, e, gran, balias, kalias = rng
-        items = [("INCREASE", m["ialias"] or "increase")]
-        if m["rv"] is not None:
-            items.append(("RATE", m["ralias"] or "rate_per_sec"))
-        if m["cnt"] is not None:
-            items.append(("CNT", m["cntalias"] or "cnt"))
-        return RouteDecision(
-            "keyed_counter_rollup",
-            "rewritten onto keyed counter rollup (per-series stitch)",
-            table, "COUNTER", (s, e), tuple(items),
-            granularity=gran, bucket_alias=balias,
-            key_alias=kalias, key_col=key, value_col=value_col,
-        )
-
-    def _serve_keyed_stitch(self, d: RouteDecision, reg, grouped_fn,
-                            out_cols) -> DataFrame:
-        """Shared keyed-stitch serving: bucket-range filter, per-series
-        cascade to the requested grain, alias the requested items."""
+    def _serve_stitch(self, d: RouteDecision) -> DataFrame:
+        """Every stitch path: the covered slots' one combine, cascaded
+        to the requested grain per (series?, bucket), or folded into
+        pixel candles for M4; the requested roles under their
+        aliases."""
         from pyspark.sql import functions as F
 
         from uwheel_datafusion_spark.functions.time import GRANULARITY_MS
         from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
 
-        _ts, _v, rollup, _slot, _wm, _adv = reg
-        s, e = d.range_ms
-        aliases = dict(d.items)
-        part = rollup.filter(_bucket_range_pred(rollup, s, e))
-        out = grouped_fn(part, GRANULARITY_MS[d.granularity])
-        cols = [
-            F.col("grp").alias(d.key_alias),
-            F.timestamp_millis(F.col("bucket_ms"))
-            .cast("timestamp_ntz")
-            .alias(d.bucket_alias),
+        fam = _STITCH_PATHS[d.path].fam
+        _ts, _v, rollup, slot_ms, _wm, _adv = self._stitch[
+            (fam.name, d.table, d.key_col)
         ]
-        for role, src in out_cols:
+        group_cols = [] if d.key_col is None else ["grp"]
+        s, e = d.range_ms
+        if d.agg == "M4":  # d.limit carries n_pixels
+            out = stitch.m4(fam, rollup, s, e, d.limit, slot_ms, group_cols)
+            return out.withColumnRenamed("grp", d.key_alias) if group_cols else out
+        if d.granularity is None:
+            out, cols = stitch.range_df(fam, rollup, s, e), []
+        else:
+            part = rollup.filter(_bucket_range_pred(rollup, s, e))
+            out = stitch.grouped(
+                fam, part, GRANULARITY_MS[d.granularity], group_cols
+            )
+            cols = [F.col(c).alias(d.key_alias) for c in group_cols] + [
+                F.timestamp_millis(F.col("bucket_ms"))
+                .cast("timestamp_ntz")
+                .alias(d.bucket_alias)
+            ]
+        aliases = dict(d.items)
+        for role, src in fam.roles:
             if role in aliases:
                 col = F.col(src)
                 if role == "CNT":
                     col = F.coalesce(col, F.lit(0).cast("long"))
                 cols.append(col.alias(aliases[role]))
-        return out.select(*cols)
-
-    def _serve_keyed_m4_rollup(self, d: RouteDecision) -> DataFrame:
-        """Per-series M4 from the keyed OHLC rollup: one (grp, pixel)
-        re-combine over covered slots — every series' panel, no fact
-        scan; ``d.limit`` carries n_pixels."""
-        from uwheel_datafusion_spark.operators.ohlc import (
-            m4_downsample_keyed_df,
-        )
-
-        _ts, _v, rollup, slot_ms, _wm, _adv = self._kohlc[
-            (d.table, d.key_col)
-        ]
-        s, e = d.range_ms
-        return m4_downsample_keyed_df(
-            rollup, s, e, d.limit, slot_ms=slot_ms
-        ).withColumnRenamed("grp", d.key_alias)
-
-    def _serve_keyed_ohlc_rollup(self, d: RouteDecision) -> DataFrame:
-        from uwheel_datafusion_spark.operators.ohlc import cascade_keyed_ohlc
-
-        return self._serve_keyed_stitch(
-            d, self._kohlc[(d.table, d.key_col)], cascade_keyed_ohlc,
-            (("OPEN", "open"), ("HIGH", "high"), ("LOW", "low"),
-             ("CLOSE", "close"), ("CNT", "cnt")),
-        )
-
-    def _serve_keyed_twa_rollup(self, d: RouteDecision) -> DataFrame:
-        from uwheel_datafusion_spark.operators.twa import keyed_grouped_twa_df
-
-        return self._serve_keyed_stitch(
-            d, self._ktwa[(d.table, d.key_col)], keyed_grouped_twa_df,
-            (("TWA", "twa"), ("CNT", "cnt")),
-        )
-
-    def _serve_keyed_counter_rollup(self, d: RouteDecision) -> DataFrame:
-        from uwheel_datafusion_spark.operators.counter import (
-            keyed_grouped_increase_df,
-        )
-
-        return self._serve_keyed_stitch(
-            d, self._kcounter[(d.table, d.key_col)],
-            keyed_grouped_increase_df,
-            (("INCREASE", "increase"), ("RATE", "rate_per_sec"),
-             ("CNT", "cnt")),
-        )
-
-    def _decide_ohlc(self, m: re.Match, grouped: bool) -> RouteDecision:
-        """Candlestick shape → OHLC-rollup rewrite. Unservable matches
-        fall back verbatim: min_by/max_by are Spark builtins."""
-        table = m["table"].lower()
-        reg = self._ohlc.get(table)
-        if reg is None:
-            return RouteDecision("sql", f"no OHLC rollup for {table}")
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        if {m["ov"].lower(), m["hv"].lower(), m["lv"].lower(),
-                m["cv"].lower()} != {value_col}:
-            return RouteDecision(
-                "sql", "aggregated column is not the rollup value"
-            )
-        for k, k1, k2 in (("ok", "ok1", "ok2"), ("ck", "ck1", "ck2")):
-            if m[k] is not None:
-                ok = m[k].lower() == ts_col
-            else:
-                ok = (m[k1].lower(), m[k2].lower()) == (ts_col, value_col)
-            if not ok:
-                return RouteDecision(
-                    "sql",
-                    "min_by/max_by order key is not the rollup ts "
-                    "(or its (ts, value) tie-break)",
-                )
-        rng = self._stitch_range(m, grouped, ts_col, slot_ms, wm, adv)
-        if isinstance(rng, str):
-            return RouteDecision("sql", rng)
-        s, e, gran, balias = rng
-        items = [
-            ("OPEN", m["oalias"] or "open"),
-            ("HIGH", m["halias"] or "high"),
-            ("LOW", m["lalias"] or "low"),
-            ("CLOSE", m["calias"] or "close"),
-        ]
-        if m["cnt"] is not None:
-            items.append(("CNT", m["cntalias"] or "cnt"))
-        return RouteDecision(
-            "ohlc_rollup",
-            "rewritten onto OHLC rollup (associative candle re-combine)",
-            table,
-            "OHLC",
-            (s, e),
-            tuple(items),
-            granularity=gran,
-            bucket_alias=balias,
-            value_col=value_col,
-        )
-
-    def _decide_m4(self, m: re.Match) -> RouteDecision:
-        """M4(value, ts, n_pixels) → per-pixel candle re-combine over
-        the OHLC rollup; unservable matches lower to a generated
-        min_by/max_by scan with the same pixel geometry (M4 is a
-        dialect function — without the lowering it could not run)."""
-        table = m["table"].lower()
-        fb = _m4_fallback_sql(m)
-        reg = self._ohlc.get(table)
-        if reg is None:
-            return RouteDecision(
-                "sql", f"no OHLC rollup for {table}", fallback_sql=fb
-            )
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        fb = _m4_fallback_sql(m, slot_ms)
-        if m["mv"].lower() != value_col or m["mts"].lower() != ts_col:
-            return RouteDecision(
-                "sql", "M4 columns are not the rollup (value, ts)",
-                fallback_sql=fb,
-            )
-        rng = self._stitch_range(m, False, ts_col, slot_ms, wm, adv)
-        if isinstance(rng, str):
-            return RouteDecision("sql", rng, fallback_sql=fb)
-        s, e, _gran, _balias = rng
-        return RouteDecision(
-            "m4_rollup",
-            "rewritten onto OHLC rollup (per-pixel candle re-combine)",
-            table,
-            "M4",
-            (s, e),
-            limit=int(m["npx"]),
-            value_col=value_col,
-        )
-
-    def _decide_twa(self, m: re.Match, grouped: bool) -> RouteDecision:
-        """TWA(value, ts) → TWA-rollup rewrite; unservable matches
-        lower to a generated lag-window scan (no Spark builtin)."""
-        table = m["table"].lower()
-        fb = _twa_fallback_sql(m, grouped)
-        reg = self._twa.get(table)
-        if reg is None:
-            return RouteDecision(
-                "sql", f"no TWA rollup for {table}", fallback_sql=fb
-            )
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        if m["tv"].lower() != value_col or m["tts"].lower() != ts_col:
-            return RouteDecision(
-                "sql", "TWA columns are not the rollup (value, ts)",
-                fallback_sql=fb,
-            )
-        rng = self._stitch_range(m, grouped, ts_col, slot_ms, wm, adv)
-        if isinstance(rng, str):
-            return RouteDecision("sql", rng, fallback_sql=fb)
-        s, e, gran, balias = rng
-        items = [("TWA", m["talias"] or "twa")]
-        if m["cnt"] is not None:
-            items.append(("CNT", m["cntalias"] or "cnt"))
-        return RouteDecision(
-            "twa_rollup",
-            "rewritten onto TWA rollup (boundary-stitching combine)",
-            table,
-            "TWA",
-            (s, e),
-            tuple(items),
-            granularity=gran,
-            bucket_alias=balias,
-            value_col=value_col,
-        )
-
-    def _decide_counter(self, m: re.Match, grouped: bool) -> RouteDecision:
-        """COUNTER_INCREASE/RATE(value, ts) → counter-rollup rewrite;
-        unservable matches lower to a generated lag-window scan."""
-        table = m["table"].lower()
-        fb = _counter_fallback_sql(m, grouped)
-        reg = self._counter.get(table)
-        if reg is None:
-            return RouteDecision(
-                "sql", f"no counter rollup for {table}", fallback_sql=fb
-            )
-        ts_col, value_col, _rollup, slot_ms, wm, adv = reg
-        cols_ok = m["iv"].lower() == value_col and m["its"].lower() == ts_col
-        if m["rv"] is not None:
-            cols_ok = cols_ok and (
-                m["rv"].lower() == value_col and m["rts"].lower() == ts_col
-            )
-        if not cols_ok:
-            return RouteDecision(
-                "sql", "counter columns are not the rollup (value, ts)",
-                fallback_sql=fb,
-            )
-        rng = self._stitch_range(m, grouped, ts_col, slot_ms, wm, adv)
-        if isinstance(rng, str):
-            return RouteDecision("sql", rng, fallback_sql=fb)
-        s, e, gran, balias = rng
-        items = [("INCREASE", m["ialias"] or "increase")]
-        if m["rv"] is not None:
-            items.append(("RATE", m["ralias"] or "rate_per_sec"))
-        if m["cnt"] is not None:
-            items.append(("CNT", m["cntalias"] or "cnt"))
-        return RouteDecision(
-            "counter_rollup",
-            "rewritten onto counter rollup (reset-aware stitch)",
-            table,
-            "COUNTER",
-            (s, e),
-            tuple(items),
-            granularity=gran,
-            bucket_alias=balias,
-            value_col=value_col,
-        )
-
-    def _serve_m4_rollup(self, d: RouteDecision) -> DataFrame:
-        """M4 served as the per-pixel candle re-combine over covered
-        rollup slots (operators/ohlc.m4_downsample_df) — the chart
-        never scans fact rows; ``d.limit`` carries n_pixels."""
-        from uwheel_datafusion_spark.operators.ohlc import m4_downsample_df
-
-        _ts, _v, rollup, slot_ms, _wm, _adv = self._ohlc[d.table]
-        s, e = d.range_ms
-        return m4_downsample_df(rollup, s, e, d.limit, slot_ms=slot_ms)
-
-    def _serve_ohlc_rollup(self, d: RouteDecision) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from uwheel_datafusion_spark.functions.time import GRANULARITY_MS
-        from uwheel_datafusion_spark.operators.ohlc import (
-            cascade_ohlc,
-            range_ohlc_df,
-        )
-        from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-        _ts, _v, rollup, _slot, _wm, _adv = self._ohlc[d.table]
-        s, e = d.range_ms
-        aliases = dict(d.items)
-        if d.granularity is None:
-            out = range_ohlc_df(rollup, s, e)
-            cols = []
-        else:
-            part = rollup.filter(_bucket_range_pred(rollup, s, e))
-            out = cascade_ohlc(part, GRANULARITY_MS[d.granularity])
-            cols = [
-                F.timestamp_millis(F.col("bucket_ms"))
-                .cast("timestamp_ntz")
-                .alias(d.bucket_alias)
-            ]
-        for role, src in (
-            ("OPEN", "open"), ("HIGH", "high"), ("LOW", "low"),
-            ("CLOSE", "close"), ("CNT", "cnt"),
-        ):
-            if role in aliases:
-                col = F.col(src)
-                if role == "CNT":
-                    col = F.coalesce(col, F.lit(0).cast("long"))
-                cols.append(col.alias(aliases[role]))
-        return out.select(*cols)
-
-    def _serve_twa_rollup(self, d: RouteDecision) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from uwheel_datafusion_spark.functions.time import GRANULARITY_MS
-        from uwheel_datafusion_spark.operators.twa import (
-            grouped_twa_df,
-            range_twa_df,
-        )
-        from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-        _ts, _v, rollup, _slot, _wm, _adv = self._twa[d.table]
-        s, e = d.range_ms
-        aliases = dict(d.items)
-        if d.granularity is None:
-            out = range_twa_df(rollup, s, e)
-            cols = []
-        else:
-            part = rollup.filter(_bucket_range_pred(rollup, s, e))
-            out = grouped_twa_df(part, GRANULARITY_MS[d.granularity])
-            cols = [
-                F.timestamp_millis(F.col("bucket_ms"))
-                .cast("timestamp_ntz")
-                .alias(d.bucket_alias)
-            ]
-        cols.append(F.col("twa").alias(aliases["TWA"]))
-        if "CNT" in aliases:
-            cols.append(F.col("cnt").alias(aliases["CNT"]))
-        return out.select(*cols)
-
-    def _serve_counter_rollup(self, d: RouteDecision) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from uwheel_datafusion_spark.functions.time import GRANULARITY_MS
-        from uwheel_datafusion_spark.operators.counter import (
-            grouped_increase_df,
-            range_increase_df,
-        )
-        from uwheel_datafusion_spark.operators.wheel import _bucket_range_pred
-
-        _ts, _v, rollup, _slot, _wm, _adv = self._counter[d.table]
-        s, e = d.range_ms
-        aliases = dict(d.items)
-        if d.granularity is None:
-            out = range_increase_df(rollup, s, e)
-            cols = []
-        else:
-            part = rollup.filter(_bucket_range_pred(rollup, s, e))
-            out = grouped_increase_df(part, GRANULARITY_MS[d.granularity])
-            cols = [
-                F.timestamp_millis(F.col("bucket_ms"))
-                .cast("timestamp_ntz")
-                .alias(d.bucket_alias)
-            ]
-        cols.append(F.col("increase").alias(aliases["INCREASE"]))
-        if "RATE" in aliases:
-            cols.append(F.col("rate_per_sec").alias(aliases["RATE"]))
-        if "CNT" in aliases:
-            cols.append(F.col("cnt").alias(aliases["CNT"]))
         return out.select(*cols)
 
     def _decide_grouped(self, m: re.Match) -> RouteDecision:
@@ -2126,19 +1750,16 @@ class WheelSqlRouter:
 
     def sql_scalar(self, query: str):
         """Route and return the scalar answer (index path: pure driver
-        arithmetic, no Spark job — the benchmarkable entry point)."""
+        arithmetic, no Spark job — the benchmarkable entry point).
+        Only the SQL path, a single-item index statement and an
+        ungrouped quantile are scalar shapes; every other path
+        raises."""
         d = self._decide(query)
         self.last_decision = d
-        if d.path in (
-            "rollup", "keyed_rollup", "distinct_rollup", "count_rollup",
-            "keyed_quantile_rollup", "ohlc_rollup", "m4_rollup",
-            "keyed_m4_rollup", "twa_rollup", "counter_rollup",
-            "keyed_ohlc_rollup", "keyed_twa_rollup",
-            "keyed_counter_rollup",
-        ) or (
-            d.path == "index" and len(d.items) > 1
-        ) or (
-            d.path == "quantile_rollup" and d.granularity is not None
+        if not (
+            d.path == "sql"
+            or (d.path == "index" and len(d.items) == 1)
+            or (d.path == "quantile_rollup" and d.granularity is None)
         ):
             raise ValueError(
                 "non-scalar result shape: use .sql() (DataFrame form)"
@@ -2174,36 +1795,12 @@ class WheelSqlRouter:
         self.last_decision = d
         if d.path == "sql":
             return self.spark.sql(d.fallback_sql or _spark_compat(query))
-        if d.path == "rollup":
-            return self._serve_rollup(d)
-        if d.path == "keyed_rollup":
-            return self._serve_keyed_rollup(d)
-        if d.path == "distinct_rollup":
-            return self._serve_distinct_rollup(d)
-        if d.path == "keyed_distinct_rollup":
-            return self._serve_keyed_distinct_rollup(d)
-        if d.path == "count_rollup":
-            return self._serve_count_rollup(d)
-        if d.path == "quantile_rollup":
-            return self._serve_quantile_rollup(d)
-        if d.path == "keyed_quantile_rollup":
-            return self._serve_keyed_quantile_rollup(d)
-        if d.path == "ohlc_rollup":
-            return self._serve_ohlc_rollup(d)
-        if d.path == "m4_rollup":
-            return self._serve_m4_rollup(d)
-        if d.path == "keyed_m4_rollup":
-            return self._serve_keyed_m4_rollup(d)
-        if d.path == "twa_rollup":
-            return self._serve_twa_rollup(d)
-        if d.path == "counter_rollup":
-            return self._serve_counter_rollup(d)
-        if d.path == "keyed_ohlc_rollup":
-            return self._serve_keyed_ohlc_rollup(d)
-        if d.path == "keyed_twa_rollup":
-            return self._serve_keyed_twa_rollup(d)
-        if d.path == "keyed_counter_rollup":
-            return self._serve_keyed_counter_rollup(d)
+        serve = "_serve_stitch" if d.path in _STITCH_PATHS else f"_serve_{d.path}"
+        return getattr(self, serve)(d)
+
+    def _serve_index(self, d: RouteDecision) -> DataFrame:
+        """The index path as a one-row local frame: every requested
+        lowering from one driver-index hit."""
         _, _, index = self._indexes[d.table]
         di = index.to_driver_index()
         s, e = d.range_ms
